@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.gen.TranscriptGen
-import graft.incr.GraphState
 import graft.plan.Planner
 import graft.transcripts.TranscriptEdges
 
@@ -233,11 +232,6 @@ object Bench {
   def streamBenchMaster(master: String, cores: Int, nConvs: Int, turns: Int,
                         nTools: Int, batchSize: Int, durable: Boolean): StreamResult = {
     val aqe = sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "1") == "1"
-    val routing = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUTING", "1") == "1"
-    // "fast" = RDD sharded-index engine (graft.fast, constant per-batch
-    // driver cost); "sql" = the DataFrame delta engine (per-batch Catalyst
-    // planning — kept for comparison; it was BENCH_r01's scaling bottleneck)
-    val engineKind = sys.env.getOrElse("SPARK_GRAFT_BENCH_ENGINE", "fast")
     val spark = withLocalDir(SparkSession.builder()
       .master(master))
       // multi-JVM executors need the graft classes on their own classpath
@@ -305,7 +299,6 @@ object Bench {
     // replay); batches created locally, joins run distributed
     val streamEdges = ordered.filter(_._1 >= preloadN)
       .map(t => (t._2, t._3, t._4)).collect()
-    import scala.jdk.CollectionConverters._
     // default caps the per-level stream at 35 batches so the whole two-level
     // bench fits a driver round; the full-protocol numbers are in BASELINE.md
     val maxBatches = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAXBATCHES", "35").toInt
@@ -315,72 +308,48 @@ object Bench {
     var loadSec = 0.0
     var streamSec = 0.0
 
-    if (engineKind == "fast") {
-      // pipelined micro-batches (the reference's overlapping epochs): up to
-      // `depth` batch jobs in flight; per-batch latency is submit→complete,
-      // so queueing shows up honestly in p50/p95
-      val depth = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PIPELINE", "4").toInt)
-      // State sharding is a property of the JOB (sized to batch volume),
-      // not of the machine: the same job runs UNCHANGED at every core
-      // level — exactly the north rule's same-input N-vs-4N comparison —
-      // and extra cores are consumed by pipelined batch jobs rather than by
-      // slicing 1000-row batches into more, emptier tasks (measured: 32
-      // one-record tasks/stage cost ~2× the whole 8-task job). Sized to
-      // ~2500 batch rows per partition, capped by cores.
-      val parts = sys.env.get("SPARK_GRAFT_BENCH_STREAM_PARTS").map(_.toInt)
-        .getOrElse(math.max(2, math.min(cores, batchSize / 2500 + 7)))
-      val state = new graft.fast.FastGraphState(spark, Planner.triangle,
-        stateDir, numParts = parts, maxTail = 8, lineageMetrics = true,
-        pipelineDepth = depth)
-      val tLoad0 = System.nanoTime()
-      state.initialize(preload)
-      loadSec = (System.nanoTime() - tLoad0) / 1e9
-      val tStream0 = System.nanoTime()
-      var batchId = 0L
-      val inflight = scala.collection.mutable.Queue
-        .empty[(org.apache.spark.FutureAction[Seq[(Long, Long)]], Long)]
-      def drain(): Unit = {
-        val (fut, t0) = inflight.dequeue()
-        val parts = scala.concurrent.Await.result(fut,
-          scala.concurrent.duration.Duration.Inf)
-        matchChanges += parts.map(_._1).sum
-        netTotal += parts.map(_._2).sum
-        latencies += (System.nanoTime() - t0) / 1e6
-      }
-      for (chunk <- streamEdges.grouped(batchSize).take(maxBatches)) {
-        while (inflight.size >= depth) drain()
-        // t0 BEFORE the absorb call: the synchronous driver-side work (WAL,
-        // broadcast, seed routing) belongs in per-batch latency, exactly as
-        // the sync engine path measures it
-        val t0 = System.nanoTime()
-        inflight += ((state.applyBatchStatsAsync(batchId, chunk), t0))
-        batchId += 1
-      }
-      while (inflight.nonEmpty) drain()
-      streamSec = (System.nanoTime() - tStream0) / 1e9
-      state.close()
-    } else {
-      val state = new GraphState(spark, Planner.triangle, stateDir, maxTail = 8,
-        routing = routing, lineageMetrics = false)
-      val tLoad0 = System.nanoTime()
-      state.initialize(preload)
-      loadSec = (System.nanoTime() - tLoad0) / 1e9
-      val tStream0 = System.nanoTime()
-      var batchId = 0L
-      for (chunk <- streamEdges.grouped(batchSize).take(maxBatches)) {
-        val t0 = System.nanoTime()
-        val df = spark.createDataFrame(
-          chunk.map(t => Row(t._1, t._2, t._3)).toSeq.asJava, schema)
-        val matches = state.applyBatch(batchId, df)
-        val agg = matches.agg(count(lit(1)), coalesce(sum("w"), lit(0L))).collect()(0)
-        matchChanges += agg.getLong(0)
-        netTotal += agg.getLong(1)
-        latencies += (System.nanoTime() - t0) / 1e6
-        batchId += 1
-      }
-      streamSec = (System.nanoTime() - tStream0) / 1e9
-      state.close()
+    // pipelined micro-batches (the reference's overlapping epochs): up to
+    // `depth` batch jobs in flight; per-batch latency is submit→complete,
+    // so queueing shows up honestly in p50/p95
+    val depth = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PIPELINE", "4").toInt)
+    // State sharding is a property of the JOB (sized to batch volume),
+    // not of the machine: the same job runs UNCHANGED at every core
+    // level — exactly the north rule's same-input N-vs-4N comparison —
+    // and extra cores are consumed by pipelined batch jobs rather than by
+    // slicing 1000-row batches into more, emptier tasks (measured: 32
+    // one-record tasks/stage cost ~2× the whole 8-task job). Sized to
+    // ~2500 batch rows per partition, capped by cores.
+    val parts = sys.env.get("SPARK_GRAFT_BENCH_STREAM_PARTS").map(_.toInt)
+      .getOrElse(math.max(2, math.min(cores, batchSize / 2500 + 7)))
+    val state = new graft.fast.FastGraphState(spark, Planner.triangle,
+      stateDir, numParts = parts, maxTail = 8, lineageMetrics = true,
+      pipelineDepth = depth)
+    val tLoad0 = System.nanoTime()
+    state.initialize(preload)
+    loadSec = (System.nanoTime() - tLoad0) / 1e9
+    val tStream0 = System.nanoTime()
+    var batchId = 0L
+    val inflight = scala.collection.mutable.Queue
+      .empty[(org.apache.spark.FutureAction[Seq[(Long, Long)]], Long)]
+    def drain(): Unit = {
+      val (fut, t0) = inflight.dequeue()
+      val parts = scala.concurrent.Await.result(fut,
+        scala.concurrent.duration.Duration.Inf)
+      matchChanges += parts.map(_._1).sum
+      netTotal += parts.map(_._2).sum
+      latencies += (System.nanoTime() - t0) / 1e6
     }
+    for (chunk <- streamEdges.grouped(batchSize).take(maxBatches)) {
+      while (inflight.size >= depth) drain()
+      // t0 BEFORE the absorb call: the synchronous driver-side work (WAL,
+      // broadcast, seed routing) belongs in per-batch latency
+      val t0 = System.nanoTime()
+      inflight += ((state.applyBatchStatsAsync(batchId, chunk), t0))
+      batchId += 1
+    }
+    while (inflight.nonEmpty) drain()
+    streamSec = (System.nanoTime() - tStream0) / 1e9
+    state.close()
     safeStop(spark)
     val sorted = latencies.sorted
     def pct(p: Double) = if (sorted.isEmpty) 0.0 else sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))

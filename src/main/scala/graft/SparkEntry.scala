@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.batch.GenericJoin
 import graft.plan.Planner
 
 /** Driver contract — one entry per implemented operator (SURVEY.md §2),
   * with a DuckDB-runnable oracle for everything SQL-expressible.
   *
-  * The motif queries run the WCO GenericJoin engine over a graph derived
+  * The motif queries run the WCO engine (`graft.fast`) over a graph derived
   * deterministically from the driver's `lineitem` table
   * (src = l_orderkey % 2000, dst = l_partkey % 2000, distinct, no
   * self-loops) so the DuckDB oracle can rebuild the identical graph. */
@@ -79,11 +78,6 @@ object SparkEntry {
       "CAST(max(gap) AS BIGINT) AS max_gap_us, " +
       "CAST(sum(gap) AS BIGINT) AS sum_gap_us " +
       "FROM g WHERE gap IS NOT NULL GROUP BY conv_id"
-
-  private def motifQuery(motif: Seq[(Int, Int)], m: Long = K,
-                         predicates: Seq[GenericJoin.Pred] = Nil)
-                        (s: SparkSession, dir: String): DataFrame =
-    GenericJoin.enumerate(edgesM(m)(s, dir), motif, predicates)
 
   /** n-way self-join oracle for a motif, mirroring the engine's output
     * schema (x0..x{k-1}, w). `extraWhere` carries symmetry-breaking /
@@ -723,23 +717,21 @@ object SparkEntry {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = TrainingQueries.queries ++ Map(
-    // ---- WCO GenericJoin engine (SURVEY.md §2.1-2.2, ops 1-17) ----
-    // headline motifs run the fast RDD engine's batch mode (packed-block
-    // count/propose/intersect against sharded state); the DataFrame engine
-    // covers the remaining motif entries below, so BOTH engines stay
-    // correctness-gated every round
+    // ---- WCO engine (SURVEY.md §2.1-2.2, ops 1-17) ----
+    // every motif entry runs the fast RDD engine's batch mode (count →
+    // argmin → propose → intersect over a packed index); the specs pin it
+    // to a brute-force nested-loop enumeration
     "wco_triangle" -> ((s, dir) =>
       graft.fast.FastBatch.enumerate(edges(s, dir), Planner.triangle)),
     "wco_cycle3" -> ((s, dir) =>
       graft.fast.FastBatch.enumerate(edges(s, dir), Planner.cycle3)),
-    "wco_clique4" -> motifQuery(Planner.clique4),
+    "wco_clique4" -> ((s, dir) =>
+      graft.fast.FastBatch.enumerate(edges(s, dir), Planner.clique4)),
     // count-only fast path: no per-binding consolidation shuffle
     "wco_triangle_count" -> ((s, dir) =>
       graft.fast.FastBatch.enumerateAgg(edges(s, dir), Planner.triangle)),
-    // 5-variable motifs on the denser K5-modulus graph (zero matches at K);
-    // fast engine since round 5 (reference q6/q7-lean) — the DataFrame
-    // engine stays gated by wco_clique4/seed_k4/cycle4 here plus the
-    // fast==sql pins in FastBatchSpec (clique5, cliqueHat+predicates)
+    // 5-variable motifs on the denser K5-modulus graph (zero matches at K;
+    // reference q6/q7-lean)
     "wco_clique5" -> ((s, dir) =>
       graft.fast.FastBatch.enumerate(edgesM(K5)(s, dir), Planner.clique5)),
     "wco_clique_hat" -> ((s, dir) =>
@@ -749,33 +741,32 @@ object SparkEntry {
     // galloped into the candidate runs, never propose-then-discard
     "wco_clique4_ordered" -> ((s, dir) =>
       graft.fast.FastBatch.enumerate(edges(s, dir), Planner.clique4,
-        GenericJoin.ordered(4))),
+        Planner.ordered(4))),
     "wco_clique_hat_filtered" -> ((s, dir) =>
       graft.fast.FastBatch.enumerate(edges(s, dir), Planner.cliqueHat,
-        Seq(GenericJoin.Pred(1, 4, "!="), GenericJoin.Pred(2, 4, "<")))),
-    // factorized counting (seed-q5-lean mode): last attribute never exploded
+        Seq(Planner.Pred(1, 4, "!="), Planner.Pred(2, 4, "<")))),
+    // factorized counting (seed-q5-lean mode): the count path never
+    // explodes the last attribute, it sums the final intersections
     "wco_clique5_factorized_count" -> ((s, dir) =>
-      GenericJoin.enumerateFactorizedCount(edgesM(K5)(s, dir), Planner.clique5)),
+      graft.fast.FastBatch.enumerateAgg(edgesM(K5)(s, dir), Planner.clique5)
+        .select("total")),
     "wco_cycle4_count" -> ((s, dir) =>
-      motifQuery(Planner.cycle4)(s, dir).agg(
-        count(lit(1)).as("n"), coalesce(sum("w"), lit(0L)).as("total"))),
+      graft.fast.FastBatch.enumerateAgg(edges(s, dir), Planner.cycle4)),
     // diamond (K4 minus one edge — two triangles sharing an edge), count
     // form on the fast engine: a second non-clique 4-var family alongside
     // the 4-cycle, keeping enumerateAgg gated on a plan whose stages mix
     // 1- and 2-constraint extensions
     "wco_diamond_count" -> ((s, dir) =>
       graft.fast.FastBatch.enumerateAgg(edges(s, dir), Planner.diamond)),
-    // composite-key triangle-seeded K4 (reference examples/seed.rs mode);
-    // binding set must equal the clique4 oracle
-    "seed_k4" -> ((s, dir) => graft.batch.SeedQueries.seededK4(edges(s, dir))),
-    // triangle-seeded FACTORIZED K4 count (seed-q5-lean mode): the benchable
-    // scale-safe form — no K4 row materialized. Round 6: runs as the fast
-    // engine's factorized clique4 count (the DFS is literally "enumerate
-    // triangles, count the 3-run adjacency intersection at the last level"
-    // without materializing the 21.6M-row triangle set or paying a per-row
-    // hash-set array_intersect — measured 2.3× at sf0.1); the composite-key
-    // seeded join form stays gated by seed_k4, and SeedQueriesSpec pins
-    // seededK4Count == this count. Oracle unchanged.
+    // triangle-seeded K4 (reference examples/seed.rs mode): the clique4
+    // plan extends each triangle prefix by the intersection of its three
+    // adjacency runs, so it is the K4 enumeration itself
+    "seed_k4" -> ((s, dir) =>
+      graft.fast.FastBatch.enumerate(edges(s, dir), Planner.clique4)),
+    // triangle-seeded FACTORIZED K4 count (seed-q5-lean mode): the fast
+    // engine's count path enumerates triangles and counts the 3-run
+    // adjacency intersection at the last level, so no K4 row and no
+    // triangle set is materialized
     "seed_k4_count" -> ((s, dir) =>
       graft.fast.FastBatch.enumerateAgg(edges(s, dir), Planner.clique4)
         .select(col("n").as("total"))),
@@ -788,7 +779,7 @@ object SparkEntry {
     // static index on the fast engine
     // the WCO triangle as a FIRST-CLASS Catalyst operator: a custom
     // LogicalPlan node planned by an injected strategy into a physical
-    // exec that routes the child's rows through the GenericJoin pipeline
+    // exec that routes the child's rows through FastBatch.enumerate
     // (graft.plans.Wco) — the (c)-tier extension path, composing with
     // Catalyst above and below the node. Same oracle as wco_triangle.
     "wco_triangle_plan" -> ((s, dir) =>

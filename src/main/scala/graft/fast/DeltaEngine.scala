@@ -5,9 +5,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import scala.collection.immutable.ArraySeq
-import graft.batch.GenericJoin.Pred
 import graft.plan.Planner
-import graft.plan.Planner.RelationPlan
+import graft.plan.Planner.{Pred, RelationPlan}
 import graft.state.IndexState
 
 /** Per-node adjacency state: consolidated, value-sorted neighbor runs with
@@ -78,14 +77,13 @@ object DeltaPack {
 /** Worst-case-optimal delta-query step over node-sharded executor state,
   * with NO per-batch Catalyst planning.
   *
-  * Why this exists: the DataFrame form of `deltaStep`
-  * ([[graft.batch.GenericJoin.deltaStep]]) re-derives and re-optimizes an
-  * ~18-join plan on the driver every micro-batch — measured 3-6 s of
-  * single-threaded work per batch, which inverted core-count scaling
-  * (local[32] slower than local[8], BENCH_r01). Here each batch is a fixed
-  * pipeline of narrow RDD stages against a persisted, hash-partitioned
-  * index — the Spark analog of the reference's timely-dataflow workers
-  * exchanging prefixes between per-worker indices
+  * Why this exists: a DataFrame form of `deltaStep` re-derives and
+  * re-optimizes an ~18-join plan on the driver every micro-batch — measured
+  * 3-6 s of single-threaded work per batch, which inverted core-count
+  * scaling (local[32] slower than local[8], BENCH_r01). Here each batch is
+  * a fixed pipeline of narrow RDD stages against a persisted,
+  * hash-partitioned index — the Spark analog of the reference's
+  * timely-dataflow workers exchanging prefixes between per-worker indices
   * (/root/reference/src/lib.rs:64-92). Per-batch driver cost is a few
   * milliseconds of task scheduling; all real work is distributed, so
   * throughput scales with cores. This is the documented
@@ -102,7 +100,7 @@ object DeltaPack {
   *   prefix  (pLen known per level): [rel, w, minDeg, minExt, p×pLen]
   *   proposal: [rel, w, minExt, p×pLen, nc, cands×nc, candWs×nc]
   *
-  * Semantics are EXACTLY [[graft.batch.GenericJoin.deltaStep]] (pinned by
+  * Semantics (pinned against a brute-force before/after enumeration by
   * FastEngineSpec): for each motif relation r, seed that relation's delta
   * dataflow with the batch; constraints from relations before r read
   * post-batch state ("le", base merged on-the-fly with the broadcast
@@ -323,9 +321,8 @@ final class DeltaEngine(
     val engine = this
     // driver: gather every (seed, rel, ext) degree from the exact mirror
     // (folded degSums — O(|touched keys|) driver work per batch, no cluster
-    // job), then argmin in extender order — exactly the DataFrame engine's
-    // least(struct(deg, i)): strictly smaller wins, ties keep the lowest
-    // extender id. pruneZero → -1.
+    // job), then argmin in extender order: strictly smaller wins, ties keep
+    // the lowest extender id. pruneZero → -1.
     val maxE0 = stage0.map(_.size).max
     val nE = dpLocal.edges.length
     val degs = Array.fill(nE * numRels * maxE0)(0L)
@@ -916,14 +913,13 @@ final class DeltaEngine(
 
   /** Batch enumeration over a static CONSOLIDATED edge set against
     * initialized shards — the fast-engine analog of the reference's
-    * static-index serving mode (/root/reference/static_graph/src/lib.rs:73-137)
-    * and of [[graft.batch.GenericJoin.enumerate]]. Seeds are the distributed
-    * edge RDD itself (relation 0's bindings); every constraint reads the
-    * same fully-built index (`dp` must be the empty DeltaPack) — none of
-    * deltaStep's |delta| ≪ |state| broadcast assumptions apply. Relation 0's
-    * plan alone enforces every motif relation, and one pipeline over a
-    * consolidated Z-set emits each binding exactly once, so the output
-    * needs NO consolidation shuffle. */
+    * static-index serving mode (reference static_graph/src/lib.rs:73-137).
+    * Seeds are the distributed edge RDD itself (relation 0's bindings);
+    * every constraint reads the same fully-built index (`dp` must be the
+    * empty DeltaPack) — none of deltaStep's |delta| ≪ |state| broadcast
+    * assumptions apply. Relation 0's plan alone enforces every motif
+    * relation, and one pipeline over a consolidated Z-set emits each
+    * binding exactly once, so the output needs NO consolidation shuffle. */
   private def batchProps(shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
                          dp: Broadcast[DeltaPack],
                          edges: RDD[(Long, Long, Long)]): RDD[Prop] = {
@@ -1593,7 +1589,7 @@ object DeltaEngine {
         if (i >= n) rs(j)
         else if (j >= n) fs(i)
         else math.min(fs(i), rs(j))
-      var fVs: Array[Long] = emptyLongArray; var fWs: Array[Long] = emptyLongArray; var fDeg = 0L
+      var fVs: Array[Long] = emptyRunArray; var fWs: Array[Long] = emptyRunArray; var fDeg = 0L
       if (i < n && fs(i) == k) {
         var end = i
         while (end < n && fs(end) == k) end += 1
@@ -1601,7 +1597,7 @@ object DeltaEngine {
         fVs = run._1; fWs = run._2; fDeg = run._3
         i = end
       }
-      var rVs: Array[Long] = emptyLongArray; var rWs: Array[Long] = emptyLongArray; var rDeg = 0L
+      var rVs: Array[Long] = emptyRunArray; var rWs: Array[Long] = emptyRunArray; var rDeg = 0L
       if (j < n && rs(j) == k) {
         var end = j
         while (end < n && rs(end) == k) end += 1
@@ -1614,8 +1610,6 @@ object DeltaEngine {
     }
     m
   }
-
-  private val emptyLongArray = new Array[Long](0)
 
   /** Consolidates the sorted [from,until) slice of a (value, weight) run:
     * values are already ascending; sums weights of equal values and drops

@@ -4,8 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Row
-import graft.batch.EdgeIndex
-import graft.batch.GenericJoin.Pred
+import graft.plan.Planner.Pred
 
 /** Batch motif enumeration on the fast RDD engine — the driver-facing form
   * of [[DeltaEngine.enumerateInternalRows]]/[[DeltaEngine.enumerateAggRdd]].
@@ -15,11 +14,10 @@ import graft.batch.GenericJoin.Pred
   * /root/reference/static_graph/examples/triangles.rs:27-39): build the
   * node-sharded adjacency index once, then run the full count → argmin →
   * propose → intersect pipeline with the WHOLE edge set as the distributed
-  * seed stream. Semantically identical to
-  * [[graft.batch.GenericJoin.enumerate]] (pinned by FastBatchSpec); the win
-  * is execution shape — a fixed pipeline of packed-block exchanges against
-  * persisted shards instead of ~5 shuffle joins per extension level
-  * (measured ~6× fewer seconds/match on the sf0.1 derived graph).
+  * seed stream. FastBatchSpec and FastBatchAnswerSpec pin its output to a
+  * brute-force nested-loop enumeration in both regimes. The execution shape
+  * is a fixed pipeline of packed-block exchanges against persisted shards,
+  * not shuffle joins per extension level.
   *
   * TWO execution regimes, chosen by consolidated edge count (the same
   * deliberate size-gated strategy pick as Catalyst's broadcast-vs-shuffle
@@ -81,7 +79,6 @@ object FastBatch {
     val sc = spark.sparkContext
     val parts = if (numParts > 0) numParts else sc.defaultParallelism
     val engine = new DeltaEngine(motif, predicates, parts)
-    val t0 = System.nanoTime()
     val e = EdgeIndex.consolidate(edges).select("src", "dst", "w").rdd
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // ONE gate-and-collect job for the local regime: each partition packs
@@ -151,14 +148,8 @@ object FastBatch {
           }
         }
       }
-      val t1 = System.nanoTime()
-      try {
-        val res = local(engine, hot, seeds)
-        if (FastGraphState.profile)
-          System.err.println(f"[fastprof] FastBatch LOCAL parts=$parts edges=$cnt " +
-            f"build=${(t1 - t0) / 1e9}%.2fs pipeline=${(System.nanoTime() - t1) / 1e9}%.2fs")
-        res
-      } finally { hot.unpersist(false); seedsB.unpersist(false) }
+      try local(engine, hot, seeds)
+      finally { hot.unpersist(false); seedsB.unpersist(false) }
     } else {
       // sharded regime: persist the consolidated set (it feeds BOTH the
       // shard build and the seed stream); the gate attempt's shuffle files
@@ -166,19 +157,11 @@ object FastBatch {
       e.persist()
       val shards = engine.buildShards(e).persist()
       shards.count()
-      val t1 = System.nanoTime()
       val hotK = if (hotKeys >= 0) hotKeys else 8 * parts
       val hot = sc.broadcast(DeltaEngine.buildHot(shards, hotK))
       val dp = sc.broadcast(DeltaPack.empty)
-      val t2 = System.nanoTime()
-      try {
-        val res = sharded(engine, shards, DeltaEngine.BcastHot(hot), dp, e)
-        if (FastGraphState.profile)
-          System.err.println(f"[fastprof] FastBatch parts=$parts " +
-            f"build=${(t1 - t0) / 1e9}%.2fs hot=${(t2 - t1) / 1e9}%.2fs " +
-            f"pipeline=${(System.nanoTime() - t2) / 1e9}%.2fs")
-        res
-      } finally {
+      try sharded(engine, shards, DeltaEngine.BcastHot(hot), dp, e)
+      finally {
         shards.unpersist(false); e.unpersist(false)
         hot.unpersist(false); dp.unpersist(false)
       }
@@ -220,10 +203,10 @@ object FastBatch {
   /** Static-index, streamed-queries mode (the reference's q3-lean /
     * static_graph serving shape, /root/reference/examples/q3-lean.rs:50-66):
     * `queries` (src,dst[,w]) are treated as relation 0's bindings and
-    * extended against the index built from `edges`. Mirrors
-    * [[graft.batch.GenericJoin.queryStatic]] (pinned by FastBatchSpec);
-    * query rows are NOT consolidated — each input row produces its own
-    * extensions, weights multiplying through. */
+    * extended against the index built from `edges` (pinned to the
+    * brute-force oracle by FastBatchSpec); query rows are NOT consolidated
+    * — each input row produces its own extensions, weights multiplying
+    * through. */
   def queryStatic(queries: DataFrame, edges: DataFrame, motif: Seq[(Int, Int)],
                   predicates: Seq[Pred] = Nil, numParts: Int = -1,
                   hotKeys: Int = -1): DataFrame =

@@ -8,17 +8,17 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.collection.immutable.ArraySeq
-import graft.batch.GenericJoin.Pred
+import graft.plan.Planner.Pred
 
 /** Incrementally-maintained motif state with CONSTANT per-batch driver cost.
   *
-  * Same contract as [[graft.incr.GraphState]] (exactly-once absorb, WAL
-  * before output, meta commit after sink, compaction, lineage metrics,
-  * restart-from-stateDir) but the state lives as a persisted, hash-
-  * partitioned RDD of per-node adjacency shards and the per-batch delta
-  * step is [[DeltaEngine]]'s fixed RDD pipeline — no Catalyst planning in
-  * the loop. The DataFrame engine remains the semantic oracle (tests pin
-  * batch-for-batch equality).
+  * Exactly-once absorb, WAL before output, meta commit after sink,
+  * compaction, lineage metrics and restart-from-stateDir. The state lives
+  * as a persisted, hash-partitioned RDD of per-node adjacency shards and
+  * the per-batch delta step is [[DeltaEngine]]'s fixed RDD pipeline — no
+  * Catalyst planning in the loop. FastEngineSpec and IncrementalSpec pin
+  * every batch's match delta to a brute-force nested-loop enumeration of
+  * the graph before and after it.
   *
   * Scale design: state is sharded by node id across `numParts` partitions
   * (at cluster scale: ≥ executors × cores); the micro-batch delta is
@@ -44,7 +44,7 @@ final class FastGraphState(
     driverDegrees: Boolean = true,
     pipelineDepth: Int = 1,
     largeBatchThreshold: Int = 1 << 20,
-    degMirrorMaxKeys: Long = 1L << 23) extends graft.incr.MotifState {
+    degMirrorMaxKeys: Long = 1L << 23) {
 
   private val sc = spark.sparkContext
   private val parts = if (numParts > 0) numParts else sc.defaultParallelism
@@ -217,11 +217,11 @@ final class FastGraphState(
   }
 
   /** Absorbs one micro-batch and returns consolidated match deltas
-    * (x0..x{k-1}, w) as a DataFrame. Same exactly-once contract as
-    * GraphState: replayed batch ids return empty without state change;
-    * `sink` runs before the absorb is committed.
+    * (x0..x{k-1}, w) as a DataFrame. Exactly-once: replayed batch ids
+    * return empty without state change; `sink` runs before the absorb is
+    * committed.
     *
-    * Contract (same as GraphState.applyBatch): consume (or persist) the
+    * Contract: consume (or persist) the
     * returned frame before the next `applyBatch` call — its plan reads the
     * pre-batch shard RDD, which is unpersisted on the next absorb. */
   def applyBatch(batchId: Long, deltas: DataFrame,
@@ -383,7 +383,6 @@ final class FastGraphState(
     pendingBcast.foreach(_.unpersist(false)); pendingBcast = Nil
 
     stateDir.foreach(dir => writeWal(dir, batchId, arr)) // write-ahead
-    val t1 = System.nanoTime()
     val pack = DeltaPack(arr)
     val dp = sc.broadcast(pack)
     // NO per-batch hot broadcast: tasks resolve the replica from the chain
@@ -391,7 +390,6 @@ final class FastGraphState(
     val hotRef = DeltaEngine.ChainHot(stateId, hotGen, hotBase, dpChain)
     val matches = engine.deltaStep(sc, shards, hotRef, dp, pack, degFn)
     if (sink != null) sink(toDF(matches))
-    val t2 = System.nanoTime()
     installShards(engine.updateShards(shards, dp))
     hotAdj = DeltaEngine.foldHot(hotAdj, pack)
     foldDegMirror(pack)
@@ -399,10 +397,6 @@ final class FastGraphState(
     // bound the fold chain even when compaction is far away: re-broadcast
     // the driver's folded replica and retire the chain
     if (dpChain.size >= FastGraphState.maxHotChain) rebaseHot()
-    if (FastGraphState.profile)
-      System.err.println(f"[fastprof] batch=$batchId wal=${(t1 - t0) / 1e6}%.0fms " +
-        f"step+sink=${(t2 - t1) / 1e6}%.0fms update=${(System.nanoTime() - t2) / 1e6}%.0fms " +
-        f"chain=${dpChain.size}")
     tailIds :+= batchId
     _lastBatchId = batchId
     if (tailIds.size >= maxTail) {
@@ -452,20 +446,12 @@ final class FastGraphState(
 
   /** (consolidated match-delta rows, net weight) for one batch — the bench
     * fast path: one RDD job, zero Catalyst. */
-  def applyBatchStats(batchId: Long, arr: Array[(Long, Long, Long)]): (Long, Long) = {
-    val t0 = System.nanoTime()
-    val m = applyBatchRdd(batchId, arr)
-    val t1 = System.nanoTime()
-    val out = m.mapPartitions { it =>
+  def applyBatchStats(batchId: Long, arr: Array[(Long, Long, Long)]): (Long, Long) =
+    applyBatchRdd(batchId, arr).mapPartitions { it =>
       var n = 0L; var s = 0L
       for ((_, w) <- it) { n += 1; s += w }
       Iterator.single((n, s))
     }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-    if (FastGraphState.profile)
-      System.err.println(f"[fastprof] batch=$batchId absorb=${(t1 - t0) / 1e6}%.0fms " +
-        f"statsJob=${(System.nanoTime() - t1) / 1e6}%.0fms")
-    out
-  }
 
   /** Current consolidated edge Z-set (tests / snapshot queries). */
   def edges: DataFrame = {
@@ -517,12 +503,7 @@ final class FastGraphState(
 
   private def collectConsolidated(deltas: DataFrame,
                                   limit: Option[Int] = None): Array[(Long, Long, Long)] = {
-    val w = if (deltas.columns.contains("w"))
-      org.apache.spark.sql.functions.col("w").cast("long")
-    else org.apache.spark.sql.functions.lit(1L)
-    val sel = deltas.select(
-      org.apache.spark.sql.functions.col("src").cast("long"),
-      org.apache.spark.sql.functions.col("dst").cast("long"), w.as("w"))
+    val sel = EdgeIndex.norm(deltas)
     // row order is irrelevant downstream (DeltaPack consolidates by key),
     // so a limit-probe collect is a valid batch when it comes in under it
     limit.fold(sel)(sel.limit).collect()
@@ -530,8 +511,7 @@ final class FastGraphState(
   }
 
   /** Match-delta RDD → DataFrame via direct UnsafeRow emit (same writer the
-    * batch path uses — the external-Row conversion cost ~1µs/row and only
-    * the oracle/DataFrame path was still paying it). */
+    * batch path uses; the external-Row conversion cost ~1µs/row). */
   private def toDF(matches: RDD[(ArraySeq[Long], Long)]): DataFrame = {
     val n = engine.numAttrs
     val rows = matches.mapPartitions { it =>
@@ -660,9 +640,6 @@ final class FastGraphState(
 }
 
 object FastGraphState {
-  /** Per-batch phase timing to stderr (diagnostics only). */
-  val profile: Boolean = sys.env.getOrElse("SPARK_GRAFT_FAST_PROFILE", "0") == "1"
-
   /** Longest DeltaPack chain a hot-replica resolve may fold before the
     * driver re-bases with a fresh full broadcast (bounds fresh-executor
     * catch-up work and retained broadcast count when compaction is rare). */

@@ -1,6 +1,6 @@
 package graft.plan
 
-/** Worst-case-optimal (GenericJoin) motif query planner.
+/** Worst-case-optimal (generic join, Ngo et al.) motif query planner.
   *
   * A motif is a list of directed relation edges over integer attributes
   * 0..k-1, e.g. the directed triangle is `Seq((0,1),(0,2),(1,2))`.
@@ -14,7 +14,7 @@ package graft.plan
   * /root/reference/src/motif.rs:195-230 `order_attributes`,
   * /root/reference/src/motif.rs:239-266 `plan_query`,
   * /root/reference/src/motif.rs:177-190 le/lt assignment), re-expressed for
-  * a Spark DataFrame code generator rather than a timely dataflow builder.
+  * the fast engine's RDD pipeline rather than a timely dataflow builder.
   */
 object Planner {
 
@@ -110,6 +110,21 @@ object Planner {
         s"seed relation's attribute pair and cannot be enforced by any extension stage")
     RelationPlan(seedRelation, order, stages)
   }
+
+  /** Inline symmetry-breaking / distinctness predicate between two motif
+    * attributes, applied at the EARLIEST extension stage where both are
+    * bound — the reference's per-stage retain filters that keep ordered
+    * clique enumeration from materializing all k! permutations
+    * (reference examples/q6-lean.rs:62-65 `v2 != v4 && v3 < v4`;
+    * static_graph/examples/diamonds.rs:42 `b < c`).
+    * `op` ∈ { "<", "<=", ">", ">=", "!=" }; attributes are ORIGINAL motif
+    * attribute ids (the engine maps them to prefix positions). */
+  final case class Pred(a: Int, b: Int, op: String)
+
+  /** Ordered-enumeration predicate set x0 < x1 < ... < x{n-1}: one canonical
+    * representative per clique instead of all n! permutations. */
+  def ordered(numAttrs: Int): Seq[Pred] =
+    (0 until numAttrs - 1).map(a => Pred(a, a + 1, "<"))
 
   /** Plans every relation's delta query (for incremental `trackMotif`). */
   def planAll(relations: Seq[(Int, Int)]): IndexedSeq[RelationPlan] =

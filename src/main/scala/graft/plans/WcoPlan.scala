@@ -57,12 +57,11 @@ class GraftStrategy extends SparkStrategy {
   }
 }
 
-/** Physical triangle enumeration: the child's (src, dst) rows feed the
-  * library's GenericJoin WCO pipeline (count-propose-intersect over the
-  * consolidated edge index); the result plan's InternalRow RDD IS this
-  * node's output. Everything is composed lazily on the driver — no job
-  * runs until the parent plan executes, and the inner pipeline's
-  * exchanges/AQE behave exactly as in the library-call form. */
+/** Physical triangle enumeration: the child's (src, dst) rows feed
+  * [[graft.fast.FastBatch.enumerate]] (count-propose-intersect over the
+  * consolidated edge index); the result's InternalRow RDD IS this node's
+  * output. The engine's gate job runs when the parent plan executes this
+  * node, and the rows behave exactly as in the library-call form. */
 final case class TriangleEnumerateExec(output: Seq[Attribute],
                                        child: SparkPlan) extends UnaryExecNode {
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -81,7 +80,7 @@ final case class TriangleEnumerateExec(output: Seq[Attribute],
       StructField("src", LongType, nullable = false),
       StructField("dst", LongType, nullable = false)))
     val edges = GraftSqlBridge.internalDf(spark, edgeRows, schema)
-    graft.batch.GenericJoin.enumerate(edges, graft.plan.Planner.triangle)
+    graft.fast.FastBatch.enumerate(edges, graft.plan.Planner.triangle)
       .queryExecution.toRdd
   }
 }
@@ -192,7 +191,7 @@ object Wco {
 
   /** Triangle enumeration as a logical-plan citizen: builds the custom
     * node over the (src, dst) child — the plan-integrated twin of
-    * `GenericJoin.enumerate(edges, Planner.triangle)`. */
+    * `FastBatch.enumerate(edges, Planner.triangle)`. */
   def triangles(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     register(spark)

@@ -1184,7 +1184,7 @@ private[v2] class EdgeWriteBuilder(path: String, schema: StructType,
   * recovered query re-executes the last epoch, and commit() sees the
   * final shard already published and drops the replayed staging file
   * instead of renaming — the same replayed-id no-op rule as
-  * [[graft.incr.GraphState]]'s counting sink. */
+  * [[graft.fast.FastGraphState.applyBatch]]. */
 private[sources] class EdgeStreamingWrite(path: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write._

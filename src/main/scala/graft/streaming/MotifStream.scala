@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.incr.{GraphState, MotifState}
+import graft.fast.FastGraphState
 import graft.model.EdgeDelta
 
 /** End-to-end incremental motif pipeline over a streaming transcript frame:
@@ -10,11 +10,11 @@ import graft.model.EdgeDelta
   *   transcripts →(watermark on ts)→ dictionary encode →
   *   [[AdjacencyDeltas]] (flatMapGroupsWithState, emits ±1 edge deltas,
   *   retracting bridged edges on late turns) →
-  *   foreachBatch → [[GraphState]] delta-query GenericJoin →
+  *   foreachBatch → [[FastGraphState]] delta-query step →
   *   idempotent per-batch parquet sink.
   *
   * Exactly-once: Structured Streaming's checkpoint gives deterministic batch
-  * ids and replay; the sink overwrites `outDir/batch=<id>`; GraphState
+  * ids and replay; the sink overwrites `outDir/batch=<id>`; the state
   * skips already-absorbed ids and commits state metadata only after the sink
   * ran — so every batch's output lands exactly once even across restarts.
   * (The reference gets the same guarantee from timely epochs + probes,
@@ -22,12 +22,12 @@ import graft.model.EdgeDelta
   */
 object MotifStream {
 
-  final case class Pipeline(state: MotifState, query: StreamingQuery)
+  final case class Pipeline(state: FastGraphState, query: StreamingQuery)
 
   /** Starts the pipeline. `transcripts` must be a streaming DataFrame with
-    * the input_hint schema; `dict` a static key→id frame for `attr`.
-    * `fastEngine` (default) holds motif state as sharded executor RDDs with
-    * constant per-batch driver cost; false = the DataFrame delta engine. */
+    * the input_hint schema; `dict` a static key→id frame for `attr`. Motif
+    * state lives as sharded executor RDDs with constant per-batch driver
+    * cost. */
   def start(
       transcripts: DataFrame,
       dict: DataFrame,
@@ -36,12 +36,8 @@ object MotifStream {
       watermarkDelay: String,
       outDir: String,
       checkpointDir: String,
-      stateDir: Option[String] = None,
-      fastEngine: Boolean = true): Pipeline = {
-    val spark = transcripts.sparkSession
-    val state: MotifState =
-      if (fastEngine) new graft.fast.FastGraphState(spark, motif, stateDir)
-      else new GraphState(spark, motif, stateDir)
+      stateDir: Option[String] = None): Pipeline = {
+    val state = new FastGraphState(transcripts.sparkSession, motif, stateDir)
     val deltas: Dataset[EdgeDelta] =
       AdjacencyDeltas.stream(
         AdjacencyDeltas.encode(

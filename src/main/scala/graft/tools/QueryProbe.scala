@@ -98,7 +98,7 @@ object QueryProbe {
           }
           val e0 = graft.SparkEntry.edges(spark, sfDir)
           val cons = t("consolidate+rdd+persist+count") {
-            val e = graft.batch.EdgeIndex.consolidate(e0).select("src", "dst", "w").rdd
+            val e = graft.fast.EdgeIndex.consolidate(e0).select("src", "dst", "w").rdd
               .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).persist()
             e.count(); e
           }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.batch.GenericJoin
+import graft.fast.FastBatch
 import graft.gen.TranscriptGen
 import graft.plan.Planner
 import graft.streaming.MotifStream
@@ -78,15 +78,17 @@ object StreamSmoke {
     println(s"[smoke] finished at lastBatchId=${p2.state.lastBatchId}")
 
     // 3. cumulative streamed matches vs batch recompute
-    val streamed = spark.read.parquet(s"$dirOut/batch=*")
-    val streamedNet = GenericJoin.consolidateMatches(streamed)
+    def consolidate(m: DataFrame): DataFrame =
+      m.groupBy(m.columns.filter(_ != "w").map(col).toSeq: _*)
+        .agg(sum("w").as("w")).filter(col("w") =!= 0L)
+    def total(m: DataFrame): Long = m.agg(coalesce(sum("w"), lit(0L))).first().getLong(0)
+    val streamedNet = consolidate(spark.read.parquet(s"$dirOut/batch=*"))
     val batchEdges = TranscriptEdges.toolToolEdges(ts).select("src", "dst", "w")
-    val expected = GenericJoin.enumerate(batchEdges, Planner.triangle)
-    val sCount = GenericJoin.countMatches(streamedNet)
-    val eCount = GenericJoin.countMatches(expected)
-    val diff = streamedNet.unionByName(
-      expected.withColumn("w", -col("w")))
-    val residual = GenericJoin.consolidateMatches(diff).count()
+    val expected = FastBatch.enumerate(batchEdges, Planner.triangle)
+    val sCount = total(streamedNet)
+    val eCount = total(expected)
+    val residual = consolidate(streamedNet.unionByName(
+      expected.withColumn("w", -col("w")))).count()
     println(s"[smoke] streamed net matches=$sCount batch=$eCount residualRows=$residual")
     val verdict = if (residual == 0 && sCount == eCount && sCount > 0) "PASS" else "FAIL"
     println(s"[smoke] $verdict")

@@ -3,14 +3,14 @@ package graft.fast
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
-import graft.batch.GenericJoin
+import graft.{BruteForce, SparkTestBase}
 import graft.plan.Planner
 
-/** Pins the fast engine's batch-enumeration mode to the DataFrame engine:
-  * identical (bindings, weight) sets for every motif/predicate combination,
-  * including the gallop range-pushdown paths and hot-replica scatter
-  * routing. */
+/** Pins the fast engine's batch-enumeration mode to the brute-force
+  * nested-loop oracle ([[graft.BruteForce]]; test names call it "sql"):
+  * identical (bindings, weight) sets for every motif/predicate combination
+  * on weighted multigraphs, including the gallop range-pushdown paths and
+  * hot-replica scatter routing. */
 class FastBatchSpec extends AnyFunSuite with SparkTestBase {
 
   private val edgeSchema = StructType(Seq(
@@ -44,7 +44,7 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
 
   /** Runs `body` once per execution regime: the zero-exchange broadcast-
     * local pipeline (gate wide open) and the node-sharded exchange pipeline
-    * (gate closed) — every equality below pins BOTH against the DataFrame
+    * (gate closed) — every equality below pins BOTH against the brute-force
     * oracle. */
   private def bothRegimes(body: String => Unit): Unit = {
     val saved = FastBatch.localIndexMaxEdges
@@ -56,10 +56,10 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
     } finally FastBatch.localIndexMaxEdges = saved
   }
 
-  private def check(motif: Seq[(Int, Int)], preds: Seq[GenericJoin.Pred],
+  private def check(motif: Seq[(Int, Int)], preds: Seq[Planner.Pred],
                     edges: Seq[(Long, Long, Long)], parts: Int, hotKeys: Int = -1): Unit = {
     val e = df(edges)
-    val expect = sortedRows(GenericJoin.enumerate(e, motif, preds))
+    val expect = BruteForce.rows(BruteForce.enumerate(edges, motif, preds))
     bothRegimes { regime =>
       val got = sortedRows(FastBatch.enumerate(e, motif, preds, numParts = parts,
         hotKeys = hotKeys))
@@ -83,12 +83,13 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("enumerateAgg diamond matches full enumeration") {
-    val e = df(randomEdges(30, 500, 59L))
-    val full = GenericJoin.enumerate(e, Planner.diamond).collect()
+    val edges = randomEdges(30, 500, 59L)
+    val e = df(edges)
+    val full = BruteForce.enumerate(edges, Planner.diamond)
     bothRegimes { regime =>
       val row = FastBatch.enumerateAgg(e, Planner.diamond, numParts = 3).collect()(0)
-      assert(row.getLong(0) == full.length, s"regime=$regime")
-      assert(row.getLong(1) == full.map(r => r.getLong(r.length - 1)).sum, s"regime=$regime")
+      assert(row.getLong(0) == full.size, s"regime=$regime")
+      assert(row.getLong(1) == full.values.sum, s"regime=$regime")
     }
   }
 
@@ -97,7 +98,7 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("batch fast == sql: clique4 ordered (gallop range pushdown, both sides)") {
-    check(Planner.clique4, GenericJoin.ordered(4), randomEdges(25, 500, 17L), parts = 4)
+    check(Planner.clique4, Planner.ordered(4), randomEdges(25, 500, 17L), parts = 4)
   }
 
   test("batch fast == sql: clique5 (three extension levels)") {
@@ -106,13 +107,13 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
 
   test("batch fast == sql: cliqueHat with mixed !=/< predicates") {
     check(Planner.cliqueHat,
-      Seq(GenericJoin.Pred(1, 4, "!="), GenericJoin.Pred(2, 4, "<")),
+      Seq(Planner.Pred(1, 4, "!="), Planner.Pred(2, 4, "<")),
       randomEdges(20, 450, 19L), parts = 4)
   }
 
   test("batch fast == sql: descending and >= range predicates") {
     check(Planner.triangle,
-      Seq(GenericJoin.Pred(0, 2, ">"), GenericJoin.Pred(1, 2, ">=")),
+      Seq(Planner.Pred(0, 2, ">"), Planner.Pred(1, 2, ">=")),
       randomEdges(30, 500, 23L), parts = 3)
   }
 
@@ -124,20 +125,17 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
 
   test("batch fast == sql: single-edge motif (no extension stage)") {
     val edges = randomEdges(15, 120, 31L)
-    val e = df(edges)
-    val expect = sortedRows(GenericJoin.enumerate(e, Seq((0, 1))))
-    val got = sortedRows(FastBatch.enumerate(e, Seq((0, 1)), numParts = 3))
+    val expect = BruteForce.rows(BruteForce.enumerate(edges, Seq((0, 1))))
+    val got = sortedRows(FastBatch.enumerate(df(edges), Seq((0, 1)), numParts = 3))
     assert(got == expect)
   }
 
   test("queryStatic fast == sql: streamed queries against a static index") {
-    import graft.batch.EdgeIndex
     val edges = randomEdges(30, 500, 61L)
     val queries = randomEdges(30, 120, 67L)
     val e = df(edges)
     val q = df(queries)
-    val idx = EdgeIndex(EdgeIndex.consolidate(e))
-    val expect = sortedRows(GenericJoin.queryStatic(q, idx, Planner.triangle))
+    val expect = BruteForce.queryStatic(queries, edges, Planner.triangle)
     bothRegimes { regime =>
       val got = sortedRows(FastBatch.queryStatic(q, e, Planner.triangle, numParts = 4))
       assert(got == expect, s"regime=$regime")
@@ -147,30 +145,30 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
   test("enumerateAgg matches full enumeration counts") {
     val edges = randomEdges(30, 500, 37L)
     val e = df(edges)
-    val full = GenericJoin.enumerate(e, Planner.triangle).collect()
+    val full = BruteForce.enumerate(edges, Planner.triangle)
     bothRegimes { regime =>
       val row = FastBatch.enumerateAgg(e, Planner.triangle, numParts = 4).collect()(0)
-      assert(row.getLong(0) == full.length, s"regime=$regime")
-      assert(row.getLong(1) == full.map(r => r.getLong(r.length - 1)).sum, s"regime=$regime")
+      assert(row.getLong(0) == full.size, s"regime=$regime")
+      assert(row.getLong(1) == full.values.sum, s"regime=$regime")
     }
   }
 
   test("enumerateAgg with ordered predicates matches DataFrame agg") {
     val edges = randomEdges(25, 500, 41L)
     val e = df(edges)
-    val expect = GenericJoin.enumerateAgg(e, Planner.clique4, GenericJoin.ordered(4))
-      .collect()(0)
+    val expect = BruteForce.enumerate(edges, Planner.clique4, Planner.ordered(4))
     bothRegimes { regime =>
-      val got = FastBatch.enumerateAgg(e, Planner.clique4, GenericJoin.ordered(4),
+      val got = FastBatch.enumerateAgg(e, Planner.clique4, Planner.ordered(4),
         numParts = 4).collect()(0)
-      assert(got.getLong(0) == expect.getLong(0), s"regime=$regime")
-      assert(got.getLong(1) == expect.getLong(1), s"regime=$regime")
+      assert(got.getLong(0) == expect.size, s"regime=$regime")
+      assert(got.getLong(1) == expect.values.sum, s"regime=$regime")
     }
   }
 
   test("enumerateRowCount equals enumeration size in both regimes") {
-    val e = df(randomEdges(30, 500, 71L))
-    val full = GenericJoin.enumerate(e, Planner.triangle).count()
+    val edges = randomEdges(30, 500, 71L)
+    val e = df(edges)
+    val full = BruteForce.enumerate(edges, Planner.triangle).size
     bothRegimes { regime =>
       val n = FastBatch.enumerateRowCount(e, Planner.triangle, numParts = 4)
       assert(n == full, s"regime=$regime")

@@ -3,15 +3,14 @@ package graft.fast
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
-import graft.batch.GenericJoin
-import graft.incr.GraphState
+import graft.{BruteForce, SparkTestBase}
 import graft.plan.Planner
 
-/** Pins the RDD fast engine to the DataFrame engine batch-for-batch: same
-  * consolidated match deltas per micro-batch (including within-batch le/lt
-  * staleness, retractions, and multi-stage motifs), at any partition count,
-  * plus durable restart. */
+/** Pins the streaming engine batch-for-batch: each micro-batch's
+  * consolidated match delta equals the brute-force enumeration after the
+  * batch minus the one before it (covering within-batch le/lt staleness,
+  * retractions and multi-stage motifs), at any partition count, plus
+  * durable restart. Test names saying "sql engine" refer to that oracle. */
 class FastEngineSpec extends AnyFunSuite with SparkTestBase {
 
   private val edgeSchema = StructType(Seq(
@@ -50,17 +49,17 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
 
   private def compareEngines(motif: Seq[(Int, Int)], nodes: Int, nBatches: Int,
                              batchSize: Int, seed: Long, parts: Int,
-                             preds: Seq[GenericJoin.Pred] = Nil): Unit = {
-    val slow = new GraphState(spark, motif, predicates = preds)
+                             preds: Seq[Planner.Pred] = Nil): Unit = {
     val fast = new FastGraphState(spark, motif, numParts = parts, maxTail = 3,
       predicates = preds)
+    var before = Seq.empty[(Long, Long, Long)]
     for ((batch, id) <- randomBatches(nodes, nBatches, batchSize, seed).zipWithIndex) {
-      val b = df(batch)
-      val expect = sortedRows(slow.applyBatch(id.toLong, b))
-      val got = sortedRows(fast.applyBatch(id.toLong, b))
+      val expect = BruteForce.rows(BruteForce.delta(before, batch, motif, preds))
+      val got = sortedRows(fast.applyBatch(id.toLong, df(batch)))
       assert(got == expect, s"motif=$motif batch=$id parts=$parts")
+      before ++= batch
     }
-    slow.close(); fast.close()
+    fast.close()
   }
 
   test("fast == sql engine per batch: triangle (with retractions)") {
@@ -80,7 +79,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
 
   test("fast == sql engine per batch: ordered clique4 (predicates in BOTH engines)") {
     compareEngines(Planner.clique4, nodes = 18, nBatches = 4, batchSize = 50,
-      seed = 13L, parts = 4, preds = GenericJoin.ordered(4))
+      seed = 13L, parts = 4, preds = Planner.ordered(4))
   }
 
   test("driver degree mirror off (distributed sharded-degree seed phase) == mirror on") {
@@ -121,21 +120,16 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     // preload matches (not emitted) + streamed deltas == full enumeration
-    val preload = GenericJoin.enumerate(df(batches.head), Planner.triangle)
-    for (row <- preload.collect()) {
-      val key = row.toSeq.dropRight(1).map(_.asInstanceOf[Long])
-      acc(key) = acc.getOrElse(key, 0L) + row.getLong(row.length - 1)
-    }
-    val expected = GenericJoin.enumerate(df(batches.flatten), Planner.triangle)
-      .collect().map(r => r.toSeq.dropRight(1).map(_.asInstanceOf[Long]) ->
-        r.getLong(r.length - 1)).toMap
-    assert(acc.filter(_._2 != 0L).toMap == expected)
+    for ((key, w) <- BruteForce.enumerate(batches.head, Planner.triangle))
+      acc(key) = acc.getOrElse(key, 0L) + w
+    assert(acc.filter(_._2 != 0L).toMap ==
+      BruteForce.enumerate(batches.flatten, Planner.triangle))
     fast.close()
   }
 
   test("predicates: ordered triangle stream == ordered batch enumeration") {
     val batches = randomBatches(25, 4, 40, seed = 29L)
-    val preds = GenericJoin.ordered(3)
+    val preds = Planner.ordered(3)
     val fast = new FastGraphState(spark, Planner.triangle, numParts = 4,
       predicates = preds)
     val acc = scala.collection.mutable.Map[Seq[Long], Long]()
@@ -145,10 +139,8 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
         acc(key) = acc.getOrElse(key, 0L) + row.getLong(row.length - 1)
       }
     }
-    val expected = GenericJoin.enumerate(df(batches.flatten), Planner.triangle, preds)
-      .collect().map(r => r.toSeq.dropRight(1).map(_.asInstanceOf[Long]) ->
-        r.getLong(r.length - 1)).toMap
-    assert(acc.filter(_._2 != 0L).toMap == expected)
+    assert(acc.filter(_._2 != 0L).toMap ==
+      BruteForce.enumerate(batches.flatten, Planner.triangle, preds))
     fast.close()
   }
 
@@ -158,18 +150,17 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     // the DeltaPack chain — the per-batch path that must stay in lockstep
     // with the shards
     val batches = randomBatches(30, 9, 40, seed = 43L)
-    val slow = new GraphState(spark, Planner.triangle)
     val fast = new FastGraphState(spark, Planner.triangle, numParts = 4,
       maxTail = 1000, hotKeys = 1000) // every preloaded key hot → chain-folded
-    slow.initialize(df(batches.head))
     fast.initialize(df(batches.head))
+    var before = batches.head
     for ((batch, id) <- batches.tail.zipWithIndex) {
-      val b = df(batch)
-      val expect = sortedRows(slow.applyBatch(id.toLong, b))
-      val got = sortedRows(fast.applyBatch(id.toLong, b))
+      val expect = BruteForce.rows(BruteForce.delta(before, batch, Planner.triangle))
+      val got = sortedRows(fast.applyBatch(id.toLong, df(batch)))
       assert(got == expect, s"batch=$id")
+      before ++= batch
     }
-    slow.close(); fast.close()
+    fast.close()
   }
 
   test("durability: restart from stateDir resumes exactly-once") {
@@ -311,7 +302,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
 
   test("distributed absorb with ordered predicates == broadcast absorb") {
     val batches = randomBatches(20, 4, 45, seed = 79L)
-    val preds = GenericJoin.ordered(3)
+    val preds = Planner.ordered(3)
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds)
     val b = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds)
     for ((batch, id) <- batches.zipWithIndex) {
@@ -326,7 +317,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
 
   test("mirror off + ordered predicates: sharded-degree seed phase stays exact") {
     val batches = randomBatches(22, 4, 45, seed = 89L)
-    val preds = GenericJoin.ordered(3)
+    val preds = Planner.ordered(3)
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds)
     val b = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds,
       driverDegrees = false)

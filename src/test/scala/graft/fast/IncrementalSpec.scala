@@ -1,15 +1,15 @@
-package graft.incr
+package graft.fast
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
-import graft.batch.GenericJoin
+import graft.{BruteForce, SparkTestBase}
+import graft.BruteForce.total
 import graft.plan.Planner
 
 /** The reference's implicit core invariant: streaming the edge set through
-  * the delta-query engine in any batch split yields, cumulatively, the batch
-  * recomputation at every prefix (SURVEY.md §5.2) — and full retraction
-  * returns every count to zero. */
+  * the delta-query engine in any batch split yields, cumulatively, the
+  * brute-force enumeration of every prefix (SURVEY.md §5.2) — and full
+  * retraction returns every count to zero. */
 class IncrementalSpec extends AnyFunSuite with SparkTestBase {
 
   def df(edges: Seq[(Long, Long, Long)]): DataFrame = {
@@ -23,11 +23,11 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
       .filter(e => e._1 != e._2).distinct
   }
 
-  /** Streams `batches` through a GraphState; asserts after EVERY batch that
-    * cumulative deltas equal a fresh batch enumeration of the prefix. */
+  /** Streams `batches` through a FastGraphState; asserts after EVERY batch
+    * that cumulative deltas equal a brute-force enumeration of the prefix. */
   def checkIncremental(batches: Seq[Seq[(Long, Long, Long)]], motif: Seq[(Int, Int)],
-                       maxTail: Int = 3): Unit = {
-    val state = new GraphState(spark, motif, maxTail = maxTail)
+                       maxTail: Int = 3, stateDir: Option[String] = None): Unit = {
+    val state = new FastGraphState(spark, motif, stateDir, maxTail = maxTail)
     val seen = scala.collection.mutable.Map[Seq[Long], Long]()
     var applied = Seq.empty[(Long, Long, Long)]
     for ((batch, id) <- batches.zipWithIndex) {
@@ -39,8 +39,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
         if (nw == 0L) seen.remove(key) else seen(key) = nw
       }
       applied = applied ++ batch
-      val expect = GenericJoin.enumerate(df(applied), motif).collect()
-        .map(r => (0 until r.length - 1).map(r.getLong) -> r.getLong(r.length - 1)).toMap
+      val expect = BruteForce.enumerate(applied, motif)
       assert(seen.toMap == expect,
         s"after batch $id: incremental ${seen.size} vs batch ${expect.size}")
     }
@@ -85,18 +84,21 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compaction boundaries do not change results (maxTail=1)") {
+    // compaction rewrites the durable base, so it needs a stateDir
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
     val edges = erdosRenyi(18, 90, 53).map(e => (e._1, e._2, 1L))
-    checkIncremental(edges.grouped(9).toSeq, Planner.triangle, maxTail = 1)
+    checkIncremental(edges.grouped(9).toSeq, Planner.triangle, maxTail = 1,
+      stateDir = Some(dir))
   }
 
   test("replayed batch id is a no-op (exactly-once)") {
-    val state = new GraphState(spark, Planner.triangle)
+    val state = new FastGraphState(spark, Planner.triangle)
     val b0 = df(Seq((0L, 1L, 1L), (0L, 2L, 1L), (1L, 2L, 1L)))
     val m0 = state.applyBatch(0L, b0)
-    assert(GenericJoin.countMatches(m0) == 1L)
+    assert(total(m0) == 1L)
     val replay = state.applyBatch(0L, b0)
     assert(replay.collect().isEmpty)
-    assert(GenericJoin.countMatches(state.applyBatch(1L, df(Seq((2L, 0L, 1L))))) == 0L)
+    assert(total(state.applyBatch(1L, df(Seq((2L, 0L, 1L))))) == 0L)
     state.close()
   }
 }

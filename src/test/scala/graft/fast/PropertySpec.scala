@@ -1,15 +1,14 @@
-package graft.incr
+package graft.fast
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.SparkTestBase
-import graft.batch.GenericJoin
+import graft.{BruteForce, SparkTestBase}
 import graft.plan.Planner
 
 /** Property-based (SURVEY.md §5.4): random small graphs + random batch
   * splits + random deletions → cumulative incremental deltas equal the
-  * batch recompute, and full retraction returns to zero. Cases are drawn
+  * brute-force enumeration, and full retraction returns to zero. Cases are drawn
   * from ScalaCheck generators under fixed seeds (each case runs a full
   * Spark pipeline, so we sample a handful deterministically). */
 class PropertySpec extends AnyFunSuite with SparkTestBase {
@@ -39,13 +38,12 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       val k = 1 + r.nextInt(math.min(rest.size, 9))
       batches += rest.take(k); rest = rest.drop(k)
     }
-    val state = new GraphState(spark, motif, None, maxTail = 3)
+    val state = new FastGraphState(spark, motif, None, maxTail = 3)
     var cumulative = 0L
     for ((b, i) <- batches.zipWithIndex)
-      cumulative += GenericJoin.countMatches(state.applyBatch(i.toLong, b.toDF("src", "dst", "w")))
+      cumulative += BruteForce.total(state.applyBatch(i.toLong, b.toDF("src", "dst", "w")))
     state.close()
-    val expect = GenericJoin.countMatches(
-      GenericJoin.enumerate(ops.toDF("src", "dst", "w"), motif))
+    val expect = BruteForce.enumerate(ops, motif).values.sum
     assert(cumulative == expect,
       s"edges=${edges.size} dels=${delIdx.size} seed=$seed motif=$motif: $cumulative != $expect")
   }

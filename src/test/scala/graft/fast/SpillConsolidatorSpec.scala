@@ -2,8 +2,7 @@ package graft.fast
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.ArraySeq
-import graft.SparkTestBase
-import graft.incr.GraphState
+import graft.{BruteForce, SparkTestBase}
 import graft.plan.Planner
 
 /** Effort-bounded emission + spillable consolidation: the two mechanisms
@@ -137,17 +136,14 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
         while (a == b) { a = 1L + rnd.nextInt(n); b = 1L + rnd.nextInt(n) }
         (a, b, 1L)
       }
-      val slow = new GraphState(spark, Planner.triangle)
       val fast = new FastGraphState(spark, Planner.triangle, numParts = 4)
-      slow.initialize(df(preload)); fast.initialize(df(preload))
-      val expect = slow.applyBatch(0L, df(batch)).collect()
-        .map(_.toSeq.map(_.asInstanceOf[Long])).sortBy(_.mkString(","))
-      val got = fast.applyBatch(0L, df(batch)).collect()
-        .map(_.toSeq.map(_.asInstanceOf[Long])).sortBy(_.mkString(","))
-      assert(got.length == expect.length && got.toSeq == expect.toSeq)
+      fast.initialize(df(preload))
+      val expect = BruteForce.rows(BruteForce.delta(preload, batch, Planner.triangle))
+      val got = BruteForce.rowsOf(fast.applyBatch(0L, df(batch)))
+      assert(got.length == expect.length && got == expect)
       // the stress is real: deltas ≫ batch rows
       assert(expect.length > 3 * batch.size)
-      slow.close(); fast.close()
+      fast.close()
     } finally {
       prev match {
         case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
@@ -161,8 +157,8 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     sys.props("spark.graft.consolidate.maxEntries") = "8"
     try {
       val rnd = new scala.util.Random(11)
-      val slow = new GraphState(spark, Planner.triangle)
       val fast = new FastGraphState(spark, Planner.triangle, numParts = 3, maxTail = 5)
+      var before = Seq.empty[(Long, Long, Long)]
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
@@ -172,16 +168,15 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
         val batch = (0 until 300).map { _ =>
           var s = 0L; var d = 0L
           while (s == d) { s = rnd.nextInt(25).toLong; d = rnd.nextInt(25).toLong }
-          Row(s, d, 1L)
+          (s, d, 1L)
         }
-        val b = spark.createDataFrame(batch.asJava, schema)
-        val expect = slow.applyBatch(id.toLong, b).collect()
-          .map(_.toSeq.map(_.asInstanceOf[Long])).sortBy(_.mkString(","))
-        val got = fast.applyBatch(id.toLong, b).collect()
-          .map(_.toSeq.map(_.asInstanceOf[Long])).sortBy(_.mkString(","))
-        assert(got.toSeq == expect.toSeq, s"batch $id diverged under spill cap 8")
+        val b = spark.createDataFrame(batch.map(e => Row(e._1, e._2, e._3)).asJava, schema)
+        val expect = BruteForce.rows(BruteForce.delta(before, batch, Planner.triangle))
+        val got = BruteForce.rowsOf(fast.applyBatch(id.toLong, b))
+        assert(got == expect, s"batch $id diverged under spill cap 8")
+        before ++= batch
       }
-      fast.close(); slow.close()
+      fast.close()
     } finally {
       prev match {
         case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v

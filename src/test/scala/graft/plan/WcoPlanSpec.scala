@@ -2,10 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{BruteForce, SparkTestBase}
+import graft.plan.Planner
 
 /** Pins the Catalyst-integrated WCO operator: identical rows to the
-  * direct library call, the custom node visible at both plan levels, and
+  * brute-force oracle, the custom node visible at both plan levels, and
   * composition with operators above and below the node. */
 class WcoPlanSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -18,14 +19,13 @@ class WcoPlanSpec extends AnyFunSuite with SparkTestBase {
     rows.toDF("src", "dst")
   }
 
-  test("plan-integrated triangles == direct GenericJoin.enumerate") {
+  private def oracle(edges: org.apache.spark.sql.DataFrame) = BruteForce.enumerate(
+    edges.as[(Long, Long)].collect().toSeq.map(e => (e._1, e._2, 1L)), Planner.triangle)
+
+  test("plan-integrated triangles == brute-force oracle") {
     val edges = randomEdges(3000, 60L)
-    val viaPlan = Wco.triangles(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val direct = graft.batch.GenericJoin
-      .enumerate(edges, graft.plan.Planner.triangle).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(viaPlan.nonEmpty && viaPlan == direct)
+    val viaPlan = BruteForce.rowsOf(Wco.triangles(edges))
+    assert(viaPlan.nonEmpty && viaPlan == BruteForce.rows(oracle(edges)))
   }
 
   test("the node is a plan citizen: visible in EXPLAIN, composes above/below") {
@@ -40,11 +40,8 @@ class WcoPlanSpec extends AnyFunSuite with SparkTestBase {
     assert(phys.contains("TriangleEnumerate") && !phys.contains("!TriangleEnumerate"),
       s"expected a valid planned TriangleEnumerate node:\n$phys")
     val got = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expect = graft.batch.GenericJoin
-      .enumerate(edges.where(col("src") < 40L), graft.plan.Planner.triangle)
-      .where(col("x0") % 2 === 0)
-      .groupBy("x0").agg(count(lit(1)).as("n_tri"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expect = oracle(edges.where(col("src") < 40L)).keys.toSeq
+      .filter(_.head % 2 == 0).groupMapReduce(_.head)(_ => 1L)(_ + _)
     assert(got == expect && got.nonEmpty)
   }
 

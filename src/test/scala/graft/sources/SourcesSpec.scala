@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
-import graft.batch.GenericJoin
 import graft.plan.Planner
 
 class SourcesSpec extends AnyFunSuite with SparkTestBase {
@@ -56,11 +55,9 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     val ids = relabeled.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(ids.subsetOf((0L until 4L).toSet)) // dense ids
     // graph isomorphic → same triangle count
-    val before = GenericJoin.countMatches(GenericJoin.enumerate(
-      edges.withColumn("w", org.apache.spark.sql.functions.lit(1L)), Planner.triangle))
-    val after = GenericJoin.countMatches(GenericJoin.enumerate(
-      relabeled.withColumn("w", org.apache.spark.sql.functions.lit(1L)), Planner.triangle))
-    assert(before == after)
+    def triangles(e: org.apache.spark.sql.DataFrame) =
+      graft.fast.FastBatch.enumerateAgg(e, Planner.triangle).first().getLong(1)
+    assert(triangles(edges) == triangles(relabeled))
     // hubs first: node 10 and 30 have degree 3 → new ids 0 and 1
     val dict = Layout.degreeDict(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap

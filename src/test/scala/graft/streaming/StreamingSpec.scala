@@ -105,7 +105,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("parallelism invariance: shuffle partition count does not change totals") {
-    import graft.batch.GenericJoin
+    import graft.fast.FastBatch
     import graft.plan.Planner
     import spark.implicits._
     val r = new scala.util.Random(17)
@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       s2.conf.set("spark.sql.shuffle.partitions", p)
       val df = edges.as[(Long, Long)].collect().toSeq // re-create under s2
       import s2.implicits._
-      GenericJoin.countMatches(GenericJoin.enumerate(df.toDF("src", "dst"), Planner.triangle))
+      FastBatch.enumerateAgg(df.toDF("src", "dst"), Planner.triangle).first().getLong(1)
     }
     assert(counts.distinct.size == 1)
   }
