@@ -23,8 +23,8 @@ object TrainingQueries {
   private def embs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** corpus ∪ planted near-duplicates (shared with Bench/QueryProbe so
-    * every consumer profiles the same augmented corpus). */
+  /** corpus ∪ planted near-duplicates (shared with Bench so every
+    * consumer profiles the same augmented corpus). */
   private[graft] def docs2(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select("doc_id", "text")
     d.unionByName(d.select((col("doc_id") + 100000L).as("doc_id"),

@@ -49,6 +49,13 @@ final class DeltaPack(
   def run(k: Long, forward: Boolean): DeltaPack.Run =
     (if (forward) fwd else rev).getOrElse(k, DeltaPack.emptyRun)
   def keys: Iterator[Long] = fwd.keysIterator ++ rev.keysIterator
+  /** Key `k`'s runs and degree sums in both directions, as a delta for
+    * [[DeltaEngine.mergeAdj]]. */
+  private[fast] def adj(k: Long): Adj = {
+    val f = run(k, forward = true)
+    val r = run(k, forward = false)
+    new Adj(f.vs, f.ws, f.degSum, r.vs, r.ws, r.degSum)
+  }
 }
 
 object DeltaPack {
@@ -57,20 +64,27 @@ object DeltaPack {
   val emptyRun: Run = Run(Array.empty, Array.empty, 0L)
   val empty: DeltaPack = apply(Array.empty)
 
+  /** Consolidates a raw batch (sum weights per (src,dst), drop zeros —
+    * sound by Z-set bilinearity) through [[DeltaEngine.buildAdjs]]. The
+    * forward walk visits sources ascending and each run's destinations
+    * ascending, so it also yields the canonical (src,dst)-ordered seed
+    * list. */
   def apply(raw: Array[(Long, Long, Long)]): DeltaPack = {
-    // consolidate to a canonical seed list (sum weights per (src,dst),
-    // drop zeros, sort) — sound by Z-set bilinearity
-    val edges = raw.groupBy(e => (e._1, e._2)).iterator
-      .map { case ((s, d), es) => (s, d, es.iterator.map(_._3).sum) }
-      .filter(_._3 != 0L)
-      .toArray.sortBy(e => (e._1, e._2))
-    def group(keyOf: ((Long, Long, Long)) => Long,
-              valOf: ((Long, Long, Long)) => Long): Map[Long, Run] =
-      edges.groupBy(keyOf).map { case (k, es) =>
-        val run = IndexState.consolidate(es.map(e => (valOf(e), e._3)))
-        k -> Run(run.map(_._1), run.map(_._2), es.iterator.map(_._3).sum)
+    val f = new DeltaEngine.Triples(raw.length)
+    val r = new DeltaEngine.Triples(raw.length)
+    raw.foreach { case (s, d, w) => f.add(s, d, w); r.add(d, s, w) }
+    val edges = Array.newBuilder[(Long, Long, Long)]
+    val fwd = Map.newBuilder[Long, Run]
+    val rev = Map.newBuilder[Long, Run]
+    DeltaEngine.buildAdjs(f, r) { (k, a) =>
+      if (a.fwdVs.nonEmpty) {
+        fwd += k -> Run(a.fwdVs, a.fwdWs, a.degFwd)
+        var i = 0
+        while (i < a.fwdVs.length) { edges += ((k, a.fwdVs(i), a.fwdWs(i))); i += 1 }
       }
-    new DeltaPack(edges, group(_._1, _._2), group(_._2, _._1))
+      if (a.revVs.nonEmpty) rev += k -> Run(a.revVs, a.revWs, a.degRev)
+    }
+    new DeltaPack(edges.result(), fwd.result(), rev.result())
   }
 }
 
@@ -311,7 +325,7 @@ final class DeltaEngine(
     * Replaces a parallelize + E count exchanges + a propose exchange — the
     * per-batch stage floor that capped core-count scaling at small batch
     * sizes. Requires the mirror (`driverDegrees=true`); without it
-    * [[seedBlocksFromBcast]] + the count chain serve the same role with a
+    * [[seedPfxBlocks]] + the count chain serve the same role with a
     * sharded degree hop instead of O(|V|) driver state. */
   private def seedPropose(sc: SparkContext, shards: RDD[Shard.T],
                           hot: DeltaEngine.HotProvider,
@@ -401,7 +415,7 @@ final class DeltaEngine(
                 val tPid =
                   if (maxE0 >= 2) isectPid(stage0, h, r, i, p, 0, 2, 0, 0)
                   else pid
-                putProp(bb, tPid, r, w, i, p, 0, 2, vs, ws, from, until)
+                putProp(bb, tPid, r, w, i, p, 0, 2, vs, from, ws, from, until - from)
               }
             }
           }
@@ -411,32 +425,24 @@ final class DeltaEngine(
     }
   }
 
-  /** Distributed seed phase (no driver degree mirror, NO collect job): each
-    * partition emits its deterministic share of the broadcast seed set as
-    * level-0 prefix records routed for count slot 0; seed degrees are then
-    * gathered by the count-chain exchanges against their owning shards (one
-    * hop per extender slot) and the argmin routes propose. O(1) driver work
-    * per batch and no O(|V|) driver state — the scale form for graphs whose
-    * key set outgrows the driver's degree mirror. */
-  private def seedBlocksFromBcast(shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
-                                  dp: Broadcast[DeltaPack]): RDD[(Int, Array[Long])] = {
+  /** The one level-0 seed writer, run inside a partition: every edge of
+    * `edges` (zero weights skipped) becomes a stage-0 prefix record
+    * [rel, w, minDeg = ∞, minExt = -1, src, dst] routed for count slot 0,
+    * for relations 0 until `rels` (all relations for a delta step, relation
+    * 0 alone for batch enumeration, whose plan enforces every relation).
+    * Seed degrees are then gathered by the count chain against their
+    * owning shards — no driver degree mirror needed. */
+  private def seedPfxBlocks(edges: Iterator[(Long, Long, Long)], h: DeltaEngine.HotMap,
+                            rels: Int): Iterator[(Int, Array[Long])] = {
     val stage0 = plans.map(_.stages(0))
-    val engine = this
-    val np = numParts
-    shards.mapPartitionsWithIndex { (pid, it) =>
-      it.next() // shard content unused — only the partition's identity
-      val d = dp.value
-      val h = hot.value
-      val p = new Array[Long](2)
-      boundedIt(np, Iterator.range(0, d.edges.length).filter(_ % np == pid)) { (j, bb) =>
-        val e = d.edges(j)
+    val p = new Array[Long](2)
+    boundedIt(numParts, edges) { (e, bb) =>
+      if (e._3 != 0L) {
         p(0) = e._1; p(1) = e._2
         var r = 0
-        while (r < engine.numRels) {
-          if (engine.predsOk(r, p, 2)) {
-            val tPid = engine.countPid(stage0, h, r, p, 0, 2, 0, 0)
-            putPfx(bb, tPid, r, e._3, Long.MaxValue, -1, p, 0, 2)
-          }
+        while (r < rels) {
+          if (predsOk(r, p, 2))
+            putPfx(bb, countPid(stage0, h, r, p, 0, 2, 0, 0), r, e._3, Long.MaxValue, -1, p, 0, 2)
           r += 1
         }
       }
@@ -528,7 +534,7 @@ final class DeltaEngine(
                 val pid =
                   if (maxE >= 2) engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, 0)
                   else curPid
-                putProp(bb, pid, rel, w, minExt, block, pOff, pLen, vs, ws, from, until)
+                putProp(bb, pid, rel, w, minExt, block, pOff, pLen, vs, from, ws, from, until - from)
               }
               off += rec
             }
@@ -585,11 +591,11 @@ final class DeltaEngine(
                   val (nvs, nws) = DeltaEngine.intersectRunsAt(block, cOff, wOff, nc, avs, aws)
                   if (nvs.length > 0) {
                     val pid = engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, j + 1)
-                    putProp(bb, pid, rel, w, minExt, block, pOff, pLen, nvs, nws, 0, nvs.length)
+                    putProp(bb, pid, rel, w, minExt, block, pOff, pLen, nvs, 0, nws, 0, nvs.length)
                   }
                 } else {
                   val pid = engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, j + 1)
-                  putPropFromBlock(bb, pid, rel, w, minExt, block, pOff, pLen, block, cOff, wOff, nc)
+                  putProp(bb, pid, rel, w, minExt, block, pOff, pLen, block, cOff, block, wOff, nc)
                 }
                 off = wOff + nc
               }
@@ -674,38 +680,60 @@ final class DeltaEngine(
   def deltaStep(sc: SparkContext, shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
                 dp: Broadcast[DeltaPack], dpLocal: DeltaPack,
                 degMirror: Option[(Long, Boolean) => Long] = None): RDD[(ArraySeq[Long], Long)] = {
-    val inverses = plans.map(_.inverse.toArray)
     if (numAttrs == 2) {
-      // single-relation motif: the seeds ARE the matches
       val seeds = dpLocal.edges
       val nSlices = math.max(1, math.min(numParts, seeds.length / 64 + 1))
-      return sc.parallelize(ArraySeq.unsafeWrapArray(seeds), nSlices)
-        .flatMap { case (s, d, w) =>
-          (0 until numRels).iterator
-            .map(r => Pfx(r, Array(s, d), w, Long.MaxValue, -1))
-            .filter(pfx => predsOk(pfx.rel, pfx.p, 2))
-        }
-        .map { pfx =>
-          val inv = inverses(pfx.rel)
-          (ArraySeq.unsafeWrapArray(Array(pfx.p(inv(0)), pfx.p(inv(1)))), pfx.w)
-        }
-        .reduceByKey(new HashPartitioner(numParts), _ + _)
-        .filter(_._2 != 0L)
+      return edgeMatches(sc.parallelize(ArraySeq.unsafeWrapArray(seeds), nSlices))
     }
     // level 0 fused over the broadcast seed set (driver degree mirror), or
-    // fully distributed via the count chain when the mirror is disabled;
-    // levels ≥ 1 over the distributed prefix stream
-    var pr: RDD[Prop] = intersectChain(shards, shards, hot, dp,
-      degMirror match {
-        case Some(f) => seedPropose(sc, shards, hot, dp, dpLocal, f)
-        case None =>
-          countPropose(shards, shards, hot, dp, seedBlocksFromBcast(shards, hot, dp), 0)
-      }, 0)
-    for (s <- 1 to numAttrs - 3) {
-      pr = intersectChain(shards, shards, hot, dp,
-        countPropose(shards, shards, hot, dp, explodeToPfxBlocks(pr, hot, s - 1), s), s)
+    // fully distributed via the count chain when the mirror is disabled:
+    // each partition seeds its deterministic stride of the broadcast batch
+    val level0 = degMirror match {
+      case Some(f) => seedPropose(sc, shards, hot, dp, dpLocal, f)
+      case None =>
+        val engine = this
+        val np = numParts
+        val seeds = shards.mapPartitionsWithIndex { (pid, it) =>
+          it.next() // shard content unused — only the partition's identity
+          val d = dp.value
+          engine.seedPfxBlocks(Iterator.range(pid, d.edges.length, np).map(d.edges),
+            hot.value, engine.numRels)
+        }
+        countPropose(shards, shards, hot, dp, seeds, 0)
     }
-    consolidateProps(pr)
+    consolidateProps(extend(shards, shards, hot, dp, level0))
+  }
+
+  /** The one level loop: intersect level 0's proposal blocks, then run
+    * count → propose → intersect for every later level. `pre`/`post` are
+    * the state generations read by exclusive ("lt") and inclusive ("le")
+    * constraints (the same RDD outside the bulk absorb). Returns the last
+    * level's validated proposals. */
+  private def extend(pre: RDD[Shard.T], post: RDD[Shard.T], hot: DeltaEngine.HotProvider,
+                     dp: Broadcast[DeltaPack], level0: RDD[(Int, Array[Long])]): RDD[Prop] = {
+    var pr = intersectChain(pre, post, hot, dp, level0, 0)
+    for (s <- 1 to numAttrs - 3)
+      pr = intersectChain(pre, post, hot, dp,
+        countPropose(pre, post, hot, dp, explodeToPfxBlocks(pr, hot, s - 1), s), s)
+    pr
+  }
+
+  /** Single-relation motif (no extension stage): the consolidated seeds ARE
+    * the matches, one per relation whose predicates they pass. */
+  private def edgeMatches(seeds: RDD[(Long, Long, Long)]): RDD[(ArraySeq[Long], Long)] = {
+    val inverses = plans.map(_.inverse.toArray)
+    val engine = this
+    seeds.flatMap { case (s, d, w) =>
+      val p = Array(s, d)
+      (0 until engine.numRels).iterator
+        .filter(r => engine.predsOk(r, p, 2))
+        .map { r =>
+          val inv = inverses(r)
+          (ArraySeq.unsafeWrapArray(Array(p(inv(0)), p(inv(1)))), w)
+        }
+    }
+      .reduceByKey(new HashPartitioner(numParts), _ + _)
+      .filter(_._2 != 0L)
   }
 
   /** Final level: explode straight into per-target-partition PACKED blocks
@@ -773,34 +801,6 @@ final class DeltaEngine(
       }, preservesPartitioning = false)
   }
 
-  /** Seed blocks for the DISTRIBUTED delta step: every (batch edge, motif
-    * relation) pair becomes a level-0 prefix record, routed for stage 0's
-    * count slot 0 — [[seedBlocksFromBcast]]'s RDD-input sibling, and
-    * [[batchSeedBlocks]] generalized from relation 0 to all relations. */
-  private def deltaSeedBlocks(batch: RDD[(Long, Long, Long)],
-                              hot: DeltaEngine.HotProvider): RDD[(Int, Array[Long])] = {
-    val stage0 = plans.map(_.stages(0))
-    val engine = this
-    val np = numParts
-    batch.mapPartitions { it =>
-      val h = hot.value
-      val p = new Array[Long](2)
-      boundedIt(np, it) { (e, bb) =>
-        if (e._3 != 0L) {
-          p(0) = e._1; p(1) = e._2
-          var r = 0
-          while (r < engine.numRels) {
-            if (engine.predsOk(r, p, 2)) {
-              val pid = engine.countPid(stage0, h, r, p, 0, 2, 0, 0)
-              putPfx(bb, pid, r, e._3, Long.MaxValue, -1, p, 0, 2)
-            }
-            r += 1
-          }
-        }
-      }
-    }
-  }
-
   /** Distributed delta step for LARGE batches — drops every |batch| ≪
     * |state| assumption of [[deltaStep]]: the CONSOLIDATED batch stays an
     * RDD (never collected, never broadcast), seeds flow through the count
@@ -823,22 +823,7 @@ final class DeltaEngine(
   def deltaStepDistributed(sc: SparkContext, preShards: RDD[Shard.T],
                            postShards: RDD[Shard.T],
                            batch: RDD[(Long, Long, Long)]): RDD[(ArraySeq[Long], Long)] = {
-    val inverses = plans.map(_.inverse.toArray)
-    if (numAttrs == 2) {
-      // single-relation motif: the consolidated seeds ARE the matches
-      val engine = this
-      return batch.flatMap { case (s, d, w) =>
-        (0 until engine.numRels).iterator
-          .filter(r => engine.predsOk(r, Array(s, d), 2))
-          .map { r =>
-            val inv = inverses(r)
-            val p = Array(s, d)
-            (ArraySeq.unsafeWrapArray(Array(p(inv(0)), p(inv(1)))), w)
-          }
-      }
-        .reduceByKey(new HashPartitioner(numParts), _ + _)
-        .filter(_._2 != 0L)
-    }
+    if (numAttrs == 2) return edgeMatches(batch)
     // degree-only hub broadcast: COUNT hops on hub keys scatter and answer
     // from these O(hotK)-scalar structures; adjacency hops stay key-routed
     // (degOnly entries are invisible to adjAt). Replaces the earlier
@@ -848,36 +833,22 @@ final class DeltaEngine(
       DeltaEngine.buildDegOnlyHot(preShards, batch, 8 * numParts)
     val hot = DeltaEngine.BcastHot(sc.broadcast(degHot))
     val dp = sc.broadcast(degPack)
-    var pr: RDD[Prop] = intersectChain(preShards, postShards, hot, dp,
-      countPropose(preShards, postShards, hot, dp, deltaSeedBlocks(batch, hot), 0), 0)
-    for (s <- 1 to numAttrs - 3) {
-      pr = intersectChain(preShards, postShards, hot, dp,
-        countPropose(preShards, postShards, hot, dp,
-          explodeToPfxBlocks(pr, hot, s - 1), s), s)
-    }
-    consolidateProps(pr)
+    val engine = this
+    val seeds = batch.mapPartitions(it => engine.seedPfxBlocks(it, hot.value, engine.numRels))
+    consolidateProps(extend(preShards, postShards, hot, dp,
+      countPropose(preShards, postShards, hot, dp, seeds, 0)))
   }
 
   /** Folds a distributed consolidated batch into the shards WITHOUT any
     * driver materialization or broadcast: the batch is built into delta
     * shards under the same partitioner, then merged key-by-key with the
-    * base (same merge rules as [[updateShards]]). Partitioning preserved. */
+    * base by [[DeltaEngine.mergeAdj]]. Partitioning preserved. */
   def updateShardsDistributed(shards: RDD[Shard.T],
                               batch: RDD[(Long, Long, Long)]): RDD[Shard.T] =
     shards.zipPartitions(buildShards(batch), preservesPartitioning = true) { (a, b) =>
-      val base = a.next()
-      val delta = b.next()
-      var next = base
-      delta.foreach { case (k, d) =>
-        val old = next.getOrElse(k, DeltaEngine.emptyAdj)
-        val (fvs, fws) =
-          if (d.fwdVs.isEmpty) (old.fwdVs, old.fwdWs)
-          else DeltaEngine.mergeRuns(old.fwdVs, old.fwdWs, d.fwdVs, d.fwdWs)
-        val (rvs, rws) =
-          if (d.revVs.isEmpty) (old.revVs, old.revWs)
-          else DeltaEngine.mergeRuns(old.revVs, old.revWs, d.revVs, d.revWs)
-        val adj = new Adj(fvs, fws, old.degFwd + d.degFwd,
-          rvs, rws, old.degRev + d.degRev)
+      var next = a.next()
+      b.next().foreach { case (k, d) =>
+        val adj = DeltaEngine.mergeAdj(next.getOrElse(k, DeltaEngine.emptyAdj), d)
         next =
           if (adj.fwdVs.isEmpty && adj.revVs.isEmpty) next.removed(k)
           else next.updated(k, adj)
@@ -886,30 +857,6 @@ final class DeltaEngine(
     }
 
   // ---- batch (static-index) enumeration ----
-
-  /** Seed blocks for batch enumeration: the FULL consolidated edge RDD as
-    * relation 0's bindings, routed for stage 0's count slot 0 — the
-    * distributed complement of `seedPropose`'s broadcast regime. */
-  private def batchSeedBlocks(edges: RDD[(Long, Long, Long)],
-                              hot: DeltaEngine.HotProvider): RDD[(Int, Array[Long])] = {
-    val stage0 = plans.map(_.stages(0))
-    val engine = this
-    val np = numParts
-    edges.mapPartitions { it =>
-      val h = hot.value
-      val p = new Array[Long](2)
-      boundedIt(np, it) { (e, bb) =>
-        val (s0, d0, w) = e
-        if (w != 0L) {
-          p(0) = s0; p(1) = d0
-          if (engine.predsOk(0, p, 2)) {
-            val pid = engine.countPid(stage0, h, 0, p, 0, 2, 0, 0)
-            putPfx(bb, pid, 0, w, Long.MaxValue, -1, p, 0, 2)
-          }
-        }
-      }
-    }
-  }
 
   /** Batch enumeration over a static CONSOLIDATED edge set against
     * initialized shards — the fast-engine analog of the reference's
@@ -920,26 +867,19 @@ final class DeltaEngine(
     * assumptions apply. Relation 0's plan alone enforces every motif
     * relation, and one pipeline over a consolidated Z-set emits each
     * binding exactly once, so the output needs NO consolidation shuffle. */
-  private def batchProps(shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
-                         dp: Broadcast[DeltaPack],
-                         edges: RDD[(Long, Long, Long)]): RDD[Prop] = {
-    require(numAttrs >= 3, "batch enumeration needs at least one extension stage")
-    var pr: RDD[Prop] = null
-    for (s <- 0 to numAttrs - 3) {
-      val cur =
-        if (s == 0) batchSeedBlocks(edges, hot)
-        else explodeToPfxBlocks(pr, hot, s - 1)
-      pr = intersectChain(shards, shards, hot, dp,
-        countPropose(shards, shards, hot, dp, cur, s), s)
-    }
-    pr
+  private def staticMatches(shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
+                            dp: Broadcast[DeltaPack],
+                            edges: RDD[(Long, Long, Long)]): RDD[Prop] = {
+    val engine = this
+    val seeds = edges.mapPartitions(it => engine.seedPfxBlocks(it, hot.value, 1))
+    extend(shards, shards, hot, dp, countPropose(shards, shards, hot, dp, seeds, 0))
   }
 
   /** Partition-local count→argmin→propose→intersect over ONE seed against a
     * FULL in-memory index — the zero-exchange batch pipeline used when the
     * consolidated graph fits the broadcast budget (see
     * [[FastBatch.localIndexMaxEdges]]). Lookup math is identical to the
-    * sharded exchange pipeline ([[batchProps]]): same argmin/pruneZero
+    * sharded exchange pipeline ([[staticMatches]]): same argmin/pruneZero
     * count, same range-predicate gallop slice at propose, same weighted
     * run intersections, same predsOk/predsOkWithLast gates — only the
     * routing exchanges are gone, because every key resolves in `h`.
@@ -1213,7 +1153,7 @@ final class DeltaEngine(
         }
       }
     val inv = plans(0).inverse.toArray
-    batchProps(shards, hot, dp, edges).mapPartitions { it =>
+    staticMatches(shards, hot, dp, edges).mapPartitions { it =>
       val writer = new UnsafeRowWriter(n + 1)
       it.flatMap { prop =>
         var i = 0
@@ -1255,7 +1195,7 @@ final class DeltaEngine(
           }
           Iterator.single((cnt, tot))
         }
-      else batchProps(shards, hot, dp, edges).mapPartitions { it =>
+      else staticMatches(shards, hot, dp, edges).mapPartitions { it =>
         var cnt = 0L; var tot = 0L
         while (it.hasNext) {
           val prop = it.next()
@@ -1278,22 +1218,11 @@ final class DeltaEngine(
     * /root/reference/src/index.rs:226-260). Partitioning preserved. */
   def updateShards(shards: RDD[Shard.T], dp: Broadcast[DeltaPack]): RDD[Shard.T] =
     shards.mapPartitionsWithIndex({ (pid, it) =>
-      val shard = it.next()
+      var next = it.next()
       val d = dp.value
-      var next = shard
       val touched = d.keys.filter(k => partitioner.getPartition(k) == pid).toSet
       for (k <- touched) {
-        val old = next.getOrElse(k, DeltaEngine.emptyAdj)
-        val fr = d.run(k, forward = true)
-        val rr = d.run(k, forward = false)
-        val (fvs, fws) =
-          if (fr.vs.isEmpty) (old.fwdVs, old.fwdWs)
-          else DeltaEngine.mergeRuns(old.fwdVs, old.fwdWs, fr.vs, fr.ws)
-        val (rvs, rws) =
-          if (rr.vs.isEmpty) (old.revVs, old.revWs)
-          else DeltaEngine.mergeRuns(old.revVs, old.revWs, rr.vs, rr.ws)
-        val adj = new Adj(fvs, fws, old.degFwd + fr.degSum,
-          rvs, rws, old.degRev + rr.degSum)
+        val adj = DeltaEngine.mergeAdj(next.getOrElse(k, DeltaEngine.emptyAdj), d.adj(k))
         next =
           if (adj.fwdVs.isEmpty && adj.revVs.isEmpty) next.removed(k)
           else next.updated(k, adj)
@@ -1301,31 +1230,20 @@ final class DeltaEngine(
       Iterator.single(next)
     }, preservesPartitioning = true)
 
-  /** Builds sharded state from a consolidated edge RDD. */
+  /** Builds sharded state from an edge RDD (duplicates and zero weights
+    * are consolidated by [[DeltaEngine.buildAdjs]], per partition). */
   def buildShards(edges: RDD[(Long, Long, Long)]): RDD[Shard.T] =
     edges.flatMap { case (s, d, w) =>
       Iterator((s, (d, w, true)), (d, (s, w, false)))
     }
       .partitionBy(partitioner)
       .mapPartitions({ it =>
-        val fwd = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-        val rev = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-        for ((k, (v, w, isFwd)) <- it) {
-          val m = if (isFwd) fwd else rev
-          m.getOrElseUpdate(k, scala.collection.mutable.ArrayBuffer.empty) += ((v, w))
-        }
-        var shard = Shard.empty
-        for (k <- (fwd.keySet ++ rev.keySet)) {
-          val f = IndexState.consolidate(fwd.getOrElse(k, Nil).toArray)
-          val r = IndexState.consolidate(rev.getOrElse(k, Nil).toArray)
-          val adj = new Adj(
-            f.map(_._1), f.map(_._2), f.iterator.map(_._2).sum,
-            r.map(_._1), r.map(_._2), r.iterator.map(_._2).sum)
-          if (adj.fwdVs.nonEmpty || adj.revVs.nonEmpty) shard = shard.updated(k, adj)
-        }
-        Iterator.single(shard)
+        val fwd = new DeltaEngine.Triples(1 << 10)
+        val rev = new DeltaEngine.Triples(1 << 10)
+        for ((k, (v, w, isFwd)) <- it) (if (isFwd) fwd else rev).add(k, v, w)
+        val shard = scala.collection.immutable.HashMap.newBuilder[Long, Adj]
+        DeltaEngine.buildAdjs(fwd, rev)((k, adj) => shard.addOne(k -> adj))
+        Iterator.single(shard.result())
       }, preservesPartitioning = true)
 
   /** Empty sharded state (numParts empty maps, correctly partitioned). */
@@ -1476,32 +1394,34 @@ object DeltaEngine {
     }
   }
 
-  /** Folds one batch delta into a hot snapshot, copy-on-write (same merge
-    * rules as [[DeltaEngine.updateShards]]) — replica membership is fixed;
-    * only existing keys' runs are advanced. Used by the driver (its local
-    * copy) and by [[HotCache]] (executor copies), keeping both in lockstep
-    * with the shards. */
+  /** Folds one batch delta into a hot snapshot, copy-on-write, with
+    * [[mergeAdj]] — replica membership is fixed; only existing keys' runs
+    * are advanced. Used by the driver (its local copy) and by [[HotCache]]
+    * (executor copies), keeping both in lockstep with the shards. */
   def foldHot(hot: HotMap, dp: DeltaPack): HotMap = {
     if (hot.isEmpty) return hot
     val next = new HotMap(hot)
     val it = hot.keySet().iterator()
     while (it.hasNext) {
       val k = it.next()
-      val fr = dp.run(k, forward = true)
-      val rr = dp.run(k, forward = false)
-      if (fr.vs.nonEmpty || rr.vs.nonEmpty) {
-        val old = next.get(k)
-        val (fvs, fws) =
-          if (fr.vs.isEmpty) (old.fwdVs, old.fwdWs)
-          else mergeRuns(old.fwdVs, old.fwdWs, fr.vs, fr.ws)
-        val (rvs, rws) =
-          if (rr.vs.isEmpty) (old.revVs, old.revWs)
-          else mergeRuns(old.revVs, old.revWs, rr.vs, rr.ws)
-        next.put(k, new Adj(fvs, fws, old.degFwd + fr.degSum,
-          rvs, rws, old.degRev + rr.degSum))
-      }
+      val d = dp.adj(k)
+      if (d.fwdVs.nonEmpty || d.revVs.nonEmpty) next.put(k, mergeAdj(next.get(k), d))
     }
     next
+  }
+
+  /** The one run merge: folds a delta's forward and reverse runs and
+    * degree sums into `old` (runs merged by [[mergeRuns]], so equal values
+    * sum and zeros drop). Whether an emptied key stays is the caller's
+    * rule. */
+  private[fast] def mergeAdj(old: Adj, d: Adj): Adj = {
+    val (fvs, fws) =
+      if (d.fwdVs.isEmpty) (old.fwdVs, old.fwdWs)
+      else mergeRuns(old.fwdVs, old.fwdWs, d.fwdVs, d.fwdWs)
+    val (rvs, rws) =
+      if (d.revVs.isEmpty) (old.revVs, old.revWs)
+      else mergeRuns(old.revVs, old.revWs, d.revVs, d.revWs)
+    new Adj(fvs, fws, old.degFwd + d.degFwd, rvs, rws, old.degRev + d.degRev)
   }
 
   /** Selects the `hotK` largest adjacencies (by stored row count) from the
@@ -1538,83 +1458,82 @@ object DeltaEngine {
     * for the zero-exchange local batch pipeline: every key's fwd/rev runs
     * are present, so [[DeltaEngine.enumerateLocalRows]] never touches a
     * shard. Size-gated by the caller ([[FastBatch.localIndexMaxEdges]]) —
-    * ~32 bytes per edge across both directions. */
-  def buildFullIndex(edges: Iterator[(Long, Long, Long)]): HotMap = {
-    var n = 0
-    var cap = 1 << 12
-    var fs = new Array[Long](cap); var fd = new Array[Long](cap); var fw = new Array[Long](cap)
-    while (edges.hasNext) {
-      val e = edges.next()
-      if (n == cap) {
-        cap <<= 1
-        fs = java.util.Arrays.copyOf(fs, cap)
-        fd = java.util.Arrays.copyOf(fd, cap)
-        fw = java.util.Arrays.copyOf(fw, cap)
-      }
-      fs(n) = e._1; fd(n) = e._2; fw(n) = e._3; n += 1
-    }
-    buildFullIndexPacked(
-      java.util.Arrays.copyOf(fs, n), java.util.Arrays.copyOf(fd, n),
-      java.util.Arrays.copyOf(fw, n))
-  }
-
-  /** Packed-array form of [[buildFullIndex]] — the caller's arrays are NOT
-    * mutated (sorting happens on copies), so they can keep serving as the
-    * broadcast seed list.
-    *
-    * Primitive-array build: sort both directions by (key, value), then
-    * slice consolidated runs in one merge walk. The previous
-    * HashMap[Long, ArrayBuffer[(Long,Long)]] form allocated >2 boxed
-    * tuples per edge and dominated the local regime's driver-side build
-    * (measured 0.4-1.1s warm / 3.2s cold for a 557K-edge graph; this form
-    * is ~20x less allocation and sorts primitives, cutting both the warm
-    * cost and the first-call JIT/GC debt that lands on the bench's first
-    * queries). */
+    * ~32 bytes per edge across both directions. The caller's arrays are
+    * NOT mutated ([[buildAdjs]] sorts copies), so they can keep serving as
+    * the broadcast seed list. */
   def buildFullIndexPacked(sa: Array[Long], da: Array[Long],
                            wa: Array[Long]): HotMap = {
     val n = sa.length
-    val fs = java.util.Arrays.copyOf(sa, n)
-    val fd = java.util.Arrays.copyOf(da, n)
-    val fw = java.util.Arrays.copyOf(wa, n)
-    val rs = java.util.Arrays.copyOf(da, n)
-    val rd = java.util.Arrays.copyOf(sa, n)
-    val rw = java.util.Arrays.copyOf(wa, n)
-    sortByKeyValue(fs, fd, fw, n) // fwd runs: key = src, value = dst
-    sortByKeyValue(rs, rd, rw, n) // rev runs: key = dst, value = src
+    def copy(a: Array[Long]) = java.util.Arrays.copyOf(a, n)
     val m = new HotMap()
+    buildAdjs(new Triples(copy(sa), copy(da), copy(wa), n),
+      new Triples(copy(da), copy(sa), copy(wa), n))((k, a) => m.put(k, a))
+    m
+  }
+
+  /** Parallel (key, value, weight) arrays holding `n` triples, growable by
+    * [[add]]: one direction's input to [[buildAdjs]]. */
+  private[fast] final class Triples(var ks: Array[Long], var vs: Array[Long],
+                                    var ws: Array[Long], var n: Int) {
+    def this(cap: Int) = this(new Array[Long](cap), new Array[Long](cap), new Array[Long](cap), 0)
+    def add(k: Long, v: Long, w: Long): Unit = {
+      if (n == ks.length) {
+        val cap = math.max(16, n << 1)
+        ks = java.util.Arrays.copyOf(ks, cap)
+        vs = java.util.Arrays.copyOf(vs, cap)
+        ws = java.util.Arrays.copyOf(ws, cap)
+      }
+      ks(n) = k; vs(n) = v; ws(n) = w; n += 1
+    }
+  }
+
+  /** The one run builder (the reference's `consolidate_tail`,
+    * reference src/index.rs:197-219): sorts the forward and reverse
+    * triples IN PLACE by (key, value), then walks both in one merge over
+    * ascending keys, slicing each key's consolidated, value-sorted runs
+    * (equal values summed, zero weights dropped) and their weight sums
+    * into one [[Adj]] for `emit`. Keys whose runs are both empty are
+    * skipped.
+    *
+    * Primitive arrays throughout: a boxed HashMap[Long,
+    * ArrayBuffer[(Long,Long)]] build allocates >2 tuples per edge (measured
+    * 0.4-1.1s warm / 3.2s cold for a 557K-edge local index; this form is
+    * ~20x less allocation and sorts primitives). */
+  private[fast] def buildAdjs(fwd: Triples, rev: Triples)(emit: (Long, Adj) => Unit): Unit = {
+    val nf = fwd.n
+    val nr = rev.n
+    sortByKeyValue(fwd.ks, fwd.vs, fwd.ws, nf)
+    sortByKeyValue(rev.ks, rev.vs, rev.ws, nr)
     var i = 0
     var j = 0
-    while (i < n || j < n) {
+    while (i < nf || j < nr) {
       val k =
-        if (i >= n) rs(j)
-        else if (j >= n) fs(i)
-        else math.min(fs(i), rs(j))
+        if (i >= nf) rev.ks(j)
+        else if (j >= nr) fwd.ks(i)
+        else math.min(fwd.ks(i), rev.ks(j))
       var fVs: Array[Long] = emptyRunArray; var fWs: Array[Long] = emptyRunArray; var fDeg = 0L
-      if (i < n && fs(i) == k) {
+      if (i < nf && fwd.ks(i) == k) {
         var end = i
-        while (end < n && fs(end) == k) end += 1
-        val run = consolidateRun(fd, fw, i, end)
+        while (end < nf && fwd.ks(end) == k) end += 1
+        val run = consolidateRun(fwd.vs, fwd.ws, i, end)
         fVs = run._1; fWs = run._2; fDeg = run._3
         i = end
       }
       var rVs: Array[Long] = emptyRunArray; var rWs: Array[Long] = emptyRunArray; var rDeg = 0L
-      if (j < n && rs(j) == k) {
+      if (j < nr && rev.ks(j) == k) {
         var end = j
-        while (end < n && rs(end) == k) end += 1
-        val run = consolidateRun(rd, rw, j, end)
+        while (end < nr && rev.ks(end) == k) end += 1
+        val run = consolidateRun(rev.vs, rev.ws, j, end)
         rVs = run._1; rWs = run._2; rDeg = run._3
         j = end
       }
-      if (fVs.nonEmpty || rVs.nonEmpty)
-        m.put(k, new Adj(fVs, fWs, fDeg, rVs, rWs, rDeg))
+      if (fVs.nonEmpty || rVs.nonEmpty) emit(k, new Adj(fVs, fWs, fDeg, rVs, rWs, rDeg))
     }
-    m
   }
 
   /** Consolidates the sorted [from,until) slice of a (value, weight) run:
     * values are already ascending; sums weights of equal values and drops
-    * zero-weight entries (the same contract as [[IndexState.consolidate]]).
-    * Returns (values, weights, weightSum). */
+    * zero-weight entries. Returns (values, weights, weightSum). */
   private def consolidateRun(vs: Array[Long], ws: Array[Long],
                              from: Int, until: Int): (Array[Long], Array[Long], Long) = {
     val outV = new Array[Long](until - from)
@@ -1756,8 +1675,6 @@ object DeltaEngine {
     }
     h
   }
-
-  def scatterKey(p: Array[Long], salt: Int): Long = scatterKeyAt(p, 0, p.length, salt)
 
   /** Per-target-partition packed long-block builder: records are appended
     * into ≤`chunkLongs`-long chunks (256KB — big enough for memcpy-speed
@@ -1905,12 +1822,12 @@ object DeltaEngine {
   }
 
   /** Append a proposal record [rel, w, minExt, p×pLen, nc, cands, candWs]
-    * from candidate arrays sliced to [from, until). */
+    * whose `nc` candidates are read from `vs(vOff..)` and weights from
+    * `ws(wOff..)` (candidate arrays or a source block window alike). */
   private[fast] def putProp(bb: BlockBuf, pid: Int, rel: Int, w: Long, minExt: Int,
                             p: Array[Long], pOff: Int, pLen: Int,
-                            vs: Array[Long], ws: Array[Long],
-                            from: Int, until: Int): Unit = {
-    val nc = until - from
+                            vs: Array[Long], vOff: Int, ws: Array[Long], wOff: Int,
+                            nc: Int): Unit = {
     val b = bb.reserve(pid, 3 + pLen + 1 + 2 * nc)
     var o = bb.off(pid)
     b(o) = rel; b(o + 1) = w; b(o + 2) = minExt
@@ -1919,27 +1836,8 @@ object DeltaEngine {
     o += pLen
     b(o) = nc
     o += 1
-    System.arraycopy(vs, from, b, o, nc)
-    System.arraycopy(ws, from, b, o + nc, nc)
-    bb.advance(pid, 3 + pLen + 1 + 2 * nc)
-  }
-
-  /** Append a proposal record whose candidates live in a source BLOCK at
-    * [cOff, cOff+nc) / [wOff, wOff+nc) (pass-through without re-slicing). */
-  private[fast] def putPropFromBlock(bb: BlockBuf, pid: Int, rel: Int, w: Long, minExt: Int,
-                                     p: Array[Long], pOff: Int, pLen: Int,
-                                     src: Array[Long],
-                                     cOff: Int, wOff: Int, nc: Int): Unit = {
-    val b = bb.reserve(pid, 3 + pLen + 1 + 2 * nc)
-    var o = bb.off(pid)
-    b(o) = rel; b(o + 1) = w; b(o + 2) = minExt
-    o += 3
-    System.arraycopy(p, pOff, b, o, pLen)
-    o += pLen
-    b(o) = nc
-    o += 1
-    System.arraycopy(src, cOff, b, o, nc)
-    System.arraycopy(src, wOff, b, o + nc, nc)
+    System.arraycopy(vs, vOff, b, o, nc)
+    System.arraycopy(ws, wOff, b, o + nc, nc)
     bb.advance(pid, 3 + pLen + 1 + 2 * nc)
   }
 
@@ -1965,14 +1863,10 @@ object DeltaEngine {
     out.iterator
   }
 
-  /** Prefix in flight: relation id, bound values (reordered positions),
-    * Z-set weight, and the running (min degree, argmin extender).
+  /** Proposed-but-unexploded extension set: the factorized intermediate the
+    * reference also carries (proposals stay a list until validated).
     * Top-level (NOT inner to the engine) so shuffled records never drag an
     * `$outer` engine reference through serialization. */
-  final case class Pfx(rel: Int, p: Array[Long], w: Long, minDeg: Long, minExt: Int)
-
-  /** Proposed-but-unexploded extension set: the factorized intermediate the
-    * reference also carries (proposals stay a list until validated). */
   final case class Prop(rel: Int, p: Array[Long], w: Long, minExt: Int,
                         cands: Array[Long], candWs: Array[Long])
 
@@ -2022,10 +1916,6 @@ object DeltaEngine {
     (java.util.Arrays.copyOf(vs, o), java.util.Arrays.copyOf(ws, o))
   }
 
-  /** Weighted intersection of a candidate run against an index run —
-    * galloping the index side when candidates are few (the reference's
-    * adaptive intersect, /root/reference/static_graph/src/graph.rs:110).
-    * Output weight = candW × indexW. */
   /** Mutable (count, net-weight) accumulator for the count-only local
     * pipeline — one per partition, so the final level never allocates. */
   final class LongAgg { var cnt = 0L; var tot = 0L }
@@ -2074,6 +1964,10 @@ object DeltaEngine {
     }
   }
 
+  /** Weighted intersection of a candidate run against an index run —
+    * galloping the index side when candidates are few (the reference's
+    * adaptive intersect, reference static_graph/src/graph.rs:110).
+    * Output weight = candW × indexW. */
   def intersectRuns(cvs: Array[Long], cws: Array[Long],
                     avs: Array[Long], aws: Array[Long]): (Array[Long], Array[Long]) =
     intersectWindow(cvs, 0, cws, 0, cvs.length, avs, aws)

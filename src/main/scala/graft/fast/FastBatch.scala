@@ -41,13 +41,10 @@ import graft.plan.Planner.Pred
   *
   * SHARDED-regime results are materialized EAGERLY (localCheckpoint) so the
   * shards can be released before returning; those frames are backed by
-  * pinned block-manager blocks until the backing RDD is GC'd — a long-lived
-  * driver that runs many enumerations should use
-  * [[enumerateM]]/[[queryStaticM]] and call `release()` once the result is
-  * consumed (after release the frame is no longer readable: its lineage was
-  * truncated by design). LOCAL-regime results are LAZY: the broadcast index
-  * re-serves any consumption, so a single count pays one pipeline pass and
-  * pins no row blocks.
+  * pinned block-manager blocks until the backing RDD is GC'd.
+  * LOCAL-regime results are LAZY: the broadcast index re-serves any
+  * consumption, so a single count pays one pipeline pass and pins no row
+  * blocks.
   */
 object FastBatch {
 
@@ -59,11 +56,6 @@ object FastBatch {
     * with more (or less) executor headroom; settable in-process for specs. */
   @volatile var localIndexMaxEdges: Long =
     sys.env.getOrElse("SPARK_GRAFT_LOCAL_INDEX_EDGES", "4000000").toLong
-
-  /** An eagerly-materialized result plus a deterministic release hook for
-    * its pinned localCheckpoint blocks. Call `release()` AFTER consuming
-    * `df`; the frame cannot be recomputed once released. */
-  final case class Materialized(df: DataFrame, release: () => Unit)
 
   /** Consolidate → gate on |E| → dispatch: `local` runs against the full
     * broadcast index (seeds = the consolidated edges, stride-reordered so
@@ -81,6 +73,9 @@ object FastBatch {
     val engine = new DeltaEngine(motif, predicates, parts)
     val e = EdgeIndex.consolidate(edges).select("src", "dst", "w").rdd
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // read the gate once, clamped to the JVM's array-size limit: the packed
+    // seed arrays below hold up to `gate` edges, and 2 × gate must not wrap
+    val gate = localIndexMaxEdges.max(0L).min(Int.MaxValue - 8L)
     // ONE gate-and-collect job for the local regime: each partition packs
     // its edges into PRIMITIVE long arrays (no per-tuple boxing through the
     // collect) up to a per-partition cap of 2× the gate's fair share — the
@@ -94,7 +89,7 @@ object FastBatch {
     // core-count-independent driver time on every local-regime query.
     val packedTry =
       if (engine.numAttrs >= 3) {
-        val capPer = (2L * localIndexMaxEdges /
+        val capPer = (2L * gate /
           math.max(1, e.getNumPartitions) + 1024L).min(Int.MaxValue.toLong).toInt
         e.mapPartitions { it =>
           var n = 0
@@ -115,7 +110,7 @@ object FastBatch {
         }.collect()
       } else Array.empty[(Array[Long], Array[Long], Array[Long], Boolean)]
     val cnt = packedTry.iterator.map(_._1.length.toLong).sum
-    if (engine.numAttrs >= 3 && !packedTry.exists(_._4) && cnt <= localIndexMaxEdges) {
+    if (engine.numAttrs >= 3 && !packedTry.exists(_._4) && cnt <= gate) {
       // serve the seed list from ONE broadcast of the packed arrays —
       // tasks receive a (partition-id, stride) recipe instead of a
       // serialized slice of boxed tuples (guide §2.6/Amdahl: at 1.1M edges
@@ -171,14 +166,7 @@ object FastBatch {
   /** Full enumeration: (x0..x{k-1}, w), each binding exactly once. */
   def enumerate(edges: DataFrame, motif: Seq[(Int, Int)],
                 predicates: Seq[Pred] = Nil, numParts: Int = -1,
-                hotKeys: Int = -1): DataFrame =
-    enumerateM(edges, motif, predicates, numParts, hotKeys).df
-
-  /** [[enumerate]] with a release handle for the pinned result blocks. */
-  def enumerateM(edges: DataFrame, motif: Seq[(Int, Int)],
-                 predicates: Seq[Pred] = Nil, numParts: Int = -1,
-                 hotKeys: Int = -1): Materialized = {
-    val spark = edges.sparkSession
+                hotKeys: Int = -1): DataFrame = {
     // LOCAL regime: returned LAZILY — the full-index broadcast re-serves any
     // later consumption (an unpersisted TorrentBroadcast re-fetches from the
     // driver-held value), so a consumer that counts once pays ONE pipeline
@@ -187,17 +175,9 @@ object FastBatch {
     val rows = run(edges, motif, predicates, numParts, hotKeys) {
       (engine, hot, seeds) => engine.enumerateLocalRows(hot, seeds)
     } { (engine, shards, hot, dp, e) =>
-      val out = engine.enumerateInternalRows(shards, hot, dp, e)
-      // materialize + cut lineage BEFORE the shards are unpersisted
-      out.localCheckpoint()
-      out.count()
-      out
+      eager(engine.enumerateInternalRows(shards, hot, dp, e))
     }
-    val n = motif.flatMap(t => Seq(t._1, t._2)).max + 1
-    Materialized(
-      org.apache.spark.sql.graftbridge.GraftBridge
-        .internalCreateDataFrame(spark, rows, FastGraphState.matchSchema(n)),
-      () => { rows.unpersist(false); () })
+    matchFrame(edges, motif, rows)
   }
 
   /** Static-index, streamed-queries mode (the reference's q3-lean /
@@ -209,36 +189,32 @@ object FastBatch {
     * through. */
   def queryStatic(queries: DataFrame, edges: DataFrame, motif: Seq[(Int, Int)],
                   predicates: Seq[Pred] = Nil, numParts: Int = -1,
-                  hotKeys: Int = -1): DataFrame =
-    queryStaticM(queries, edges, motif, predicates, numParts, hotKeys).df
-
-  /** [[queryStatic]] with a release handle for the pinned result blocks. */
-  def queryStaticM(queries: DataFrame, edges: DataFrame, motif: Seq[(Int, Int)],
-                   predicates: Seq[Pred] = Nil, numParts: Int = -1,
-                   hotKeys: Int = -1): Materialized = {
-    val spark = edges.sparkSession
+                  hotKeys: Int = -1): DataFrame = {
+    def q = EdgeIndex.norm(queries).rdd
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val rows = run(edges, motif, predicates, numParts, hotKeys) {
-      (engine, hot, _) =>
-        // the index seeds are ignored: relation 0's bindings are the query
-        // rows themselves, extended against the broadcast index; lazy for
-        // the same reason as enumerateM's local branch
-        val q = EdgeIndex.norm(queries).rdd
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        engine.enumerateLocalRows(hot, q)
+      // the index seeds are ignored: relation 0's bindings are the query
+      // rows themselves, extended against the broadcast index; lazy for
+      // the same reason as enumerate's local branch
+      (engine, hot, _) => engine.enumerateLocalRows(hot, q)
     } { (engine, shards, hot, dp, _) =>
-      val q = EdgeIndex.norm(queries).rdd
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val out = engine.enumerateInternalRows(shards, hot, dp, q)
-      out.localCheckpoint()
-      out.count()
-      out
+      eager(engine.enumerateInternalRows(shards, hot, dp, q))
     }
-    val n = motif.flatMap(t => Seq(t._1, t._2)).max + 1
-    Materialized(
-      org.apache.spark.sql.graftbridge.GraftBridge
-        .internalCreateDataFrame(spark, rows, FastGraphState.matchSchema(n)),
-      () => { rows.unpersist(false); () })
+    matchFrame(edges, motif, rows)
   }
+
+  /** Materializes a sharded-regime result and cuts its lineage BEFORE the
+    * shards it reads are unpersisted. */
+  private def eager[T](out: RDD[T]): RDD[T] = {
+    out.localCheckpoint()
+    out.count()
+    out
+  }
+
+  private def matchFrame(edges: DataFrame, motif: Seq[(Int, Int)],
+                         rows: RDD[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    org.apache.spark.sql.graftbridge.GraftBridge.internalCreateDataFrame(edges.sparkSession,
+      rows, FastGraphState.matchSchema(motif.flatMap(t => Seq(t._1, t._2)).max + 1))
 
   /** FULL-emission row count: every match row flows through the complete
     * enumeration pipeline — including the UnsafeRow emit — and is counted

@@ -1,15 +1,11 @@
 package graft.state
 
-/** Per-key sorted-run index helpers — the JVM-side mirror of the
-  * reference's galloping search and per-key consolidation, for use inside
-  * typed state operators (e.g. a flatMapGroupsWithState group's adjacency).
-  *
-  * `gallop` reimplements the semantics of `advance`
+/** Sorted-run search — the JVM-side mirror of the reference's galloping
+  * search. `gallop` reimplements the semantics of `advance`
   * (/root/reference/src/lib.rs:101-127): count the prefix of a sorted array
   * satisfying a monotone predicate in O(log n) via exponential probe +
-  * binary shrink. `intersectSorted` is the adaptive scan-vs-gallop
-  * intersection the reference's naive/static crates use (cutoff |big|/4,
-  * /root/reference/static_graph/src/graph.rs:110).
+  * binary shrink. The fast engine's run intersections and range slices
+  * call it.
   */
 object IndexState {
 
@@ -30,46 +26,5 @@ object IndexState {
       if (xs(mid) < bound) lo = mid else hi = mid
     }
     lo + 1
-  }
-
-  /** Intersection of two sorted Long arrays, galloping the big side when
-    * the small side is < |big|/4 (adaptive cutoff like the reference). */
-  def intersectSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val (small, big) = if (a.length <= b.length) (a, b) else (b, a)
-    val out = Array.newBuilder[Long]
-    if (small.length < big.length / 4) {
-      var off = 0
-      var i = 0
-      while (i < small.length && off < big.length) {
-        off = gallop(big, small(i), off)
-        if (off < big.length && big(off) == small(i)) { out += small(i); off += 1 }
-        i += 1
-      }
-    } else {
-      var i = 0; var j = 0
-      while (i < small.length && j < big.length) {
-        if (small(i) < big(j)) i += 1
-        else if (small(i) > big(j)) j += 1
-        else { out += small(i); i += 1; j += 1 }
-      }
-    }
-    out.result()
-  }
-
-  /** Consolidates (value, weight) pairs: sort by value, sum weights, drop
-    * zeros — the reference's `consolidate_tail`
-    * (/root/reference/src/index.rs:197-219). */
-  def consolidate(pairs: Array[(Long, Long)]): Array[(Long, Long)] = {
-    if (pairs.isEmpty) return pairs
-    val sorted = pairs.sortBy(_._1)
-    val out = Array.newBuilder[(Long, Long)]
-    var curV = sorted(0)._1
-    var curW = 0L
-    for ((v, w) <- sorted) {
-      if (v != curV) { if (curW != 0L) out += ((curV, curW)); curV = v; curW = 0L }
-      curW += w
-    }
-    if (curW != 0L) out += ((curV, curW))
-    out.result()
   }
 }

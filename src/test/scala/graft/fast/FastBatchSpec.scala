@@ -181,4 +181,33 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
     // consume twice, after FastBatch already unpersisted its internal state
     assert(out.count() == out.count())
   }
+
+  test("a gate of Long.MaxValue keeps a graph of a few thousand edges local") {
+    // 2 × gate once wrapped to -2, capping every partition's collect near
+    // 1024 edges, so this graph silently ran the sharded regime
+    val edges = randomEdges(300, 8000, 97L)
+    val e = df(edges)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        sites.add(s.stageInfo.details)
+    }
+    val saved = FastBatch.localIndexMaxEdges
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      FastBatch.localIndexMaxEdges = Long.MaxValue
+      val got = FastBatch.enumerateAgg(e, Planner.triangle, numParts = 4).collect()(0)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val full = BruteForce.enumerate(edges, Planner.triangle)
+      assert(got.getLong(0) == full.size && got.getLong(1) == full.values.sum)
+      import scala.jdk.CollectionConverters._
+      assert(!sites.isEmpty)
+      assert(!sites.asScala.exists(_.contains("DeltaEngine.buildShards")),
+        "the sharded regime ran under an unbounded gate")
+    } finally {
+      FastBatch.localIndexMaxEdges = saved
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

@@ -426,4 +426,23 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     }
     a.close(); b.close()
   }
+
+  test("buildShards equals the boxed reference index on duplicate-heavy multigraphs") {
+    val engine = new DeltaEngine(Planner.triangle, Nil, numParts = 3)
+    for ((edges, trial) <- FullIndexSpec.multigraphs.zipWithIndex) {
+      val shards = engine.buildShards(spark.sparkContext.parallelize(edges, 4)).collect()
+      assert(shards.length == 3, s"trial $trial shard count")
+      for ((shard, pid) <- shards.zipWithIndex; k <- shard.keys)
+        assert(engine.partitioner.getPartition(k) == pid, s"trial $trial key $k on shard $pid")
+      val got = shards.flatMap(_.iterator).toMap
+      val want = FullIndexSpec.refIndex(edges)
+      assert(got.keySet == want.keySet, s"trial $trial key sets")
+      for ((k, (f, df, r, dr)) <- want) {
+        val a = got(k)
+        assert(a.fwdVs.toSeq.zip(a.fwdWs.toSeq) == f, s"trial $trial fwd run of $k")
+        assert(a.revVs.toSeq.zip(a.revWs.toSeq) == r, s"trial $trial rev run of $k")
+        assert(a.degFwd == df && a.degRev == dr, s"trial $trial degrees of $k")
+      }
+    }
+  }
 }

@@ -2,46 +2,22 @@ package graft.fast
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the primitive-array [[DeltaEngine.buildFullIndex]] (round-6
-  * optimization: parallel long arrays + in-place (key,value) quicksort +
-  * consolidating merge walk) against an independent boxed reference
-  * implementation, on duplicate-heavy multigraphs with cancelling and
-  * zero weights — the exact consolidation contract of
-  * IndexState.consolidate (sorted runs, summed duplicates, zeros
-  * dropped, keys with both sides empty omitted). */
+/** Pins the one run builder ([[DeltaEngine.buildAdjs]]: parallel long
+  * arrays + in-place (key,value) quicksort + consolidating merge walk)
+  * through its driver-side callers — the full local index
+  * ([[DeltaEngine.buildFullIndexPacked]]) and the micro-batch
+  * [[DeltaPack]] — against an independent boxed reference implementation,
+  * on duplicate-heavy multigraphs with cancelling and zero weights: sorted
+  * runs, summed duplicates, zeros dropped, keys with both sides empty
+  * omitted. FastEngineSpec checks the sharded build against the same
+  * reference. */
 class FullIndexSpec extends AnyFunSuite {
-
-  private def refIndex(edges: Seq[(Long, Long, Long)])
-      : Map[Long, (Seq[(Long, Long)], Long, Seq[(Long, Long)], Long)] = {
-    def runs(pairs: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) = {
-      val c = pairs.groupBy(_._1).view
-        .mapValues(_.map(_._2).sum).toSeq
-        .filter(_._2 != 0L).sortBy(_._1)
-      (c, c.map(_._2).sum)
-    }
-    val keys = (edges.map(_._1) ++ edges.map(_._2)).distinct
-    keys.flatMap { k =>
-      val (f, df) = runs(edges.filter(_._1 == k).map(e => (e._2, e._3)))
-      val (r, dr) = runs(edges.filter(_._2 == k).map(e => (e._1, e._3)))
-      if (f.isEmpty && r.isEmpty) None
-      else Some(k -> (f, df, r, dr))
-    }.toMap
-  }
+  import FullIndexSpec._
 
   test("buildFullIndex equals boxed reference on duplicate-heavy multigraphs") {
-    val rnd = new scala.util.Random(42)
-    for (trial <- 0 until 5) {
-      val n = 50 + trial * 400
-      // heavy key duplication (small id space), multi-edges, negative and
-      // cancelling weights, plus explicit exact-cancel pairs
-      val base = (0 until n).map { _ =>
-        (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong, (rnd.nextInt(5) - 2).toLong)
-      }
-      val cancels = (0 until 10).flatMap { i =>
-        Seq((100L + i, 200L + i, 7L), (100L + i, 200L + i, -7L))
-      }
-      val edges = base ++ cancels
-      val got = DeltaEngine.buildFullIndex(edges.iterator)
+    for ((edges, trial) <- multigraphs.zipWithIndex) {
+      val got = DeltaEngine.buildFullIndexPacked(edges.map(_._1).toArray,
+        edges.map(_._2).toArray, edges.map(_._3).toArray)
       val want = refIndex(edges)
       import scala.jdk.CollectionConverters._
       assert(got.keySet.asScala.map(_.toLong) == want.keySet, s"trial $trial key sets")
@@ -51,6 +27,22 @@ class FullIndexSpec extends AnyFunSuite {
         assert(a.revVs.toSeq.zip(a.revWs.toSeq) == r, s"trial $trial rev run of $k")
         assert(a.degFwd == df && a.degRev == dr, s"trial $trial degrees of $k")
       }
+
+      // the micro-batch pack: same runs per direction, and the seed list is
+      // the consolidated, zero-free, (src,dst)-sorted batch
+      val dp = DeltaPack(edges.toArray)
+      assert(dp.fwd.keySet == want.filter(_._2._1.nonEmpty).keySet, s"trial $trial fwd keys")
+      assert(dp.rev.keySet == want.filter(_._2._3.nonEmpty).keySet, s"trial $trial rev keys")
+      for ((k, (f, df, r, dr)) <- want) {
+        val fr = dp.run(k, forward = true)
+        val rr = dp.run(k, forward = false)
+        assert(fr.vs.toSeq.zip(fr.ws.toSeq) == f && fr.degSum == df, s"trial $trial pack fwd of $k")
+        assert(rr.vs.toSeq.zip(rr.ws.toSeq) == r && rr.degSum == dr, s"trial $trial pack rev of $k")
+      }
+      val wantEdges = edges.groupBy(e => (e._1, e._2)).toSeq
+        .map { case ((s, d), es) => (s, d, es.map(_._3).sum) }
+        .filter(_._3 != 0L).sortBy(e => (e._1, e._2))
+      assert(dp.edges.toSeq == wantEdges, s"trial $trial pack edges")
     }
   }
 
@@ -68,6 +60,42 @@ class FullIndexSpec extends AnyFunSuite {
       assert(got.map(t => (t._1, t._2)) == want.map(t => (t._1, t._2)), s"n=$n order")
       assert(got.groupBy(t => (t._1, t._2)).view.mapValues(_.map(_._3).toSet).toMap ==
         want.groupBy(t => (t._1, t._2)).view.mapValues(_.map(_._3).toSet).toMap, s"n=$n payload")
+    }
+  }
+}
+
+object FullIndexSpec {
+  /** Boxed reference index: key → (fwd run, fwd degree, rev run, rev degree). */
+  def refIndex(edges: Seq[(Long, Long, Long)])
+      : Map[Long, (Seq[(Long, Long)], Long, Seq[(Long, Long)], Long)] = {
+    def runs(pairs: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) = {
+      val c = pairs.groupBy(_._1).view
+        .mapValues(_.map(_._2).sum).toSeq
+        .filter(_._2 != 0L).sortBy(_._1)
+      (c, c.map(_._2).sum)
+    }
+    val keys = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    keys.flatMap { k =>
+      val (f, df) = runs(edges.filter(_._1 == k).map(e => (e._2, e._3)))
+      val (r, dr) = runs(edges.filter(_._2 == k).map(e => (e._1, e._3)))
+      if (f.isEmpty && r.isEmpty) None
+      else Some(k -> (f, df, r, dr))
+    }.toMap
+  }
+
+  /** Five multigraphs of growing size: heavy key duplication (small id
+    * space), multi-edges, negative and cancelling weights, plus explicit
+    * exact-cancel pairs. */
+  def multigraphs: Seq[Seq[(Long, Long, Long)]] = {
+    val rnd = new scala.util.Random(42)
+    (0 until 5).map { trial =>
+      val base = (0 until 50 + trial * 400).map { _ =>
+        (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong, (rnd.nextInt(5) - 2).toLong)
+      }
+      val cancels = (0 until 10).flatMap { i =>
+        Seq((100L + i, 200L + i, 7L), (100L + i, 200L + i, -7L))
+      }
+      base ++ cancels
     }
   }
 }

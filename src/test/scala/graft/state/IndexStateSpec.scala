@@ -28,20 +28,4 @@ class IndexStateSpec extends AnyFunSuite {
       assert(IndexState.gallop(xs, b) == xs.count(_ < b), s"case $i")
     }
   }
-
-  test("intersectSorted agrees with set intersection, both regimes") {
-    val big = (0L until 1000L by 3).toArray // 334 elems
-    val small = Array(3L, 9L, 10L, 300L, 999L) // gallop regime
-    assert(IndexState.intersectSorted(small, big).toSeq == Seq(3L, 9L, 300L, 999L))
-    val medium = (0L until 1000L by 5).toArray // scan regime vs big
-    assert(IndexState.intersectSorted(medium, big).toSeq ==
-      (0L until 1000L by 15).toSeq)
-    assert(IndexState.intersectSorted(big, small).toSeq == Seq(3L, 9L, 300L, 999L))
-  }
-
-  test("consolidate sums weights, drops zeros, sorts") {
-    val pairs = Array((5L, 1L), (2L, 3L), (5L, -1L), (2L, 1L), (9L, 0L))
-    assert(IndexState.consolidate(pairs).toSeq == Seq((2L, 4L)))
-    assert(IndexState.consolidate(Array.empty[(Long, Long)]).isEmpty)
-  }
 }
