@@ -36,6 +36,68 @@ object Shard {
   val empty: T = scala.collection.immutable.HashMap.empty
 }
 
+/** The local batch regime's FULL index, collected once from the shards and
+  * broadcast once: every key's [[Adj]] in an open-addressed table of
+  * primitive keys (Fibonacci hashing, linear probing, load ≤ 1/2), so a
+  * lookup never boxes its key and building it never sorts. Its forward runs
+  * are the consolidated edge set, which [[seeds]] serves as the seed
+  * stream. */
+private[fast] final class LocalIndex private (keys: Array[Long], adjs: Array[Adj])
+    extends Serializable {
+  private val shift = 64 - Integer.numberOfTrailingZeros(keys.length)
+
+  /** Key `k`'s adjacency, or null when `k` has none. */
+  def get(k: Long): Adj = {
+    val mask = keys.length - 1
+    var i = LocalIndex.slot(k, shift)
+    var a = adjs(i)
+    while (a != null && keys(i) != k) { i = (i + 1) & mask; a = adjs(i) }
+    a
+  }
+
+  /** The edges at positions r, r + stride, r + 2·stride, … of the forward
+    * runs in slot order: each edge lands in exactly one of the `stride`
+    * slices, and a hub's run is spread over all of them. */
+  def seeds(r: Int, stride: Int): Iterator[(Long, Long, Long)] = {
+    var pos = 0L
+    adjs.indices.iterator.filter(adjs(_) != null).flatMap { i =>
+      val k = keys(i)
+      val vs = adjs(i).fwdVs
+      val ws = adjs(i).fwdWs
+      val first = java.lang.Math.floorMod(r - pos, stride.toLong).toInt
+      pos += vs.length
+      Iterator.range(first, vs.length, stride).map(j => (k, vs(j), ws(j)))
+    }
+  }
+}
+
+private[fast] object LocalIndex {
+  private def slot(k: Long, shift: Int): Int = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
+
+  /** The table over per-shard (keys, adjs) arrays; a key occurs in one
+    * shard only. */
+  def apply(parts: Array[(Array[Long], Array[Adj])]): LocalIndex = {
+    val n = parts.iterator.map(_._1.length).sum
+    var cap = 2
+    while (cap < 2L * n) cap <<= 1
+    val keys = new Array[Long](cap)
+    val adjs = new Array[Adj](cap)
+    val shift = 64 - Integer.numberOfTrailingZeros(cap)
+    for ((ks, as) <- parts; j <- ks.indices) {
+      var i = slot(ks(j), shift)
+      while (adjs(i) != null) i = (i + 1) & (cap - 1)
+      keys(i) = ks(j)
+      adjs(i) = as(j)
+    }
+    new LocalIndex(keys, adjs)
+  }
+
+  /** Collects persisted shards into one index: one job, one (keys, adjs)
+    * array pair per shard. */
+  def fromShards(shards: RDD[Shard.T]): LocalIndex =
+    apply(shards.map(s => (s.keysIterator.toArray, s.valuesIterator.toArray)).collect())
+}
+
 /** A micro-batch of edge deltas, broadcast to every index partition:
   * `edges` is the CONSOLIDATED batch in canonical (src,dst) order — the
   * shared seed list whose indices the driver's argmin routing table refers
@@ -113,6 +175,7 @@ object DeltaPack {
   * serialize at memcpy speed under ANY spark.serializer. Record layouts:
   *   prefix  (pLen known per level): [rel, w, minDeg, minExt, p×pLen]
   *   proposal: [rel, w, minExt, p×pLen, nc, cands×nc, candWs×nc]
+  *   edge (shard build, [[buildShards]]): [src, dst, w]
   *
   * Semantics (pinned against a brute-force before/after enumeration by
   * FastEngineSpec): for each motif relation r, seed that relation's delta
@@ -876,15 +939,15 @@ final class DeltaEngine(
   }
 
   /** Partition-local count→argmin→propose→intersect over ONE seed against a
-    * FULL in-memory index — the zero-exchange batch pipeline used when the
-    * consolidated graph fits the broadcast budget (see
+    * FULL in-memory [[LocalIndex]] — the zero-exchange batch pipeline used
+    * when the consolidated graph fits the broadcast budget (see
     * [[FastBatch.localIndexMaxEdges]]). Lookup math is identical to the
     * sharded exchange pipeline ([[staticMatches]]): same argmin/pruneZero
     * count, same range-predicate gallop slice at propose, same weighted
     * run intersections, same predsOk/predsOkWithLast gates — only the
     * routing exchanges are gone, because every key resolves in `h`.
     * `emit(prefix, lastCand, weight)` fires once per match. */
-  private def localVisitSeed(h: DeltaEngine.HotMap, s0: Long, d0: Long, w0: Long,
+  private def localVisitSeed(h: LocalIndex, s0: Long, d0: Long, w0: Long,
                              emit: (Array[Long], Long, Long) => Unit,
                              agg: DeltaEngine.LongAgg = null): Unit = {
     val stages = plans(0).stages
@@ -1062,7 +1125,7 @@ final class DeltaEngine(
     * seed partition runs the whole pipeline locally (broadcast-hash-join
     * regime). Requires `numAttrs >= 3`; output rows identical to
     * [[enumerateInternalRows]] (FastBatchSpec pins it). */
-  def enumerateLocalRows(full: Broadcast[DeltaEngine.HotMap],
+  private[fast] def enumerateLocalRows(full: Broadcast[LocalIndex],
                          seeds: RDD[(Long, Long, Long)]): RDD[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -1112,7 +1175,7 @@ final class DeltaEngine(
 
   /** Zero-exchange (distinct match count, net weight) — the count-only twin
     * of [[enumerateLocalRows]]; no row is materialized. */
-  def enumerateLocalAgg(full: Broadcast[DeltaEngine.HotMap],
+  private[fast] def enumerateLocalAgg(full: Broadcast[LocalIndex],
                         seeds: RDD[(Long, Long, Long)]): (Long, Long) = {
     require(numAttrs >= 3, "local batch enumeration needs at least one extension stage")
     val engine = this
@@ -1231,26 +1294,37 @@ final class DeltaEngine(
     }, preservesPartitioning = true)
 
   /** Builds sharded state from an edge RDD (duplicates and zero weights
-    * are consolidated by [[DeltaEngine.buildAdjs]], per partition). */
-  def buildShards(edges: RDD[(Long, Long, Long)]): RDD[Shard.T] =
-    edges.flatMap { case (s, d, w) =>
-      Iterator((s, (d, w, true)), (d, (s, w, false)))
-    }
-      .partitionBy(partitioner)
-      .mapPartitions({ it =>
-        val fwd = new DeltaEngine.Triples(1 << 10)
-        val rev = new DeltaEngine.Triples(1 << 10)
-        for ((k, (v, w, isFwd)) <- it) (if (isFwd) fwd else rev).add(k, v, w)
-        val shard = scala.collection.immutable.HashMap.newBuilder[Long, Adj]
-        DeltaEngine.buildAdjs(fwd, rev)((k, adj) => shard.addOne(k -> adj))
-        Iterator.single(shard.result())
-      }, preservesPartitioning = true)
+    * are consolidated by [[DeltaEngine.buildAdjs]], per partition). Each
+    * input partition ships its edges as packed ≤256KB blocks
+    * ([[DeltaEngine.putEdge]]), never as one boxed record per direction. */
+  def buildShards(edges: RDD[(Long, Long, Long)]): RDD[Shard.T] = {
+    val np = numParts
+    shardsFromBlocks(edges.mapPartitions(it => DeltaEngine.edgeBlocks(np, it)))
+  }
 
-  /** Empty sharded state (numParts empty maps, correctly partitioned). */
+  /** [[buildShards]] over raw (src, dst, w) long rows (`EdgeIndex.norm`'s
+    * layout), read straight off the `InternalRow`s. */
+  private[fast] def buildShardsFromRows(
+      rows: RDD[org.apache.spark.sql.catalyst.InternalRow]): RDD[Shard.T] = {
+    val np = numParts
+    shardsFromBlocks(rows.mapPartitions { it =>
+      DeltaEngine.boundedIt(np, it) { (r, bb) =>
+        DeltaEngine.putEdge(bb, np, r.getLong(0), r.getLong(1), r.getLong(2))
+      }
+    })
+  }
+
+  private def shardsFromBlocks(blocks: RDD[(Int, Array[Long])]): RDD[Shard.T] = {
+    val np = numParts
+    blocks.partitionBy(DeltaEngine.identityPartitioner(np))
+      .mapPartitionsWithIndex { (pid, it) =>
+        Iterator.single(DeltaEngine.shardOf(pid, np, it.map(_._2)))
+      }
+  }
+
+  /** Empty sharded state (numParts empty maps). */
   def emptyShards(sc: SparkContext): RDD[Shard.T] =
-    sc.parallelize(Seq.empty[(Long, (Long, Long, Boolean))], numParts)
-      .partitionBy(partitioner)
-      .mapPartitions(_ => Iterator.single(Shard.empty), preservesPartitioning = true)
+    sc.parallelize(Seq.empty[Int], numParts).mapPartitions(_ => Iterator.single(Shard.empty))
 }
 
 object DeltaEngine {
@@ -1454,21 +1528,53 @@ object DeltaEngine {
     m
   }
 
-  /** FULL adjacency index over a consolidated edge array, built driver-side
-    * for the zero-exchange local batch pipeline: every key's fwd/rev runs
-    * are present, so [[DeltaEngine.enumerateLocalRows]] never touches a
-    * shard. Size-gated by the caller ([[FastBatch.localIndexMaxEdges]]) —
-    * ~32 bytes per edge across both directions. The caller's arrays are
-    * NOT mutated ([[buildAdjs]] sorts copies), so they can keep serving as
-    * the broadcast seed list. */
-  def buildFullIndexPacked(sa: Array[Long], da: Array[Long],
-                           wa: Array[Long]): HotMap = {
-    val n = sa.length
-    def copy(a: Array[Long]) = java.util.Arrays.copyOf(a, n)
-    val m = new HotMap()
-    buildAdjs(new Triples(copy(sa), copy(da), copy(wa), n),
-      new Triples(copy(da), copy(sa), copy(wa), n))((k, a) => m.put(k, a))
-    m
+  /** The (pid, block) stream of [[putEdge]] records for `edges`. */
+  private[fast] def edgeBlocks(np: Int, edges: Iterator[(Long, Long, Long)])
+      : Iterator[(Int, Array[Long])] =
+    boundedIt(np, edges)((e, bb) => putEdge(bb, np, e._1, e._2, e._3))
+
+  /** Appends edge (s, d, w) as one [s, d, w] record to the block of each
+    * partition that owns an endpoint — once when both endpoints share a
+    * partition. [[shardOf]] reads the direction back off the endpoints'
+    * partitions, so blocks carry no direction flag. */
+  private[fast] def putEdge(bb: BlockBuf, np: Int, s: Long, d: Long, w: Long): Unit = {
+    val ps = partOf(s, np)
+    val pd = partOf(d, np)
+    putTriple(bb, ps, s, d, w)
+    if (pd != ps) putTriple(bb, pd, s, d, w)
+  }
+
+  private def putTriple(bb: BlockBuf, pid: Int, s: Long, d: Long, w: Long): Unit = {
+    val b = bb.reserve(pid, 3)
+    val o = bb.off(pid)
+    b(o) = s; b(o + 1) = d; b(o + 2) = w
+    bb.advance(pid, 3)
+  }
+
+  /** Shard `pid` of `np` from its [[putEdge]] blocks: edges whose source
+    * it owns become forward triples, edges whose destination it owns
+    * reverse ones, and [[buildAdjs]] consolidates both. */
+  private[fast] def shardOf(pid: Int, np: Int, blocks: Iterator[Array[Long]]): Shard.T = {
+    val bs = blocks.toArray
+    val n = bs.iterator.map(_.length / 3).sum
+    val fwd = new Triples(n)
+    val rev = new Triples(n)
+    var i = 0
+    while (i < bs.length) {
+      val b = bs(i)
+      bs(i) = null
+      var o = 0
+      while (o < b.length) {
+        val s = b(o); val d = b(o + 1); val w = b(o + 2)
+        if (partOf(s, np) == pid) fwd.add(s, d, w)
+        if (partOf(d, np) == pid) rev.add(d, s, w)
+        o += 3
+      }
+      i += 1
+    }
+    val shard = scala.collection.immutable.HashMap.newBuilder[Long, Adj]
+    buildAdjs(fwd, rev)((k, adj) => shard.addOne(k -> adj))
+    shard.result()
   }
 
   /** Parallel (key, value, weight) arrays holding `n` triples, growable by

@@ -84,7 +84,7 @@ final class FastGraphState(
   private def disableDriverDegrees(keys: Long): Unit = {
     driverDegreesActive = false
     degF.clear(); degR.clear()
-    System.err.println(s"[fastgraph] driver degree mirror off ($keys keys > " +
+    FastGraphState.log.warn(s"[fastgraph] driver degree mirror off ($keys keys > " +
       s"budget $degMirrorMaxKeys); sharded-degree seed phase active")
   }
   private def degFn: Option[(Long, Boolean) => Long] =
@@ -444,15 +444,6 @@ final class FastGraphState(
     f
   }
 
-  /** (consolidated match-delta rows, net weight) for one batch — the bench
-    * fast path: one RDD job, zero Catalyst. */
-  def applyBatchStats(batchId: Long, arr: Array[(Long, Long, Long)]): (Long, Long) =
-    applyBatchRdd(batchId, arr).mapPartitions { it =>
-      var n = 0L; var s = 0L
-      for ((_, w) <- it) { n += 1; s += w }
-      Iterator.single((n, s))
-    }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-
   /** Current consolidated edge Z-set (tests / snapshot queries). */
   def edges: DataFrame = {
     val rows = shards.flatMap { shard =>
@@ -644,6 +635,8 @@ object FastGraphState {
     * driver re-bases with a fresh full broadcast (bounds fresh-executor
     * catch-up work and retained broadcast count when compaction is rare). */
   val maxHotChain: Int = 48
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(classOf[FastGraphState])
 
   val edgeSchema: StructType = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType),

@@ -182,11 +182,9 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
     assert(out.count() == out.count())
   }
 
-  test("a gate of Long.MaxValue keeps a graph of a few thousand edges local") {
-    // 2 × gate once wrapped to -2, capping every partition's collect near
-    // 1024 edges, so this graph silently ran the sharded regime
-    val edges = randomEdges(300, 8000, 97L)
-    val e = df(edges)
+  /** Runs `body` under gate `g` and returns its result with the call-site
+    * details of every stage it submitted. */
+  private def underGate[A](g: Long)(body: => A): (A, Seq[String]) = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageSubmitted(
@@ -196,18 +194,107 @@ class FastBatchSpec extends AnyFunSuite with SparkTestBase {
     val saved = FastBatch.localIndexMaxEdges
     spark.sparkContext.addSparkListener(listener)
     try {
-      FastBatch.localIndexMaxEdges = Long.MaxValue
-      val got = FastBatch.enumerateAgg(e, Planner.triangle, numParts = 4).collect()(0)
+      FastBatch.localIndexMaxEdges = g
+      val out = body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      val full = BruteForce.enumerate(edges, Planner.triangle)
-      assert(got.getLong(0) == full.size && got.getLong(1) == full.values.sum)
       import scala.jdk.CollectionConverters._
-      assert(!sites.isEmpty)
-      assert(!sites.asScala.exists(_.contains("DeltaEngine.buildShards")),
-        "the sharded regime ran under an unbounded gate")
+      (out, sites.asScala.toSeq)
     } finally {
       FastBatch.localIndexMaxEdges = saved
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** A stage of the sharded regime's exchange pipeline ran. */
+  private def exchanged(sites: Seq[String]): Boolean =
+    sites.exists(s => s.contains("DeltaEngine.countPropose") || s.contains("DeltaEngine.extend"))
+
+  /** The local regime's index collect ran. */
+  private def collectedLocal(sites: Seq[String]): Boolean =
+    sites.exists(_.contains("LocalIndex$.fromShards"))
+
+  private def triangleAgg(e: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = FastBatch.enumerateAgg(e, Planner.triangle, numParts = 4).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def bruteAgg(edges: Seq[(Long, Long, Long)]): (Long, Long) = {
+    val full = BruteForce.enumerate(edges, Planner.triangle)
+    (full.size.toLong, full.values.sum)
+  }
+
+  /** Consolidated edge count of a raw multigraph. */
+  private def consolidated(edges: Seq[(Long, Long, Long)]): Long =
+    edges.groupBy(e => (e._1, e._2)).count(_._2.map(_._3).sum != 0L).toLong
+
+  test("a gate of Long.MaxValue keeps a graph of a few thousand edges local") {
+    // 2 × gate once wrapped to -2, capping every partition's collect near
+    // 1024 edges, so this graph silently ran the sharded regime
+    val edges = randomEdges(300, 8000, 97L)
+    val e = df(edges)
+    val (got, sites) = underGate(Long.MaxValue) {
+      FastBatch.enumerateAgg(e, Planner.triangle, numParts = 4).collect()(0)
+    }
+    val full = BruteForce.enumerate(edges, Planner.triangle)
+    assert(got.getLong(0) == full.size && got.getLong(1) == full.values.sum)
+    assert(sites.nonEmpty)
+    assert(!exchanged(sites), "the sharded regime ran under an unbounded gate")
+  }
+
+  test("rows that cancel or repeat across input partitions consolidate in both regimes") {
+    // every edge of a random multigraph arrives as several rows, spread
+    // round-robin over 4 input partitions: duplicates, a cancelling pair
+    // (+3, -3) and a negative row per edge, so no partition alone holds
+    // any edge's net weight
+    val base = randomEdges(40, 500, 101L)
+    val rows = base.flatMap { case (s, d, w) =>
+      Seq((s, d, w + 1), (s, d, 3L), (s, d, -3L), (s, d, -1L))
+    } ++ Seq((100L, 101L, 4L), (100L, 101L, -4L), (101L, 102L, 5L), (101L, 102L, -5L))
+    val e = df(rows).repartition(4)
+    val placed = e.rdd.mapPartitionsWithIndex((pid, it) =>
+      it.map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), pid))).collect()
+    for (pair <- Seq((100L, 101L, 4L), (101L, 102L, 5L))) {
+      val pids = placed.collect {
+        case ((s, d, w), pid) if s == pair._1 && d == pair._2 && math.abs(w) == pair._3 => pid
+      }
+      assert(pids.distinct.length == 2, s"cancelling rows of $pair share a partition: $pids")
+    }
+    val expect = BruteForce.rows(BruteForce.enumerate(rows, Planner.triangle))
+    bothRegimes { regime =>
+      val got = sortedRows(FastBatch.enumerate(e, Planner.triangle, numParts = 4))
+      assert(got == expect, s"regime=$regime")
+    }
+  }
+
+  test("more raw rows than the gate but a consolidated count under it runs local") {
+    val edges = randomEdges(60, 1500, 103L)
+    // three rows per edge (w, w, -w): 3× the rows, same consolidated set
+    val rows = edges.flatMap { case (s, d, w) => Seq((s, d, w), (s, d, w), (s, d, -w)) }
+    val gate = consolidated(rows)
+    assert(rows.size > gate)
+    val (got, sites) = underGate(gate)(triangleAgg(df(rows).repartition(4)))
+    assert(got == bruteAgg(rows))
+    assert(collectedLocal(sites), "no local-index collect ran")
+    assert(!exchanged(sites), "the sharded regime ran under the gate")
+  }
+
+  test("a gate-sized graph with every edge in one input partition runs local") {
+    val edges = randomEdges(120, 4000, 107L)
+    val gate = consolidated(edges)
+    val e = df(edges).repartition(1)
+    assert(e.rdd.getNumPartitions == 1)
+    val (got, sites) = underGate(gate)(triangleAgg(e))
+    assert(got == bruteAgg(edges))
+    assert(collectedLocal(sites), "no local-index collect ran")
+    assert(!exchanged(sites), "the sharded regime ran for a gate-sized graph")
+  }
+
+  test("a graph over the gate runs no local-index collect job") {
+    val edges = randomEdges(120, 4000, 109L)
+    val gate = consolidated(edges) - 1
+    val (got, sites) = underGate(gate)(triangleAgg(df(edges).repartition(4)))
+    assert(got == bruteAgg(edges))
+    assert(exchanged(sites), "the sharded regime did not run over the gate")
+    assert(!collectedLocal(sites), "the local index was collected over the gate")
   }
 }

@@ -44,6 +44,14 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** (match-delta rows, net weight) of one absorbed batch, via the async
+    * stats path awaited in place. */
+  private def batchStats(st: FastGraphState, id: Long,
+                         arr: Array[(Long, Long, Long)]): (Long, Long) = {
+    val parts = st.applyBatchStatsAsync(id, arr).get()
+    (parts.map(_._1).sum, parts.map(_._2).sum)
+  }
+
   private def sortedRows(frame: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
     frame.collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSeq.sortBy(_.mkString(","))
 
@@ -239,7 +247,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     val async = new FastGraphState(spark, Planner.triangle, numParts = 4, maxTail = 3,
       pipelineDepth = 3)
     val expected = batches.zipWithIndex.map { case (b, i) =>
-      sync.applyBatchStats(i.toLong, b.toArray)
+      batchStats(sync, i.toLong, b.toArray)
     }
     val futs = scala.collection.mutable.Queue
       .empty[(Int, org.apache.spark.FutureAction[Seq[(Long, Long)]])]
@@ -382,7 +390,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     }
     // the array entry point routes through the same guard
     val extra = randomBatches(26, 1, 120, seed = 71L).head
-    val r1 = a.applyBatchStats(batches.size.toLong, extra.toArray)
+    val r1 = batchStats(a, batches.size.toLong, extra.toArray)
     val m2 = b.applyBatchRdd(batches.size.toLong, extra.toArray)
     val got = (m2.count(), m2.map(_._2).sum())
     assert((r1._1, r1._2) == got)
@@ -417,8 +425,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4)
     val b = new FastGraphState(spark, Planner.triangle, numParts = 4)
     for ((batch, i) <- batches.zipWithIndex) {
-      val (n, net) = a.applyBatchStats(i.toLong,
-        batch.toArray)
+      val (n, net) = batchStats(a, i.toLong, batch.toArray)
       val mdf = b.applyBatch(i.toLong, df(batch))
       val rows = mdf.collect()
       assert(n == rows.length)
@@ -443,6 +450,33 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
         assert(a.revVs.toSeq.zip(a.revWs.toSeq) == r, s"trial $trial rev run of $k")
         assert(a.degFwd == df && a.degRev == dr, s"trial $trial degrees of $k")
       }
+    }
+  }
+
+  test("buildShards from an input partition that spans several packed blocks") {
+    val rnd = new scala.util.Random(5)
+    val edges = (0 until 40000).map { _ =>
+      (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong, (rnd.nextInt(5) - 2).toLong)
+    }
+    val np = 2
+    // the map side of one input partition: bounded blocks, several per target
+    val blocks = DeltaEngine.edgeBlocks(np, edges.iterator).toSeq
+    assert(blocks.forall(_._2.length <= 32768), "a packed block exceeds its 256 KB cap")
+    for (pid <- 0 until np)
+      assert(blocks.count(_._1 == pid) >= 3, s"shard $pid's input fits one block")
+    val engine = new DeltaEngine(Planner.triangle, Nil, numParts = np)
+    val shards = engine.buildShards(spark.sparkContext.parallelize(edges, 1)).collect()
+    assert(shards.length == np)
+    for ((shard, pid) <- shards.zipWithIndex; k <- shard.keys)
+      assert(engine.partitioner.getPartition(k) == pid, s"key $k on shard $pid")
+    val got = shards.flatMap(_.iterator).toMap
+    val want = FullIndexSpec.refIndex(edges)
+    assert(got.keySet == want.keySet, "key sets")
+    for ((k, (f, df, r, dr)) <- want) {
+      val a = got(k)
+      assert(a.fwdVs.toSeq.zip(a.fwdWs.toSeq) == f, s"fwd run of $k")
+      assert(a.revVs.toSeq.zip(a.revWs.toSeq) == r, s"rev run of $k")
+      assert(a.degFwd == df && a.degRev == dr, s"degrees of $k")
     }
   }
 }

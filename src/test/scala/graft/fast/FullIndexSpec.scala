@@ -4,23 +4,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the one run builder ([[DeltaEngine.buildAdjs]]: parallel long
   * arrays + in-place (key,value) quicksort + consolidating merge walk)
-  * through its driver-side callers — the full local index
-  * ([[DeltaEngine.buildFullIndexPacked]]) and the micro-batch
-  * [[DeltaPack]] — against an independent boxed reference implementation,
-  * on duplicate-heavy multigraphs with cancelling and zero weights: sorted
-  * runs, summed duplicates, zeros dropped, keys with both sides empty
-  * omitted. FastEngineSpec checks the sharded build against the same
-  * reference. */
+  * through its driver-side callers — the local regime's [[LocalIndex]]
+  * (packed edge blocks → per-shard runs → one primitive key table) and the
+  * micro-batch [[DeltaPack]] — against an independent boxed reference
+  * implementation, on duplicate-heavy multigraphs with cancelling and zero
+  * weights: sorted runs, summed duplicates, zeros dropped, keys with both
+  * sides empty omitted. FastEngineSpec checks the sharded build against the
+  * same reference. */
 class FullIndexSpec extends AnyFunSuite {
   import FullIndexSpec._
 
   test("buildFullIndex equals boxed reference on duplicate-heavy multigraphs") {
     for ((edges, trial) <- multigraphs.zipWithIndex) {
-      val got = DeltaEngine.buildFullIndexPacked(edges.map(_._1).toArray,
-        edges.map(_._2).toArray, edges.map(_._3).toArray)
+      val got = localIndex(edges, np = 3)
       val want = refIndex(edges)
-      import scala.jdk.CollectionConverters._
-      assert(got.keySet.asScala.map(_.toLong) == want.keySet, s"trial $trial key sets")
+      // the key set: every key of the reference resolves, every other id
+      // that occurs in the input (keys whose runs cancelled) does not
+      val ids = edges.flatMap(e => Seq(e._1, e._2)).toSet ++ Seq(-1L, 1000L)
+      assert(ids.filter(k => got.get(k) != null) == want.keySet, s"trial $trial key sets")
       for ((k, (f, df, r, dr)) <- want) {
         val a = got.get(k)
         assert(a.fwdVs.toSeq.zip(a.fwdWs.toSeq) == f, s"trial $trial fwd run of $k")
@@ -46,6 +47,20 @@ class FullIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("LocalIndex seeds stride the consolidated edge set, each edge once") {
+    for ((edges, trial) <- multigraphs.zipWithIndex; stride <- Seq(1, 4, 7)) {
+      val idx = localIndex(edges, np = 3)
+      val got = (0 until stride).flatMap(r => idx.seeds(r, stride).toSeq)
+      val want = edges.groupBy(e => (e._1, e._2)).toSeq
+        .map { case ((s, d), es) => (s, d, es.map(_._3).sum) }
+        .filter(_._3 != 0L)
+      assert(got.sortBy(e => (e._1, e._2)) == want.sortBy(e => (e._1, e._2)),
+        s"trial $trial stride $stride")
+      val sizes = (0 until stride).map(r => idx.seeds(r, stride).size)
+      assert(sizes.max - sizes.min <= 1, s"trial $trial stride $stride slice sizes $sizes")
+    }
+  }
+
   test("sortByKeyValue sorts parallel arrays by composite key with duplicates") {
     val rnd = new scala.util.Random(7)
     for (n <- Seq(0, 1, 2, 31, 32, 33, 1000, 5000)) {
@@ -65,6 +80,16 @@ class FullIndexSpec extends AnyFunSuite {
 }
 
 object FullIndexSpec {
+  /** The local index the batch path builds, without Spark: one input
+    * partition of packed edge blocks, `np` shards, one key table. */
+  def localIndex(edges: Seq[(Long, Long, Long)], np: Int): LocalIndex = {
+    val blocks = DeltaEngine.edgeBlocks(np, edges.iterator).toSeq
+    LocalIndex((0 until np).map { pid =>
+      val s = DeltaEngine.shardOf(pid, np, blocks.iterator.filter(_._1 == pid).map(_._2))
+      (s.keysIterator.toArray, s.valuesIterator.toArray)
+    }.toArray)
+  }
+
   /** Boxed reference index: key → (fwd run, fwd degree, rev run, rev degree). */
   def refIndex(edges: Seq[(Long, Long, Long)])
       : Map[Long, (Seq[(Long, Long)], Long, Seq[(Long, Long)], Long)] = {
