@@ -381,7 +381,7 @@ object Bench {
     val preload = fixture.where(col("idx") < preloadN).select("src", "dst", "w")
     val tail = fixture.where(col("idx") >= preloadN).select("src", "dst", "w")
     val state = new graft.fast.FastGraphState(spark, Planner.triangle,
-      None, numParts = cores, maxTail = 100, largeBatchThreshold = 1)
+      None, numParts = cores, maxTail = 100)
     state.initialize(preload)
     val t0 = System.nanoTime()
     val m = state.applyBatchDistributed(0L, tail)

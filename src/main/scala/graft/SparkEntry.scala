@@ -809,8 +809,7 @@ object SparkEntry {
     // WAL path, pre/post shard le-lt reads) — the backfill regime; output
     // must equal the batch triangle enumeration
     "wco_triangle_bulk" -> ((s, dir) => {
-      val st = new graft.fast.FastGraphState(s, Planner.triangle,
-        numParts = 8, largeBatchThreshold = 1)
+      val st = new graft.fast.FastGraphState(s, Planner.triangle, numParts = 8)
       val out = st.applyBatchDistributed(0L, edges(s, dir)).localCheckpoint()
       st.close()
       out
@@ -820,7 +819,7 @@ object SparkEntry {
     // O(1) driver state) — the form for key sets that outgrow the driver
     "wco_cycle3_sharded" -> ((s, dir) => {
       val st = new graft.fast.FastGraphState(s, Planner.cycle3,
-        numParts = 8, driverDegrees = false)
+        numParts = 8, degMirrorMaxKeys = 0)
       val out = st.applyBatch(0L, edges(s, dir)).localCheckpoint()
       st.close()
       out

@@ -387,7 +387,7 @@ final class DeltaEngine(
     * partition emits exactly the proposals assigned to it, in place.
     * Replaces a parallelize + E count exchanges + a propose exchange — the
     * per-batch stage floor that capped core-count scaling at small batch
-    * sizes. Requires the mirror (`driverDegrees=true`); without it
+    * sizes. Requires the mirror (`degMirrorMaxKeys > 0`); without it
     * [[seedPfxBlocks]] + the count chain serve the same role with a
     * sharded degree hop instead of O(|V|) driver state. */
   private def seedPropose(sc: SparkContext, shards: RDD[Shard.T],

@@ -20,6 +20,23 @@ import graft.plan.Planner.Pred
   * every batch's match delta to a brute-force nested-loop enumeration of
   * the graph before and after it.
   *
+  * One absorb core, two batch sources. Like the reference, which folds
+  * every batch into its index through one merge at batch boundaries
+  * (`Index::merge_to`, src/index.rs:560-583), every absorb runs the same
+  * steps: [[beginAbsorb]] (lagged retirement of superseded shard
+  * generations, release of the previous absorb's broadcasts and batch
+  * RDDs), write-ahead, delta step, `sink`, [[install]] of the next shard
+  * generation, and [[commit]] (tail, compaction, meta, one lineage record).
+  * Each form keeps only what follows from its batch source:
+  *  - driver absorb ([[applyBatchRdd]]; [[applyBatch]] routes batches of up
+  *    to `largeBatchThreshold` rows here): the batch is collected, WAL'd as
+  *    `.bin`, broadcast as a [[DeltaPack]] into [[DeltaEngine.deltaStep]];
+  *    the degree mirror and hot replica fold the pack;
+  *  - bulk absorb ([[applyBatchDistributed]], and larger batches): the batch
+  *    stays an RDD, WAL'd as parquet, into
+  *    [[DeltaEngine.deltaStepDistributed]]; the mirror folds collected
+  *    per-key deltas and the hot replica is rebuilt from the new shards.
+  *
   * Scale design: state is sharded by node id across `numParts` partitions
   * (at cluster scale: ≥ executors × cores); the micro-batch delta is
   * broadcast (the streaming regime assumes |batch| ≪ |state|); prefixes
@@ -30,7 +47,11 @@ import graft.plan.Planner.Pred
   *
   * Layout under `stateDir`: `meta.json`, `base/v=N/` (parquet),
   * `wal/batch=N.bin` (24-byte-per-edge big-endian (src,dst,w) long triples,
-  * fsync'd before any output), `metrics.jsonl`.
+  * fsync'd before any output) or `wal/batch=N.parquet` (bulk absorb),
+  * `metrics.jsonl` (one lineage record per committed batch:
+  * `batchId`, `inputRows` = consolidated rows, `distributed`, `wallMs`, and
+  * `partitions` = consolidated rows per state shard, left empty unless
+  * `lineageMetrics`).
   */
 final class FastGraphState(
     val spark: SparkSession,
@@ -41,14 +62,17 @@ final class FastGraphState(
     predicates: Seq[Pred] = Nil,
     lineageMetrics: Boolean = true,
     hotKeys: Int = -1,
-    driverDegrees: Boolean = true,
     pipelineDepth: Int = 1,
     largeBatchThreshold: Int = 1 << 20,
     degMirrorMaxKeys: Long = 1L << 23) {
 
   private val sc = spark.sparkContext
   private val parts = if (numParts > 0) numParts else sc.defaultParallelism
-  /** Size of the broadcast hot-hub replica (0 disables). */
+  /** Size of the broadcast hot-hub replica (0 disables). Measured reason it
+    * stays on: `perfbench/run.py --workload stream_b1000 --seconds 10`,
+    * interleaved pairs on a 4-core host, `hotKeys = 0` moved `op_p50_ms`
+    * 381 → 499, 412 → 472 and 548 → 600 ms (worse in 3 of 3 pairs, median
+    * +21%); `stream_churn_b20000` was flat (4,666 → 4,580, 4,540 → 4,345 ms). */
   private val hotK = if (hotKeys >= 0) hotKeys else 8 * parts
   val engine = new DeltaEngine(motif, predicates, parts)
 
@@ -60,35 +84,35 @@ final class FastGraphState(
     * (re)build/re-base time; per batch the executors fold the (already
     * broadcast) DeltaPack chain into their own cached copy — per-batch
     * broadcast bytes are independent of hub degree (see
-    * [[DeltaEngine.ChainHot]]). */
+    * [[DeltaEngine.ChainHot]]). Re-broadcasting the driver's folded replica
+    * every batch instead measured 381 → 428, 412 → 477 and 548 → 426 ms
+    * `stream_b1000` `op_p50_ms` (inside the spread); the chain stays for the
+    * per-batch network bytes it saves, which local mode cannot show. */
   private val stateId = java.util.UUID.randomUUID().toString
   private var hotGen: Long = 0L
   private var hotBase: Broadcast[DeltaEngine.HotMap] = sc.broadcast(hotAdj)
   private var dpChain: Vector[Broadcast[DeltaPack]] = Vector.empty
   /** Driver-held EXACT signed-degree mirror (fwd, rev per key): folded from
     * the same DeltaPack degSums the shards fold, so the seed phase needs no
-    * cluster job at all for its count stage. O(|V|) driver memory (16B/key)
-    * — disable via `driverDegrees=false` for graphs whose key set outgrows
-    * the driver; the engine then runs the seed phase fully distributed
-    * (sharded degree lookup via the count-chain exchanges — one extra hop
-    * per extender slot, no collect job, O(1) driver state). */
+    * cluster job at all for its count stage. O(|V|) driver memory (16B/key).
+    * Without it the engine runs the seed phase fully distributed (sharded
+    * degree lookup via the count-chain exchanges — one extra hop per
+    * extender slot, no collect job, O(1) driver state). Measured reason it
+    * stays: with the mirror off, `stream_b1000` `op_p50_ms` went 383 → 537
+    * and 435 → 579 ms (+40%, +33%) in interleaved `perfbench/run.py
+    * --seconds 10` pairs on a 4-core host. */
   private val degF = new java.util.HashMap[Long, java.lang.Long]()
   private val degR = new java.util.HashMap[Long, java.lang.Long]()
   /** The mirror is a BUDGETED accelerator, not an invariant: when the shard
     * key set outgrows `degMirrorMaxKeys` (~70 B/key of boxed driver heap),
     * the engine switches itself to the sharded-degree seed phase
     * (degFn=None → count-chain lookups, O(1) driver state) and never
-    * rebuilds the mirror again. The switch only changes WHERE degrees are
-    * read, never their values — FastEngineSpec pins result equality. */
-  private var driverDegreesActive: Boolean = driverDegrees
-  private def disableDriverDegrees(keys: Long): Unit = {
-    driverDegreesActive = false
-    degF.clear(); degR.clear()
-    FastGraphState.log.warn(s"[fastgraph] driver degree mirror off ($keys keys > " +
-      s"budget $degMirrorMaxKeys); sharded-degree seed phase active")
-  }
+    * rebuilds the mirror again; a budget of 0 keeps the mirror off from the
+    * first batch. The switch only changes WHERE degrees are read, never
+    * their values — FastEngineSpec pins result equality. */
+  private var mirrorActive: Boolean = degMirrorMaxKeys > 0
   private def degFn: Option[(Long, Boolean) => Long] =
-    if (!driverDegreesActive) None
+    if (!mirrorActive) None
     else Some((k, fwd) => {
       val v = (if (fwd) degF else degR).get(k)
       if (v == null) 0L else v.longValue()
@@ -99,40 +123,31 @@ final class FastGraphState(
       val next = (if (cur == null) 0L else cur.longValue()) + d
       if (next == 0L) m.remove(k) else m.put(k, java.lang.Long.valueOf(next))
     }
-  private def foldDegMirror(dp: DeltaPack): Unit = if (driverDegreesActive) {
-    dp.fwd.foreach { case (k, r) => foldDeg(degF, k, r.degSum) }
-    dp.rev.foreach { case (k, r) => foldDeg(degR, k, r.degSum) }
-    // the budget must bind on the HOT path too: a stream of small batches
-    // that keeps minting new keys grows the mirror without ever passing
-    // through a rebuild — check after every fold (HashMap.size is O(1))
-    val sz = math.max(degF.size.toLong, degR.size.toLong)
-    if (sz > degMirrorMaxKeys) disableDriverDegrees(sz)
-  }
-  /** Incremental mirror fold for the bulk path: per-touched-key degree
-    * deltas (degree = Σw, [[DeltaPack.Run]].degSum semantics) aggregated
-    * distributed and collected — O(|batch keys|) driver work, replacing the
-    * round-4 full-state O(|V|) `rebuildDegMirror` collect per bulk batch. */
-  private def foldDegMirrorDistributed(batch: RDD[(Long, Long, Long)]): Unit =
-    if (driverDegreesActive) {
-      batch.flatMap { case (s, d, w) => Iterator((s, (w, 0L)), (d, (0L, w))) }
-        .reduceByKey((a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))
-        .collect()
-        .foreach { case (k, fr) => foldDeg(degF, k, fr._1); foldDeg(degR, k, fr._2) }
-      val sz = math.max(degF.size.toLong, degR.size.toLong)
-      if (sz > degMirrorMaxKeys) disableDriverDegrees(sz)
+  private def checkMirrorBudget(keys: Long): Unit =
+    if (keys > degMirrorMaxKeys) {
+      mirrorActive = false
+      degF.clear(); degR.clear()
+      FastGraphState.log.warn(s"[fastgraph] driver degree mirror off ($keys keys > " +
+        s"budget $degMirrorMaxKeys); sharded-degree seed phase active")
     }
-  private def rebuildDegMirror(): Unit = if (driverDegreesActive) {
+  /** Folds per-key (fwd, rev) degree deltas into the mirror. The budget
+    * binds after every fold too: a stream of small batches that keeps
+    * minting new keys grows the mirror without ever passing through a
+    * rebuild (HashMap.size is O(1)). */
+  private def foldDegs(deltas: Iterable[(Long, Long, Long)]): Unit = if (mirrorActive) {
+    deltas.foreach { case (k, f, r) => foldDeg(degF, k, f); foldDeg(degR, k, r) }
+    checkMirrorBudget(math.max(degF.size.toLong, degR.size.toLong))
+  }
+  private def rebuildDegMirror(): Unit = if (mirrorActive) {
     // budget gate first: one cheap size job (no adjacency data moves)
     // decides whether an O(|V|) mirror is affordable at all
     val keys = shards.map(_.size.toLong).fold(0L)(_ + _)
-    if (keys > degMirrorMaxKeys) { disableDriverDegrees(keys); return }
-    degF.clear(); degR.clear()
-    shards.flatMap(_.iterator.map { case (k, adj) => (k, adj.degFwd, adj.degRev) })
-      .collect()
-      .foreach { case (k, f, r) =>
-        if (f != 0L) degF.put(k, java.lang.Long.valueOf(f))
-        if (r != 0L) degR.put(k, java.lang.Long.valueOf(r))
-      }
+    checkMirrorBudget(keys)
+    if (mirrorActive) {
+      degF.clear(); degR.clear()
+      foldDegs(shards.flatMap(_.iterator.map { case (k, adj) => (k, adj.degFwd, adj.degRev) })
+        .collect())
+    }
   }
   private var baseVersion: Long = 0L
   private var _lastBatchId: Long = -1L
@@ -147,8 +162,8 @@ final class FastGraphState(
   private var retired: List[(Long, RDD[Shard.T])] = Nil
   private var absorbSeq: Long = 0L
   private var pendingBcast: List[Broadcast[_]] = Nil
-  /** Persisted per-batch RDDs (distributed-absorb batches) still referenced
-    * by the returned match frame; unpersisted on the next absorb. */
+  /** Persisted per-batch RDDs (bulk-absorb batches) still referenced by the
+    * returned match frame; unpersisted on the next absorb of either form. */
   private var pendingRdds: List[RDD[_]] = Nil
   /** Outstanding async stat jobs (see [[applyBatchStatsAsync]]): bounds the
     * pipelined window and lets close() drain before unpersisting state. */
@@ -165,9 +180,7 @@ final class FastGraphState(
   def initialize(edges: DataFrame): Unit = {
     require(_lastBatchId == -1L && tailIds.isEmpty && baseVersion == 0L,
       "initialize requires empty state")
-    val rdd = edges.select("src", "dst", "w").rdd
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    installShards(engine.buildShards(rdd))
+    install(engine.buildShards(edgeRdd(edges)), eager = false)
     rebuildHot()
     rebuildDegMirror()
     stateDir.foreach { dir =>
@@ -195,25 +208,77 @@ final class FastGraphState(
     dpChain = Vector.empty
   }
 
-  /** Installs the post-batch shards WITHOUT an eager materialization job:
-    * the next batch's first job over the shards computes + caches them (one
-    * cheap HAMT fold) and completes the localCheckpoint — saving one
-    * scheduler round-trip per batch, which is real money at the batch=1000
-    * latency floor. Consequence for unpersist discipline: the PREVIOUS
-    * shards must stay alive until the new ones are materialized, i.e. until
-    * the NEXT batch's job has run — so retirement is deferred two absorbs
-    * (`retiringShards` → `pendingShards` → unpersist). */
-  private def installShards(next: RDD[Shard.T], prepared: Boolean = false): Unit = {
-    if (!prepared) {
-      next.persist()
-      next.localCheckpoint() // truncate lineage: recovery is WAL replay, not recompute
-      // single-relation motifs never run a per-batch job over the shards
-      // (seeds ARE the matches), so nothing would materialize `next` before
-      // its ancestor retires — materialize eagerly in that case only
-      if (engine.numAttrs == 2) next.count()
-    }
+  // ---- the absorb core: begin, install, commit ----
+
+  /** Begin step of every absorb. Lagged retirement: a shard generation
+    * superseded at absorb s is dropped only at absorb s + retireLag, by
+    * which point every job allowed to read it (the in-flight window) has
+    * drained and its successor is materialized. The previous absorb's
+    * broadcasts and batch RDDs go now: the match frame that read them has
+    * been consumed, by the [[applyBatch]] contract. */
+  private def beginAbsorb(): Unit = {
+    absorbSeq += 1
+    release(absorbSeq - retireLag)
+  }
+
+  /** Unpersists the shard generations retired at or before `retiredBy` and
+    * every pending broadcast and batch RDD. NOT destroy(): a checkpointed
+    * shard RDD object keeps its (dead) closure field referencing an earlier
+    * batch's broadcast, and task serialization embeds the handle —
+    * destroying it poisons every later job over the shards. unpersist drops
+    * executor copies now; the ContextCleaner reclaims the handle once the
+    * old shard RDD (its only referent after lineage truncation) is dropped. */
+  private def release(retiredBy: Long): Unit = {
+    val (drop, keep) = retired.partition(_._1 <= retiredBy)
+    drop.foreach(_._2.unpersist(false))
+    retired = keep
+    pendingBcast.foreach(_.unpersist(false)); pendingBcast = Nil
+    pendingRdds.foreach(_.unpersist(false)); pendingRdds = Nil
+  }
+
+  /** Makes `next` the current shard generation: persisted, lineage
+    * truncated (recovery is WAL replay, not recompute), and the superseded
+    * generation queued for lagged retirement. Unless `eager`, no
+    * materialization job runs here: the next batch's first job over the
+    * shards computes + caches them (one cheap HAMT fold) and completes the
+    * localCheckpoint — saving one scheduler round-trip per batch, which is
+    * real money at the batch=1000 latency floor. That is why the PREVIOUS
+    * generation must outlive the next absorb (`retireLag` ≥ 2). */
+  private def install(next: RDD[Shard.T], eager: Boolean): Unit = {
+    next.persist()
+    next.localCheckpoint()
+    // single-relation motifs never run a per-batch job over the shards
+    // (seeds ARE the matches), so nothing would materialize `next` before
+    // its ancestor retires — materialize eagerly in that case too
+    if (eager || engine.numAttrs == 2) next.count()
     retired ::= (absorbSeq, shards)
     shards = next
+  }
+
+  /** Commit step of every absorb, after the sink: the batch joins the WAL
+    * tail (a full tail compacts when durable, otherwise is dropped with a
+    * hot-set re-selection), then meta and the batch's lineage record are
+    * written. `perPart` (consolidated rows per state shard) is only
+    * evaluated when durable. */
+  private def commit(batchId: Long, distributed: Boolean, t0: Long)
+                    (perPart: => Iterable[(Int, Long)]): Unit = {
+    tailIds :+= batchId
+    _lastBatchId = batchId
+    if (tailIds.size >= maxTail) {
+      if (stateDir.isDefined) compact()
+      else { tailIds = Vector.empty; rebuildHot() }
+    }
+    stateDir.foreach { dir =>
+      writeMeta(dir)
+      val counts = perPart.toSeq.sortBy(_._1)
+      val partsJson =
+        if (lineageMetrics) counts.map { case (p, n) => s"""{"p":$p,"rows":$n}""" } else Nil
+      val ms = (System.nanoTime() - t0) / 1e6
+      val line = s"""{"batchId":$batchId,"inputRows":${counts.map(_._2).sum},""" +
+        s""""distributed":$distributed,"wallMs":$ms,"partitions":[${partsJson.mkString(",")}]}""" + "\n"
+      Files.writeString(Paths.get(dir, "metrics.jsonl"), line,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
   }
 
   /** Absorbs one micro-batch and returns consolidated match deltas
@@ -232,32 +297,28 @@ final class FastGraphState(
     // LocalRelation's row count is EXACT and free; for any other plan
     // `maxRows` is an UPPER BOUND and can only PROVE smallness — a filtered
     // LocalRelation reports its child's bound, and routing such a tiny
-    // batch through the distributed path (shard rebuild + O(|V|) mirror
-    // rebuild per batch) would silently cost orders of magnitude. When the
-    // plan can't decide, ONE bounded collect does double duty: it both
-    // sizes the batch and (when small) IS the driver-path collect — the
-    // round-4 form ran a full count() job and then re-scanned the same
-    // source in collectConsolidated, doubling every small parquet/stream-
-    // sourced micro-batch's input scan. Driver exposure is bounded at
+    // batch through the bulk absorb (eager shard install and hot rebuild
+    // per batch) would silently cost orders of magnitude. When the plan
+    // can't decide, ONE bounded collect does double duty: it both sizes the
+    // batch and (when small) IS the driver-path collect, so the batch's
+    // source is scanned once. Driver exposure is bounded at
     // largeBatchThreshold+1 rows (~24 B each) even for a huge batch.
     val plan = deltas.queryExecution.optimizedPlan
-    plan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.data.length > largeBatchThreshold => // exact, no job
-        return applyBatchDistributed(batchId, deltas, sink)
-      case _ =>
+    val exactRows = plan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(lr.data.length)
+      case _ => None
     }
-    val provenSmall = plan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case p => p.maxRows.exists(_ <= largeBatchThreshold)
-    }
-    val arr =
-      if (provenSmall) collectConsolidated(deltas)
-      else collectConsolidated(deltas, limit = Some(largeBatchThreshold + 1))
+    if (exactRows.exists(_ > largeBatchThreshold)) // exact, no job
+      return applyBatchDistributed(batchId, deltas, sink)
+    val provenSmall = exactRows.isDefined || plan.maxRows.exists(_ <= largeBatchThreshold)
+    // row order is irrelevant downstream (DeltaPack consolidates by key),
+    // so a limit-probe collect is a valid batch when it comes in under it
+    val sel = EdgeIndex.norm(deltas)
+    val arr = (if (provenSmall) sel else sel.limit(largeBatchThreshold + 1)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     if (arr.length > largeBatchThreshold)
       return applyBatchDistributed(batchId, deltas, sink)
-    val rdd = applyBatchRdd(batchId, arr, df => sink(df))
-    toDF(rdd)
+    toDF(applyBatchRdd(batchId, arr, sink))
   }
 
   /** Distributed absorb for LARGE batches (backfill / catch-up): the batch
@@ -266,34 +327,22 @@ final class FastGraphState(
     * — [[applyBatch]]'s collect + DeltaPack broadcast + per-seed routing
     * table are replaced by their distributed complements
     * ([[DeltaEngine.deltaStepDistributed]]). After the absorb the hot
-    * replica, degree mirror and broadcast chain are rebuilt from the new
-    * shards (amortized: this path is for batches that are a meaningful
-    * fraction of the state). Exactly-once contract unchanged: WAL before
-    * output, replayed ids are no-ops, meta commits after the sink. */
+    * replica and broadcast chain are rebuilt from the new shards
+    * (amortized: this path is for batches that are a meaningful fraction of
+    * the state) and the degree mirror folds the batch's per-key deltas.
+    * Exactly-once contract unchanged: WAL before output, replayed ids are
+    * no-ops, meta commits after the sink. */
   def applyBatchDistributed(batchId: Long, deltas: DataFrame,
                             sink: DataFrame => Unit = _ => ()): DataFrame = {
     if (batchId <= _lastBatchId) return emptyMatches
-    val w = if (deltas.columns.contains("w"))
-      org.apache.spark.sql.functions.col("w").cast("long")
-    else org.apache.spark.sql.functions.lit(1L)
-    val raw = deltas.select(
-        org.apache.spark.sql.functions.col("src").cast("long"),
-        org.apache.spark.sql.functions.col("dst").cast("long"), w.as("w"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    toDF(absorbDistributed(batchId, raw, sink))
+    toDF(absorbDistributed(batchId, edgeRdd(deltas), sink))
   }
 
-  /** Shared distributed-absorb core over a raw (unconsolidated) edge RDD. */
+  /** Bulk absorb over a raw (unconsolidated) edge RDD. */
   private def absorbDistributed(batchId: Long, raw: RDD[(Long, Long, Long)],
                                 sink: DataFrame => Unit): RDD[(ArraySeq[Long], Long)] = {
     val t0 = System.nanoTime()
-    absorbSeq += 1
-    val (drop, keep) = retired.partition(_._1 <= absorbSeq - retireLag)
-    drop.foreach(_._2.unpersist(false))
-    retired = keep
-    pendingBcast.foreach(_.unpersist(false)); pendingBcast = Nil
-    pendingRdds.foreach(_.unpersist(false)); pendingRdds = Nil
-
+    beginAbsorb()
     // consolidate to a canonical Z-set — the distributed complement of
     // DeltaPack's driver-side groupBy
     val batch = raw.map(e => ((e._1, e._2), e._3))
@@ -301,56 +350,39 @@ final class FastGraphState(
       .map { case ((s, d), net) => (s, d, net) }
       .filter(_._3 != 0L)
       .persist()
+    pendingRdds ::= batch // lineage feeds `matches`; dropped next absorb
     // write-ahead, distributed: the batch goes to parquet under wal/ before
     // any output, replacing the driver-funnel .bin WAL for this path (any
     // orphan .bin for this id from a crashed driver-path attempt is
     // cleared first — recovery must never replay both forms)
     stateDir.foreach { dir =>
       Files.createDirectories(Paths.get(dir, "wal"))
-      Files.deleteIfExists(Paths.get(dir, "wal", s"batch=$batchId.bin"))
+      Files.deleteIfExists(walPath(dir, batchId, "bin"))
       spark.createDataFrame(batch.map(e => Row(e._1, e._2, e._3)),
           FastGraphState.edgeSchema)
-        .write.mode("overwrite").parquet(walParquet(dir, batchId))
+        .write.mode("overwrite").parquet(walPath(dir, batchId, "parquet").toString)
     }
     val post = engine.updateShardsDistributed(shards, batch)
     val matches = engine.deltaStepDistributed(sc, shards, post, batch)
-    // persist + truncate + materialize the post generation BEFORE the sink
-    // runs: a sink that executes a job would otherwise compute the full
-    // distributed shard merge uncached, and rebuildHot/rebuildDegMirror
-    // would recompute it a second time right after
-    post.persist()
-    post.localCheckpoint()
-    post.count()
+    // install (and materialize) the post generation BEFORE the sink runs:
+    // a sink that executes a job would otherwise compute the full
+    // distributed shard merge uncached, and rebuildHot would recompute it
+    // a second time right after. `matches` keeps its own pre-batch handle.
+    install(post, eager = true)
     if (sink != null) sink(toDF(matches))
-    installShards(post, prepared = true)
     // the driver's replica never saw this batch: rebuild it from the new
     // shards (generation bump evicts executor hot caches; the DeltaPack
-    // chain restarts empty). The degree mirror folds the batch's own
-    // per-key deltas instead — no O(|V|) collect in the bulk path.
+    // chain restarts empty). The degree mirror folds the batch's per-key
+    // degree deltas (degree = Σw), aggregated distributed and collected:
+    // O(|batch keys|) driver work, no O(|V|) collect.
     rebuildHot()
-    foldDegMirrorDistributed(batch)
-    pendingRdds ::= batch // lineage feeds `matches`; dropped next absorb
-    tailIds :+= batchId
-    _lastBatchId = batchId
-    if (tailIds.size >= maxTail) {
-      if (stateDir.isDefined) compact()
-      else tailIds = Vector.empty // hot already rebuilt above
-    }
-    stateDir.foreach { dir =>
-      writeMeta(dir)
-      if (lineageMetrics) {
-        val part = engine.partitioner // local copy: the closure must not drag `this`
-        val perPart = batch.map(e => part.getPartition(e._1))
-          .countByValue().toSeq.sortBy(_._1)
-        val rows = perPart.map(_._2).sum
-        val ms = (System.nanoTime() - t0) / 1e6
-        val partsJson = perPart.map { case (p, n) => s"""{"p":$p,"rows":$n}""" }
-        val line =
-          s"""{"batchId":$batchId,"inputRows":$rows,"distributed":true,"wallMs":$ms,"partitions":[${partsJson.mkString(",")}]}\n"""
-        Files.writeString(Paths.get(dir, "metrics.jsonl"), line,
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      }
-    }
+    if (mirrorActive)
+      foldDegs(batch.flatMap { case (s, d, w) => Iterator((s, (w, 0L)), (d, (0L, w))) }
+        .reduceByKey((a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))
+        .map { case (k, (f, r)) => (k, f, r) }.collect())
+    val part = engine.partitioner // local copy: the closure must not drag `this`
+    commit(batchId, distributed = true, t0)(
+      batch.map(e => part.getPartition(e._1)).countByValue())
     matches
   }
 
@@ -367,21 +399,7 @@ final class FastGraphState(
       return absorbDistributed(batchId,
         sc.parallelize(ArraySeq.unsafeWrapArray(arr), parts), sink)
     val t0 = System.nanoTime()
-    // lagged retirement: an RDD superseded at absorb s is dropped only at
-    // absorb s + retireLag, by which point every job allowed to read it
-    // (the in-flight window) has drained and its successor is materialized
-    absorbSeq += 1
-    val (drop, keep) = retired.partition(_._1 <= absorbSeq - retireLag)
-    drop.foreach(_._2.unpersist(false))
-    retired = keep
-    // NOT destroy(): the checkpointed shard RDD object keeps its (dead)
-    // closure field referencing the previous batch's broadcast, and task
-    // serialization embeds the handle — destroying it poisons every later
-    // job over the shards. unpersist drops executor copies now; the
-    // ContextCleaner reclaims the handle once the old shard RDD (its only
-    // referent after lineage truncation) is dropped below.
-    pendingBcast.foreach(_.unpersist(false)); pendingBcast = Nil
-
+    beginAbsorb()
     stateDir.foreach(dir => writeWal(dir, batchId, arr)) // write-ahead
     val pack = DeltaPack(arr)
     val dp = sc.broadcast(pack)
@@ -390,23 +408,17 @@ final class FastGraphState(
     val hotRef = DeltaEngine.ChainHot(stateId, hotGen, hotBase, dpChain)
     val matches = engine.deltaStep(sc, shards, hotRef, dp, pack, degFn)
     if (sink != null) sink(toDF(matches))
-    installShards(engine.updateShards(shards, dp))
+    install(engine.updateShards(shards, dp), eager = false)
     hotAdj = DeltaEngine.foldHot(hotAdj, pack)
-    foldDegMirror(pack)
+    foldDegs(pack.fwd.view.map { case (k, r) => (k, r.degSum, 0L) } ++
+      pack.rev.view.map { case (k, r) => (k, 0L, r.degSum) })
     dpChain :+= dp
     // bound the fold chain even when compaction is far away: re-broadcast
     // the driver's folded replica and retire the chain
     if (dpChain.size >= FastGraphState.maxHotChain) rebaseHot()
-    tailIds :+= batchId
-    _lastBatchId = batchId
-    if (tailIds.size >= maxTail) {
-      if (stateDir.isDefined) compact()
-      else { tailIds = Vector.empty; rebuildHot() }
-    }
-    stateDir.foreach { dir =>
-      writeMeta(dir)
-      appendMetrics(dir, batchId, arr, t0)
-    }
+    commit(batchId, distributed = false, t0)(
+      pack.fwd.toSeq.groupMapReduce(kr => engine.partitioner.getPartition(kr._1))(
+        _._2.vs.length.toLong)(_ + _))
     matches
   }
 
@@ -467,8 +479,8 @@ final class FastGraphState(
     // post-commit GC (both WAL forms: driver .bin and distributed .parquet)
     rmrf(Paths.get(dir, "base", s"v=$oldVersion").toFile)
     folded.foreach { id =>
-      Files.deleteIfExists(Paths.get(dir, "wal", s"batch=$id.bin"))
-      rmrf(Paths.get(dir, "wal", s"batch=$id.parquet").toFile)
+      Files.deleteIfExists(walPath(dir, id, "bin"))
+      rmrf(walPath(dir, id, "parquet").toFile)
     }
   }
 
@@ -481,9 +493,7 @@ final class FastGraphState(
       catch { case _: Throwable => f.cancel() }
     }
     inflightStats.clear()
-    retired.foreach(_._2.unpersist(false)); retired = Nil
-    pendingBcast.foreach(_.unpersist(false)); pendingBcast = Nil
-    pendingRdds.foreach(_.unpersist(false)); pendingRdds = Nil
+    release(Long.MaxValue)
     hotBase.unpersist(false)
     dpChain.foreach(_.unpersist(false)); dpChain = Vector.empty
     DeltaEngine.HotCache.invalidate(stateId)
@@ -492,14 +502,9 @@ final class FastGraphState(
 
   // ---- plumbing ----
 
-  private def collectConsolidated(deltas: DataFrame,
-                                  limit: Option[Int] = None): Array[(Long, Long, Long)] = {
-    val sel = EdgeIndex.norm(deltas)
-    // row order is irrelevant downstream (DeltaPack consolidates by key),
-    // so a limit-probe collect is a valid batch when it comes in under it
-    limit.fold(sel)(sel.limit).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-  }
+  /** The one distributed edge reader: (src,dst[,w]) rows as long triples. */
+  private def edgeRdd(edges: DataFrame): RDD[(Long, Long, Long)] =
+    EdgeIndex.norm(edges).rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   /** Match-delta RDD → DataFrame via direct UnsafeRow emit (same writer the
     * batch path uses; the external-Row conversion cost ~1µs/row). */
@@ -534,17 +539,18 @@ final class FastGraphState(
     edges.write.mode("overwrite").parquet(s"$dir/base/v=$baseVersion")
   }
 
-  private def walParquet(dir: String, batchId: Long): String =
-    s"$dir/wal/batch=$batchId.parquet"
+  /** WAL of one batch: `bin` (driver absorb) or `parquet` (bulk absorb). */
+  private def walPath(dir: String, batchId: Long, form: String): java.nio.file.Path =
+    Paths.get(dir, "wal", s"batch=$batchId.$form")
 
   private def writeWal(dir: String, batchId: Long, arr: Array[(Long, Long, Long)]): Unit = {
-    val path = Paths.get(dir, "wal", s"batch=$batchId.bin")
+    val path = walPath(dir, batchId, "bin")
     Files.createDirectories(path.getParent)
     // a crash between a DISTRIBUTED absorb's parquet WAL and its meta
     // commit leaves an orphan parquet for this id; if the batch is then
     // re-delivered through THIS path, recovery would replay both forms —
     // clear the other form before committing ours
-    rmrf(Paths.get(dir, "wal", s"batch=$batchId.parquet").toFile)
+    rmrf(walPath(dir, batchId, "parquet").toFile)
     val buf = ByteBuffer.allocate(arr.length * 24)
     for ((s, d, w) <- arr) { buf.putLong(s); buf.putLong(d); buf.putLong(w) }
     buf.flip()
@@ -554,7 +560,7 @@ final class FastGraphState(
   }
 
   private def readWal(dir: String, batchId: Long): Array[(Long, Long, Long)] = {
-    val bytes = Files.readAllBytes(Paths.get(dir, "wal", s"batch=$batchId.bin"))
+    val bytes = Files.readAllBytes(walPath(dir, batchId, "bin"))
     val buf = ByteBuffer.wrap(bytes)
     Array.fill(bytes.length / 24)((buf.getLong, buf.getLong, buf.getLong))
   }
@@ -570,22 +576,6 @@ final class FastGraphState(
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def appendMetrics(dir: String, batchId: Long,
-                            arr: Array[(Long, Long, Long)], t0: Long): Unit = {
-    // per-partition lineage: delta rows routed to each state shard
-    val perPart =
-      if (lineageMetrics)
-        arr.groupBy(e => engine.partitioner.getPartition(e._1))
-          .toSeq.sortBy(_._1)
-          .map { case (p, es) => s"""{"p":$p,"rows":${es.length}}""" }
-      else Nil
-    val ms = (System.nanoTime() - t0) / 1e6
-    val line =
-      s"""{"batchId":$batchId,"inputRows":${arr.length},"wallMs":$ms,"partitions":[${perPart.mkString(",")}]}\n"""
-    Files.writeString(Paths.get(dir, "metrics.jsonl"), line,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
   private def recover(dir: String): Unit = {
     val metaPath = Paths.get(dir, "meta.json")
     if (!Files.exists(metaPath)) return
@@ -598,28 +588,16 @@ final class FastGraphState(
       .map(_.group(1)).filter(_.nonEmpty).map(_.split(",").map(_.toLong).toVector)
       .getOrElse(Vector.empty)
     val baseRdd: RDD[(Long, Long, Long)] =
-      if (baseVersion > 0)
-        spark.read.parquet(s"$dir/base/v=$baseVersion").select("src", "dst", "w")
-          .rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      if (baseVersion > 0) edgeRdd(spark.read.parquet(s"$dir/base/v=$baseVersion"))
       else sc.emptyRDD
     // tail batches: driver-written .bin WALs replay from the driver,
-    // distributed-absorb .parquet WALs replay as distributed reads
-    val binIds = tailIds.filter(id =>
-      Files.exists(Paths.get(dir, "wal", s"batch=$id.bin")))
-    val pqIds = tailIds.filter(id =>
-      Files.exists(Paths.get(dir, "wal", s"batch=$id.parquet")))
-    val tailEdges = binIds.flatMap(id => readWal(dir, id))
-    var all = if (tailEdges.isEmpty) baseRdd
-              else baseRdd.union(sc.parallelize(tailEdges, math.max(1, parts / 4)))
-    pqIds.foreach { id =>
-      all = all.union(spark.read.parquet(walParquet(dir, id))
-        .select("src", "dst", "w").rdd
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-    }
-    val next = engine.buildShards(all)
-    next.persist(); next.localCheckpoint(); next.count()
-    shards.unpersist(false)
-    shards = next
+    // bulk-absorb .parquet WALs replay as distributed reads
+    def tail(form: String) = tailIds.filter(id => Files.exists(walPath(dir, id, form)))
+    val binEdges = tail("bin").flatMap(readWal(dir, _))
+    val bin = if (binEdges.isEmpty) Nil else Seq(sc.parallelize(binEdges, math.max(1, parts / 4)))
+    val pq = tail("parquet").map(id =>
+      edgeRdd(spark.read.parquet(walPath(dir, id, "parquet").toString)))
+    install(engine.buildShards(sc.union(baseRdd +: (bin ++ pq))), eager = true)
     rebuildHot()
     rebuildDegMirror()
   }

@@ -94,7 +94,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     val batches = randomBatches(26, 5, 40, seed = 47L)
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4, maxTail = 3)
     val b = new FastGraphState(spark, Planner.triangle, numParts = 4, maxTail = 3,
-      driverDegrees = false)
+      degMirrorMaxKeys = 0)
     for ((batch, id) <- batches.zipWithIndex) {
       val r1 = sortedRows(a.applyBatch(id.toLong, df(batch)))
       val r2 = sortedRows(b.applyBatch(id.toLong, df(batch)))
@@ -286,7 +286,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("degree-mirror budget auto-switch: tiny budget == default, incl. bulk absorb") {
-    // budget 0 → sharded from initialize; budget 25 → the mirror starts
+    // budget 0 → sharded from the first batch; budget 25 → the mirror starts
     // driver-side and switches itself off mid-stream as the key set grows
     // (and the bulk batch's incremental fold must stay exact up to the
     // switch). Results must be identical in every configuration.
@@ -298,7 +298,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
       degMirrorMaxKeys = 25L)
     for ((batch, id) <- batches.zipWithIndex) {
       val r1 = sortedRows(base.applyBatch(id.toLong, df(batch)))
-      // one bulk batch exercises foldDegMirrorDistributed on all three
+      // one bulk batch exercises the bulk absorb's degree fold on all three
       def step(st: FastGraphState) = sortedRows(
         if (id == 3) st.applyBatchDistributed(id.toLong, df(batch))
         else st.applyBatch(id.toLong, df(batch)))
@@ -328,7 +328,7 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     val preds = Planner.ordered(3)
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds)
     val b = new FastGraphState(spark, Planner.triangle, numParts = 4, predicates = preds,
-      driverDegrees = false)
+      degMirrorMaxKeys = 0)
     for ((batch, id) <- batches.zipWithIndex) {
       val r1 = sortedRows(a.applyBatch(id.toLong, df(batch)))
       val r2 = sortedRows(b.applyBatch(id.toLong, df(batch)))
@@ -418,6 +418,62 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     ref.applyBatch(1L, df(batches(2))).collect()
     assert(out == sortedRows(ref.applyBatch(2L, df(batches(3)))))
     s2.close(); ref.close()
+  }
+
+  test("a bulk absorb's batch RDD is released by the next driver-path absorb") {
+    val batches = randomBatches(24, 3, 60, seed = 107L)
+    val sc = spark.sparkContext
+    val st = new FastGraphState(spark, Planner.triangle, numParts = 3)
+    val before = sc.getPersistentRDDs.keySet
+    st.applyBatchDistributed(0L, df(batches(0))).collect()
+    // the bulk absorb persists its consolidated batch and the new shard
+    // generation; the generation is state and stays inside the retirement
+    // window, but the batch must go at the next absorb of either form
+    val bulk = sc.getPersistentRDDs.collect {
+      case (id, rdd) if !before(id) && !rdd.isCheckpointed => id
+    }.toSet
+    assert(bulk.nonEmpty, "the bulk absorb persisted no batch RDD")
+    st.applyBatch(1L, df(batches(1))).collect()
+    st.applyBatch(2L, df(batches(2))).collect()
+    val left = bulk.intersect(sc.getPersistentRDDs.keySet)
+    assert(left.isEmpty, s"bulk-absorb RDDs still cached after two driver-path absorbs: $left")
+    st.close()
+  }
+
+  test("lineage: one record per committed batch, same fields on both absorb forms") {
+    import scala.jdk.CollectionConverters._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val Seq(b0, b1) = randomBatches(20, 2, 40, seed = 109L).map { b =>
+      b ++ b.take(5) ++ Seq((1L, 2L, 1L), (1L, 2L, -1L)) // duplicates + a cancelling pair
+    }
+    def consolidated(b: Seq[(Long, Long, Long)]): Long =
+      b.groupMapReduce(e => (e._1, e._2))(_._3)(_ + _).count(_._2 != 0L).toLong
+    for (lineage <- Seq(true, false)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fast_lineage")
+      val file = dir.resolve("metrics.jsonl")
+      def records() =
+        if (!java.nio.file.Files.exists(file)) Nil
+        else java.nio.file.Files.readAllLines(file).asScala.toSeq.map(json.readTree)
+      val st = new FastGraphState(spark, Planner.triangle, Some(dir.toString),
+        numParts = 3, maxTail = 100, lineageMetrics = lineage)
+      st.applyBatch(0L, df(b0)).collect()
+      assert(records().size == 1, s"driver absorb (lineageMetrics=$lineage)")
+      st.applyBatchDistributed(1L, df(b1)).collect()
+      assert(records().size == 2, s"bulk absorb (lineageMetrics=$lineage)")
+      st.applyBatch(1L, df(b1)).collect() // replayed id
+      assert(records().size == 2, "a replayed id appended a record")
+      val Seq(r0, r1) = records()
+      assert(r0.fieldNames.asScala.toSet == r1.fieldNames.asScala.toSet)
+      assert(!r0.get("distributed").asBoolean && r1.get("distributed").asBoolean)
+      for ((r, (id, b)) <- Seq(r0, r1).zip(Seq(0L -> b0, 1L -> b1))) {
+        assert(r.get("batchId").asLong == id)
+        assert(r.get("inputRows").asLong == consolidated(b), s"batch $id inputRows")
+        val rows = r.get("partitions").elements.asScala.map(_.get("rows").asLong).toSeq
+        if (lineage) assert(rows.sum == r.get("inputRows").asLong, s"batch $id partitions")
+        else assert(rows.isEmpty, s"batch $id partitions with lineageMetrics off")
+      }
+      st.close()
+    }
   }
 
   test("applyBatchStats matches DataFrame counts") {
