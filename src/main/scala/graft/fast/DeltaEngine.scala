@@ -181,10 +181,17 @@ object DeltaPack {
   * FastEngineSpec): for each motif relation r, seed that relation's delta
   * dataflow with the batch; constraints from relations before r read
   * post-batch state ("le", base merged on-the-fly with the broadcast
-  * delta), relations after r read pre-batch state ("lt") — each output
-  * change appears exactly once. Extension = count → argmin → propose →
-  * intersect per level, ties to the lowest extender id, zero-degree
-  * prefixes pruned; inline predicates fire at the earliest bound level.
+  * delta), relations after r read pre-batch state ("lt") — the
+  * derivatives' outputs sum to the exact match delta. Derivative r emits
+  * only bindings whose r atom is in the batch, each at most once, so a
+  * binding with a single changed atom has one producer and is already
+  * final; only a binding with two or more changed atoms can come out of
+  * several derivatives, and only those are consolidated
+  * ([[consolidateProps]]). The bulk absorb broadcasts no batch to tell the
+  * two apart, so there every match is consolidated. Extension = count →
+  * argmin → propose → intersect per level, ties to the lowest extender id,
+  * zero-degree prefixes pruned; inline predicates fire at the earliest
+  * bound level.
   *
   * PREDICATE PUSHDOWN: ordered/range predicates whose late side is the
   * level's NEW attribute are applied at propose time as a gallop to the
@@ -739,7 +746,9 @@ final class DeltaEngine(
 
   /** Runs one batch's delta step. Returns the CONSOLIDATED motif match
     * deltas, un-permuted to original attribute order: (bindings x0..x{k-1},
-    * net weight ≠ 0). */
+    * net weight ≠ 0), each binding once. Only bindings with two or more
+    * atoms in the broadcast batch are summed by [[consolidateProps]]; the
+    * rest have one producer. */
   def deltaStep(sc: SparkContext, shards: RDD[Shard.T], hot: DeltaEngine.HotProvider,
                 dp: Broadcast[DeltaPack], dpLocal: DeltaPack,
                 degMirror: Option[(Long, Boolean) => Long] = None): RDD[(ArraySeq[Long], Long)] = {
@@ -764,7 +773,7 @@ final class DeltaEngine(
         }
         countPropose(shards, shards, hot, dp, seeds, 0)
     }
-    consolidateProps(extend(shards, shards, hot, dp, level0))
+    consolidateProps(extend(shards, shards, hot, dp, level0), Some(dp))
   }
 
   /** The one level loop: intersect level 0's proposal blocks, then run
@@ -781,58 +790,76 @@ final class DeltaEngine(
     pr
   }
 
-  /** Single-relation motif (no extension stage): the consolidated seeds ARE
-    * the matches, one per relation whose predicates they pass. */
+  /** Single-edge motif (no extension stage): the consolidated seeds ARE
+    * the matches. The planner rejects a second relation on two attributes,
+    * so each seed yields at most one binding and no shuffle is needed. */
   private def edgeMatches(seeds: RDD[(Long, Long, Long)]): RDD[(ArraySeq[Long], Long)] = {
-    val inverses = plans.map(_.inverse.toArray)
+    val inv = plans.head.inverse
     val engine = this
     seeds.flatMap { case (s, d, w) =>
       val p = Array(s, d)
-      (0 until engine.numRels).iterator
-        .filter(r => engine.predsOk(r, p, 2))
-        .map { r =>
-          val inv = inverses(r)
-          (ArraySeq.unsafeWrapArray(Array(p(inv(0)), p(inv(1)))), w)
-        }
+      if (w != 0L && engine.predsOk(0, p, 2))
+        Iterator.single((ArraySeq.unsafeWrapArray(Array(p(inv(0)), p(inv(1)))), w))
+      else Iterator.empty
     }
-      .reduceByKey(new HashPartitioner(numParts), _ + _)
-      .filter(_._2 != 0L)
   }
 
   /** Final level: explode straight into per-target-partition PACKED blocks
-    * of [x0..x{k-1}, w] longs — the consolidation exchange then moves ~P²
-    * big primitive arrays instead of millions of tiny records. Measured:
+    * of [x0..x{k-1}, w] longs — the output exchange then moves ~P² big
+    * primitive arrays instead of millions of tiny records. Measured:
     * record-at-a-time consolidation cost ~6µs/match (Kryo + per-record
     * allocation, memory-bound, no core scaling); packed blocks serialize at
-    * memcpy speed with ZERO map-side allocation per match. Both sides are
-    * effort-bounded: the map side streams chunks through [[boundedIt]]; the
-    * reduce side sums weights in a [[SpillConsolidator]] whose in-memory map
-    * is capped (sorted runs spill to local disk and k-way merge), so a batch
-    * whose match-delta set exceeds task memory still completes. */
-  private def consolidateProps(pr: RDD[Prop]): RDD[(ArraySeq[Long], Long)] = {
+    * memcpy speed with ZERO map-side allocation per match.
+    *
+    * Only matches that two derivatives can emit are consolidated.
+    * Derivative r emits a binding only when its r atom is in the
+    * consolidated batch, and at most once (its seeds and runs are
+    * consolidated), so a binding none of whose OTHER atoms is in the batch
+    * has one producer and already carries its net weight. [[markMulti]]
+    * flags the rest — including a binding whose other atom is the seed's own
+    * edge (a self-loop or repeated node), since that edge is in the batch.
+    * Flagged matches are hash-routed by binding and summed in a
+    * [[SpillConsolidator]]; every other match is packed under the tag
+    * `np + map partition` and streamed straight out of the reduce side.
+    * `dp` is the broadcast batch, or None when there is none (the bulk
+    * absorb, whose DeltaPack holds degrees only): then every match is
+    * consolidated. Both sides are effort-bounded: the map side streams
+    * chunks through [[boundedIt]], and the consolidator's in-memory map is
+    * capped (sorted runs spill to local disk and k-way merge), so a
+    * match-delta set larger than task memory still completes. */
+  private def consolidateProps(pr: RDD[Prop],
+                               dp: Option[Broadcast[DeltaPack]]): RDD[(ArraySeq[Long], Long)] = {
     val inverses = plans.map(_.inverse.toArray)
     val n = numAttrs
     val lastPos = n - 1
     val np = numParts
     val packed: RDD[(Int, Array[Long])] =
-      pr.mapPartitions { it =>
-        boundedIt(np, it) { (prop, bb) =>
+      pr.mapPartitionsWithIndex { (part, it) =>
+        val d = dp.map(_.value).orNull
+        val direct = np + part % np
+        var mark = new Array[Boolean](64)
+        boundedIt(2 * np, it) { (prop, bb) =>
           val inv = inverses(prop.rel)
+          if (mark.length < prop.cands.length) mark = new Array[Boolean](prop.cands.length)
+          val allMulti = d == null || markMulti(prop, d, mark)
           var i = 0
           while (i < prop.cands.length) {
             val w = prop.w * prop.candWs(i)
             if (w != 0L) {
               val cand = prop.cands(i)
               if (predsOkWithLast(prop.rel, prop.p, cand, n)) {
-                var h = 0L
                 var a = 0
-                while (a < n) {
-                  val v = if (inv(a) == lastPos) cand else prop.p(inv(a))
-                  h = h * 0x9e3779b97f4a7c15L + v + 1
-                  a += 1
-                }
-                h ^= h >>> 32
-                val pid = ((h % np) + np).toInt % np
+                val pid =
+                  if (allMulti || mark(i)) {
+                    var h = 0L
+                    while (a < n) {
+                      val v = if (inv(a) == lastPos) cand else prop.p(inv(a))
+                      h = h * 0x9e3779b97f4a7c15L + v + 1
+                      a += 1
+                    }
+                    h ^= h >>> 32
+                    ((h % np) + np).toInt % np
+                  } else direct
                 val buf = bb.reserve(pid, n + 1)
                 var off = bb.off(pid)
                 a = 0
@@ -848,20 +875,64 @@ final class DeltaEngine(
           }
         }
       }
+    val rec = n + 1
     packed
       .partitionBy(DeltaEngine.identityPartitioner(np))
       .mapPartitions({ it =>
         val m = new SpillConsolidator(n, SpillConsolidator.defaultMaxEntries)
-        while (it.hasNext) {
-          val block = it.next()._2
-          var off = 0
-          while (off < block.length) {
-            m.add(block, off)
-            off += n + 1
+        it.flatMap { case (pid, block) =>
+          if (pid >= np) Iterator.range(0, block.length, rec).map { off =>
+            (ArraySeq.unsafeWrapArray(java.util.Arrays.copyOfRange(block, off, off + n)),
+              block(off + n))
+          } else {
+            var off = 0
+            while (off < block.length) { m.add(block, off); off += rec }
+            Iterator.empty
           }
-        }
-        m.result()
+        } ++ m.result()
       }, preservesPartitioning = false)
+  }
+
+  /** Other-atom table of [[markMulti]]: for each relation r, every motif
+    * atom t ≠ r as its (source, destination) prefix positions in r's plan. */
+  private val otherAtoms: IndexedSeq[Array[(Int, Int)]] =
+    plans.map { plan =>
+      motif.indices.filter(_ != plan.seedRelation).map { t =>
+        (plan.inverse(motif(t)._1), plan.inverse(motif(t)._2))
+      }.toArray
+    }
+
+  /** Classifies a final-level proposal against the broadcast batch `d`:
+    * true when some other atom of every candidate's binding is in `d` (an
+    * atom inside the prefix, tested once); otherwise `mark(i)` tells whether
+    * candidate i's binding has one (an atom on the last attribute: the batch
+    * run of its bound endpoint — forward when that endpoint is the source —
+    * merge-walked against the sorted candidates, galloping over gaps). */
+  private def markMulti(prop: Prop, d: DeltaPack, mark: Array[Boolean]): Boolean = {
+    val lastPos = numAttrs - 1
+    val cands = prop.cands
+    java.util.Arrays.fill(mark, 0, cands.length, false)
+    val atoms = otherAtoms(prop.rel)
+    var t = 0
+    while (t < atoms.length) {
+      val (sp, dpos) = atoms(t)
+      if (sp != lastPos && dpos != lastPos) {
+        if (java.util.Arrays.binarySearch(d.run(prop.p(sp), forward = true).vs, prop.p(dpos)) >= 0)
+          return true
+      } else {
+        val forward = dpos == lastPos
+        val run = d.run(prop.p(if (forward) sp else dpos), forward).vs
+        var i = 0
+        var off = 0
+        while (i < cands.length && off < run.length) {
+          off = IndexState.gallop(run, cands(i), off)
+          if (off < run.length && run(off) == cands(i)) mark(i) = true
+          i += 1
+        }
+      }
+      t += 1
+    }
+    false
   }
 
   /** Distributed delta step for LARGE batches — drops every |batch| ≪
@@ -873,7 +944,9 @@ final class DeltaEngine(
     * inclusive ("le") constraints, `preShards` for the rest — instead of
     * merging a broadcast DeltaPack on the fly. Output is identical to
     * `deltaStep` on the same batch (pinned by FastEngineSpec): post = pre ⊎
-    * delta by construction, so every lookup sees byte-equal state.
+    * delta by construction, so every lookup sees byte-equal state. With no
+    * broadcast batch to classify against, every match goes through the
+    * consolidating exchange ([[consolidateProps]] with `dp = None`).
     *
     * Hub skew is handled with DEGREE-ONLY hot entries
     * ([[DeltaEngine.buildDegOnlyHot]]): a full adjacency replica cannot be
@@ -899,7 +972,7 @@ final class DeltaEngine(
     val engine = this
     val seeds = batch.mapPartitions(it => engine.seedPfxBlocks(it, hot.value, engine.numRels))
     consolidateProps(extend(preShards, postShards, hot, dp,
-      countPropose(preShards, postShards, hot, dp, seeds, 0)))
+      countPropose(preShards, postShards, hot, dp, seeds, 0)), None)
   }
 
   /** Folds a distributed consolidated batch into the shards WITHOUT any
@@ -1986,11 +2059,12 @@ object DeltaEngine {
     if (m < 0) m + n else m
   }
 
-  /** Partitioner for pre-routed (pid, block) pairs. */
+  /** Partitioner for pre-routed (pid, block) pairs; a pid tagged with
+    * `+ n` (the direct blocks of `consolidateProps`) lands on pid - n. */
   def identityPartitioner(n: Int): org.apache.spark.Partitioner =
     new org.apache.spark.Partitioner {
       override def numPartitions: Int = n
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+      override def getPartition(key: Any): Int = key.asInstanceOf[Int] % n
     }
 
   def opCode(op: String): Int = op match {

@@ -258,8 +258,10 @@ final class FastGraphState(
   /** Commit step of every absorb, after the sink: the batch joins the WAL
     * tail (a full tail compacts when durable, otherwise is dropped with a
     * hot-set re-selection), then meta and the batch's lineage record are
-    * written. `perPart` (consolidated rows per state shard) is only
-    * evaluated when durable. */
+    * written. A bulk absorb (`distributed`) never folded its batch into the
+    * driver's replica, so the replica is rebuilt here — once, by the full
+    * tail's re-selection when there is one. `perPart` (consolidated rows
+    * per state shard) is only evaluated when durable. */
   private def commit(batchId: Long, distributed: Boolean, t0: Long)
                     (perPart: => Iterable[(Int, Long)]): Unit = {
     tailIds :+= batchId
@@ -267,7 +269,7 @@ final class FastGraphState(
     if (tailIds.size >= maxTail) {
       if (stateDir.isDefined) compact()
       else { tailIds = Vector.empty; rebuildHot() }
-    }
+    } else if (distributed) rebuildHot()
     stateDir.foreach { dir =>
       writeMeta(dir)
       val counts = perPart.toSeq.sortBy(_._1)
@@ -366,16 +368,15 @@ final class FastGraphState(
     val matches = engine.deltaStepDistributed(sc, shards, post, batch)
     // install (and materialize) the post generation BEFORE the sink runs:
     // a sink that executes a job would otherwise compute the full
-    // distributed shard merge uncached, and rebuildHot would recompute it
-    // a second time right after. `matches` keeps its own pre-batch handle.
+    // distributed shard merge uncached, and commit's hot rebuild would
+    // recompute it a second time. `matches` keeps its own pre-batch handle.
     install(post, eager = true)
     if (sink != null) sink(toDF(matches))
-    // the driver's replica never saw this batch: rebuild it from the new
-    // shards (generation bump evicts executor hot caches; the DeltaPack
-    // chain restarts empty). The degree mirror folds the batch's per-key
-    // degree deltas (degree = Σw), aggregated distributed and collected:
-    // O(|batch keys|) driver work, no O(|V|) collect.
-    rebuildHot()
+    // the driver's replica never saw this batch: commit rebuilds it from
+    // the new shards (generation bump evicts executor hot caches; the
+    // DeltaPack chain restarts empty). The degree mirror folds the batch's
+    // per-key degree deltas (degree = Σw), aggregated distributed and
+    // collected: O(|batch keys|) driver work, no O(|V|) collect.
     if (mirrorActive)
       foldDegs(batch.flatMap { case (s, d, w) => Iterator((s, (w, 0L)), (d, (0L, w))) }
         .reduceByKey((a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))

@@ -378,6 +378,92 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     a.close(); b.close()
   }
 
+  test("single-edge motif, driver path: duplicate and cancelling raw rows") {
+    val motif = Seq((0, 1))
+    val batches = Seq(
+      Seq((1L, 2L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 2L), (3L, 4L, -2L), (4L, 1L, 1L)),
+      Seq((1L, 2L, -1L), (2L, 3L, -1L), (2L, 3L, 1L), (5L, 5L, 1L), (4L, 1L, -1L), (1L, 4L, 3L)),
+      Seq((1L, 2L, -1L), (5L, 5L, 1L), (5L, 5L, -2L), (6L, 7L, 1L), (6L, 7L, -1L)))
+    val st = new FastGraphState(spark, motif, numParts = 3)
+    var before = Seq.empty[(Long, Long, Long)]
+    for ((batch, id) <- batches.zipWithIndex) {
+      val expect = BruteForce.rows(BruteForce.delta(before, batch, motif))
+      assert(sortedRows(st.applyBatch(id.toLong, df(batch))) == expect, s"batch=$id")
+      before ++= batch
+    }
+    st.close()
+  }
+
+  test("broadcast absorb: single-delta and multi-delta matches split exactly") {
+    // state: a random graph over nodes 1..12, so most of a batch's matches
+    // have one changed atom (the direct path); each batch then plants the
+    // shapes whose matches have two or more (the consolidating path)
+    val rnd = new scala.util.Random(113L)
+    val preload = (0 until 70).map { _ =>
+      var s = 0L; var d = 0L
+      while (s == d) { s = 1L + rnd.nextInt(12); d = 1L + rnd.nextInt(12) }
+      (s, d, 1L)
+    }
+    val k4 = for (a <- 1L to 4L; b <- 1L to 4L if a != b) yield (a, b, 1L)
+    val batches = Seq(
+      // whole triangles / 4-cliques (every orientation) plus their duplicates
+      k4 ++ k4.take(5) ++ Seq((9L, 10L, 1L), (10L, 11L, 1L), (11L, 9L, 1L), (9L, 11L, 1L)),
+      // a (+w, −w) pair cancelling inside the batch, beside inserts of the
+      // edges that would close triangles on it
+      Seq((7L, 8L, 2L), (7L, 8L, -2L), (7L, 9L, 1L), (8L, 9L, 1L), (9L, 7L, 1L),
+        (1L, 2L, 1L), (1L, 2L, -1L), (1L, 5L, 1L), (2L, 5L, 1L)),
+      // retractions next to inserts of the same triangles' other edges
+      Seq((1L, 3L, -1L), (1L, 10L, 1L), (3L, 10L, 1L), (10L, 1L, 1L),
+        (2L, 3L, -1L), (2L, 11L, 1L), (3L, 11L, 1L), (9L, 10L, -1L), (9L, 12L, 1L)),
+      // self-loops beside edges into them: two atoms of one binding are one edge
+      Seq((5L, 5L, 1L), (4L, 5L, 1L), (5L, 4L, 1L), (2L, 2L, 1L), (1L, 2L, 1L), (6L, 6L, 1L)))
+    for (motif <- Seq(Planner.triangle, Planner.cycle3, Planner.clique4);
+         ordered <- Seq(false, true)) {
+      val n = motif.flatMap(e => Seq(e._1, e._2)).max + 1
+      val preds = if (ordered) Planner.ordered(n) else Nil
+      val bcast = new FastGraphState(spark, motif, numParts = 3, predicates = preds)
+      val bulk = new FastGraphState(spark, motif, numParts = 3, predicates = preds)
+      bcast.initialize(df(preload)); bulk.initialize(df(preload))
+      var before: Seq[(Long, Long, Long)] = preload
+      for ((batch, id) <- batches.zipWithIndex) {
+        val expect = BruteForce.rows(BruteForce.delta(before, batch, motif, preds))
+        val tag = s"motif=$motif ordered=$ordered batch=$id"
+        assert(sortedRows(bcast.applyBatch(id.toLong, df(batch))) == expect, s"broadcast $tag")
+        assert(sortedRows(bulk.applyBatchDistributed(id.toLong, df(batch))) == expect, s"bulk $tag")
+        before ++= batch
+      }
+      bcast.close(); bulk.close()
+    }
+  }
+
+  test("a bulk absorb that fills the tail rebuilds the hot replica once") {
+    val batches = randomBatches(24, 3, 60, seed = 127L)
+    val sc = spark.sparkContext
+    // one `top` job per DeltaEngine.buildHot call
+    val tops = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(s => s.name.startsWith("top at") &&
+            s.details.contains("DeltaEngine$.buildHot"))) tops.incrementAndGet()
+    }
+    for (durable <- Seq(false, true)) {
+      val dir = if (durable)
+        Some(java.nio.file.Files.createTempDirectory("graft_fast_hot").toString) else None
+      val st = new FastGraphState(spark, Planner.triangle, dir, numParts = 3, maxTail = 2)
+      st.initialize(df(batches(0)))
+      st.applyBatchDistributed(0L, df(batches(1))).collect()
+      sc.addSparkListener(listener)
+      try {
+        org.apache.spark.ListenerBusDrain(sc)
+        tops.set(0)
+        st.applyBatchDistributed(1L, df(batches(2))).collect() // fills the tail
+        org.apache.spark.ListenerBusDrain(sc)
+        assert(tops.get == 1, s"buildHot calls on the tail-filling bulk absorb (durable=$durable)")
+      } finally sc.removeSparkListener(listener)
+      st.close()
+    }
+  }
+
   test("threshold switch: applyBatch auto-routes oversized batches distributed") {
     val batches = randomBatches(26, 4, 120, seed = 67L)
     val a = new FastGraphState(spark, Planner.triangle, numParts = 4)

@@ -152,6 +152,50 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("hub edges streamed in the batch: multi-delta matches spill and stay exact") {
+    // the planted-hub shape with the hub edges arriving (again) in the same
+    // batch as the edges between its neighbors: every triangle through the
+    // hub has two or more changed atoms, so its matches take the
+    // consolidating path, which must spill under the forced-tiny cap. Half
+    // the neighbor edges are preloaded too, so on those triangles all three
+    // derivatives emit a nonzero weight that must be summed
+    val prev = sys.props.get("spark.graft.consolidate.maxEntries")
+    sys.props("spark.graft.consolidate.maxEntries") = "16"
+    try {
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(StructField("src", LongType),
+        StructField("dst", LongType), StructField("w", LongType)))
+      def df(edges: Seq[(Long, Long, Long)]) = spark.createDataFrame(
+        edges.map(e => Row(e._1, e._2, e._3)).asJava, schema)
+      val hub = 0L
+      val n = 120
+      val rnd = new scala.util.Random(89L)
+      val hubEdges = (1 to n).flatMap(i => Seq((hub, i.toLong, 1L), (i.toLong, hub, 1L)))
+      val between = (0 until 300).map { _ =>
+        var a = 0L; var b = 0L
+        while (a == b) { a = 1L + rnd.nextInt(n); b = 1L + rnd.nextInt(n) }
+        (a, b, 1L)
+      }
+      val preload = hubEdges ++ between.take(150)
+      val batch = hubEdges ++ between
+      val fast = new FastGraphState(spark, Planner.triangle, numParts = 4)
+      fast.initialize(df(preload))
+      val expect = BruteForce.rows(BruteForce.delta(preload, batch, Planner.triangle))
+      val spilled = SpillConsolidator.spillFiles.get
+      val got = BruteForce.rowsOf(fast.applyBatch(0L, df(batch)))
+      assert(got.length == expect.length && got == expect)
+      assert(SpillConsolidator.spillFiles.get > spilled, "the consolidator never spilled")
+      fast.close()
+    } finally {
+      prev match {
+        case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
+        case None => sys.props.remove("spark.graft.consolidate.maxEntries")
+      }
+    }
+  }
+
   test("fast engine matches the DataFrame engine under a forced-tiny spill cap") {
     val prev = sys.props.get("spark.graft.consolidate.maxEntries")
     sys.props("spark.graft.consolidate.maxEntries") = "8"
