@@ -1,26 +1,37 @@
 package graft.fast
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, File, FileInputStream, FileOutputStream}
-import scala.collection.immutable.ArraySeq
 
-/** Bounded-memory consolidation of packed match-delta records.
+/** Bounded-memory consolidation of packed match-delta records
+  * `[x0..x{n-1}, w]`.
   *
   * The reduce side of [[DeltaEngine.consolidateProps]] sums the weights of
   * the match changes that two derivatives can emit: on a broadcast batch,
   * the multi-delta remainder (bindings with a second atom in the batch); on
-  * the bulk absorb, every match change. An unbounded java.util.HashMap
-  * there would be the one failure mode the reference explicitly defends
-  * against with effort accounting (`expend`,
+  * the bulk absorb, every match change. The sum runs in a primitive
+  * open-addressing table in [[LocalIndex]]'s idiom (power-of-two slots,
+  * linear probing, load ≤ 1/2): each slot holds its key longs and weight
+  * inline in one `long[]` (`n + 1` longs per slot) under a used flag, so a
+  * record costs one probe and no allocation. A boxed map here (an
+  * `ArraySeq` key, a `java.lang.Long` and a `java.util.HashMap` node per
+  * binding, a get then a put) drew 61% of the result stage's JFR samples
+  * on `stream_churn_b20000`; with the table and packed output that stage's
+  * executor CPU per batch went 1,092 → 364 ms (traced seed-42 pair, 4
+  * cores). A weight that nets to zero stays in its slot and is dropped on
+  * drain or rehash, so no tombstones are needed.
+  *
+  * An unbounded table would be the one failure mode the reference
+  * explicitly defends against with effort accounting (`expend`,
   * /root/reference/src/index.rs:227-236) after its 6-clique run died on
-  * unbounded intermediate state (/root/reference/README.md:150-176). Here
-  * the in-memory map is capped: past `maxEntries` the entries are sorted
-  * (lexicographically by binding) and written to a local spill file as raw
-  * big-endian longs; `result()` k-way merges the spilled runs with the
-  * final in-memory run, summing weights of equal bindings and dropping
-  * zeros. Batches that never spill (the common streaming case: only the
-  * multi-delta remainder arrives, measured at 6% of a `stream_b1000`
-  * batch's match changes and 35% of a `stream_churn_b20000` batch's) keep
-  * the fast path: one hash map, no sort, no IO.
+  * unbounded intermediate state (the reference's README.md:150-176). So the
+  * table holds at most `maxEntries` bindings: when its load limit is
+  * reached and the doubled table would pass that cap, it spills instead of
+  * growing — its entries are compacted in place, sorted (lexicographically
+  * by binding) and written to a local spill file as raw big-endian longs.
+  * `result()` k-way merges the spilled runs with the final in-memory run,
+  * summing weights of equal bindings and dropping zeros. Batches that never
+  * spill (the common streaming case) drain the table directly: no sort, no
+  * IO.
   *
   * Spill files land in the first `spark.local.dir` when configured (the
   * bench points it at tmpfs; clusters get their fast local disks), else
@@ -29,8 +40,20 @@ import scala.collection.immutable.ArraySeq
   */
 final class SpillConsolidator(n: Int, maxEntries: Int) {
   require(n >= 1 && maxEntries >= 1)
-  private val map = new java.util.HashMap[ArraySeq[Long], java.lang.Long](
-    math.min(maxEntries.toLong + 1, 1L << 20).toInt)
+  private val rec = n + 1
+  /** Largest slot count the cap allows: load 1/2 of it stays within
+    * `maxEntries`, and its `long[]` within the JVM's array limit. */
+  private val maxSlots: Int = {
+    var c = 2
+    while (c <= maxEntries && c.toLong * 2 * rec <= SpillConsolidator.maxArrayLongs) c <<= 1
+    c
+  }
+  // the table: allocated on the first add, so a reduce task that only
+  // passes direct blocks through never pays for it
+  private var slots: Array[Long] = null
+  private var used: Array[Boolean] = null
+  private var shift = 0
+  private var size = 0
   private val spills = scala.collection.mutable.ArrayBuffer.empty[File]
   /** Runs whose streams are open. EOF-driven cleanup alone is not enough:
     * a merge iterator abandoned mid-stream (downstream take/limit, task
@@ -53,70 +76,125 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
     spills.foreach(f => if (f.exists()) f.delete())
   }
 
+  private def alloc(cap: Int): Unit = {
+    slots = new Array[Long](cap * rec)
+    used = new Array[Boolean](cap)
+    shift = 64 - Integer.numberOfTrailingZeros(cap)
+  }
+
+  /** Home slot of the n-long key at `block(off)`. The reduce partition was
+    * chosen from the binding's routing hash, so every key here shares its
+    * value mod the partition count: the slot takes the top bits of a
+    * separately finalized hash. */
+  private def slotOf(block: Array[Long], off: Int): Int = {
+    var h = 0L
+    var i = 0
+    while (i < n) { h = SpillConsolidator.fmix64(h + block(off + i)); i += 1 }
+    (h >>> shift).toInt
+  }
+
+  /** Slot holding the key at `block(off)`, or the free slot where it goes. */
+  private def find(block: Array[Long], off: Int): Int = {
+    val mask = used.length - 1
+    var s = slotOf(block, off)
+    while (used(s)) {
+      var i = 0
+      val base = s * rec
+      while (i < n && slots(base + i) == block(off + i)) i += 1
+      if (i == n) return s
+      s = (s + 1) & mask
+    }
+    s
+  }
+
   /** Folds in one packed record: `n` binding longs at `block(off)` followed
     * by the signed weight. */
   def add(block: Array[Long], off: Int): Unit = {
-    val key = ArraySeq.unsafeWrapArray(
-      java.util.Arrays.copyOfRange(block, off, off + n))
-    val w = block(off + n)
-    val prev = map.get(key)
-    if (prev == null) {
-      map.put(key, java.lang.Long.valueOf(w))
-      if (map.size() > maxEntries) spill()
-    } else {
-      val s = prev.longValue() + w
-      // zero nets are dropped from the map; earlier spilled partials of the
-      // same key (if any) still merge correctly — sums are associative
-      if (s == 0L) map.remove(key) else map.put(key, java.lang.Long.valueOf(s))
+    if (slots == null) alloc(math.min(SpillConsolidator.initialSlots, maxSlots))
+    var s = find(block, off)
+    if (used(s)) slots(s * rec + n) += block(off + n)
+    else {
+      if (size + 1 > used.length / 2) {
+        // spill BEFORE a resize would pass the cap, never after
+        if (used.length >= maxSlots) spill() else grow()
+        s = find(block, off)
+      }
+      System.arraycopy(block, off, slots, s * rec, rec)
+      used(s) = true
+      size += 1
+    }
+  }
+
+  /** Rehashes into a table twice the size; zero nets are left behind. */
+  private def grow(): Unit = {
+    val oldSlots = slots
+    val oldUsed = used
+    alloc(oldUsed.length * 2)
+    size = 0
+    var j = 0
+    while (j < oldUsed.length) {
+      if (oldUsed(j) && oldSlots(j * rec + n) != 0L) {
+        val s = find(oldSlots, j * rec)
+        System.arraycopy(oldSlots, j * rec, slots, s * rec, rec)
+        used(s) = true
+        size += 1
+      }
+      j += 1
     }
   }
 
   /** Number of spill files written so far (diagnostics / tests). */
   def spillCount: Int = spills.size
 
-  private def spill(): Unit = {
-    // pack entries into one primitive buffer and sort an offset index with
-    // an inlined-comparison quicksort — a boxed-tuple TimSort here cost
-    // multi-second sorts per 4M-entry run (jstack-measured as the dominant
-    // executor state whenever consolidation spilled)
-    val rec = n + 1
-    val size = map.size()
-    val buf = new Array[Long](size * rec)
-    val idx = new Array[Int](size)
-    val it = map.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey.unsafeArray.asInstanceOf[Array[Long]]
-      System.arraycopy(k, 0, buf, i * rec, n)
-      buf(i * rec + n) = e.getValue.longValue()
-      idx(i) = i * rec
-      i += 1
+  /** Moves every nonzero entry to the front of `slots` (record i at
+    * `i * rec`), clears the table and returns the entry count. */
+  private def compact(): Int = {
+    var m = 0
+    var j = 0
+    while (j < used.length) {
+      if (used(j) && slots(j * rec + n) != 0L) {
+        if (m != j) System.arraycopy(slots, j * rec, slots, m * rec, rec)
+        m += 1
+      }
+      j += 1
     }
-    SpillConsolidator.sortOffsets(buf, idx, n)
+    java.util.Arrays.fill(used, false)
+    size = 0
+    m
+  }
+
+  private def spill(): Unit = {
+    // sort an offset index over the compacted entries with an inlined-
+    // comparison quicksort — a boxed-tuple TimSort here cost multi-second
+    // sorts per 4M-entry run (jstack-measured as the dominant executor
+    // state whenever consolidation spilled)
+    val m = compact()
+    if (m == 0) return
+    val idx = Array.tabulate(m)(_ * rec)
+    SpillConsolidator.sortOffsets(slots, idx, n)
     val f = File.createTempFile("graft-consolidate-", ".bin", SpillConsolidator.spillDir)
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f), 1 << 20))
     try {
-      i = 0
-      while (i < size) {
+      var i = 0
+      while (i < m) {
         val off = idx(i)
         var j = 0
-        while (j <= n) { out.writeLong(buf(off + j)); j += 1 }
+        while (j < rec) { out.writeLong(slots(off + j)); j += 1 }
         i += 1
       }
     } finally out.close()
     spills += f
     SpillConsolidator.spillFiles.incrementAndGet()
-    map.clear()
   }
 
-  /** One cursor over a sorted spill run. */
-  private final class Run(f: File) {
+  /** One cursor over a sorted spill run, reading through a `bufBytes`
+    * buffer; `key` is overwritten in place by each advance. */
+  private final class Run(f: File, bufBytes: Int) {
     private val in = new DataInputStream(
-      new BufferedInputStream(new FileInputStream(f), 1 << 20))
+      new BufferedInputStream(new FileInputStream(f), bufBytes))
     private var closed = false
     openRuns += this
-    var key: Array[Long] = null
+    val key = new Array[Long](n)
     var w: Long = 0L
     var live: Boolean = advance()
     def close(): Unit = if (!closed) {
@@ -127,11 +205,9 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
     }
     def advance(): Boolean =
       try {
-        val k = new Array[Long](n)
-        k(0) = in.readLong() // EOF surfaces here, before any partial state
+        key(0) = in.readLong() // EOF surfaces here, at a record boundary
         var i = 1
-        while (i < n) { k(i) = in.readLong(); i += 1 }
-        key = k
+        while (i < n) { key(i) = in.readLong(); i += 1 }
         w = in.readLong()
         live = true
         true
@@ -141,52 +217,53 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
       }
   }
 
-  /** Drains the consolidator: each distinct binding exactly once with its
-    * net weight, zeros dropped. Call once; the instance is spent after. */
-  def result(): Iterator[(ArraySeq[Long], Long)] = {
+  /** Drains the consolidator as packed blocks of at most
+    * [[SpillConsolidator.blockLongs]] longs: each distinct binding exactly
+    * once as `[x0..x{n-1}, w]` with its net weight, zeros dropped. Call
+    * once; the instance is spent after. */
+  def result(): Iterator[Array[Long]] = {
+    val perBlock = math.max(1, SpillConsolidator.blockLongs / rec)
     if (spills.isEmpty) {
-      // no-spill fast path — identical to the pre-existing hash consolidation
-      import scala.jdk.CollectionConverters._
-      return map.entrySet().iterator().asScala
-        .map(e => (e.getKey, e.getValue.longValue()))
-        .filter(_._2 != 0L)
+      if (slots == null) return Iterator.empty
+      val m = compact()
+      val table = slots
+      slots = null; used = null
+      return Iterator.range(0, m, perBlock).map { i =>
+        java.util.Arrays.copyOfRange(table, i * rec, math.min(m, i + perBlock) * rec)
+      }
     }
-    if (!map.isEmpty) spill() // final in-memory run joins the merge
-    val runs = spills.map(new Run(_)).filter(_.live)
+    if (size > 0) spill() // final in-memory run joins the merge
+    slots = null; used = null
+    // the merge's read buffers share 64 MB (1 MB each at most, 8 KB at
+    // least): one buffer per run must not outgrow the heap when a small cap
+    // left thousands of runs
+    val bufBytes = math.max(1 << 13, math.min(1 << 20, (64 << 20) / spills.size))
+    val runs = spills.map(new Run(_, bufBytes)).filter(_.live)
     val pq = new java.util.PriorityQueue[Run](math.max(1, runs.size),
-      (a: Run, b: Run) => SpillConsolidator.compareKeys(a.key, b.key))
+      (a: Run, b: Run) => SpillConsolidator.compareKeys(a.key, b.key, 0))
     runs.foreach(pq.add)
-    new Iterator[(ArraySeq[Long], Long)] {
-      private var nextKV: (ArraySeq[Long], Long) = null
-      private def pull(): Unit = {
-        nextKV = null
-        while (nextKV == null && !pq.isEmpty) {
+    new Iterator[Array[Long]] {
+      def hasNext: Boolean = !pq.isEmpty
+      def next(): Array[Long] = {
+        if (pq.isEmpty) throw new NoSuchElementException
+        val out = new Array[Long](perBlock * rec)
+        var o = 0
+        while (o < out.length && !pq.isEmpty) {
           val head = pq.poll()
-          val k = head.key
+          System.arraycopy(head.key, 0, out, o, n)
           var w = head.w
           if (head.advance()) pq.add(head)
           // fold every run positioned at the same binding
-          var more = true
-          while (more && !pq.isEmpty) {
-            val peek = pq.peek()
-            if (SpillConsolidator.compareKeys(peek.key, k) == 0) {
-              val r = pq.poll()
-              w += r.w
-              if (r.advance()) pq.add(r)
-            } else more = false
+          while (!pq.isEmpty && SpillConsolidator.compareKeys(out, pq.peek().key, o) == 0) {
+            val r = pq.poll()
+            w += r.w
+            if (r.advance()) pq.add(r)
           }
-          if (w != 0L) nextKV = (ArraySeq.unsafeWrapArray(k), w)
+          if (w != 0L) { out(o + n) = w; o += rec }
         }
+        if (o == out.length) out else java.util.Arrays.copyOf(out, o)
       }
-      pull()
-      def hasNext: Boolean = nextKV != null
-      def next(): (ArraySeq[Long], Long) = {
-        val out = nextKV
-        if (out == null) throw new NoSuchElementException
-        pull()
-        out
-      }
-    }
+    }.filter(_.length > 0)
   }
 }
 
@@ -195,15 +272,42 @@ object SpillConsolidator {
     * in local mode the tests read it across a whole Spark job). */
   private[fast] val spillFiles = new java.util.concurrent.atomic.AtomicLong()
 
-  /** In-memory entry cap before a sorted run is spilled, HEAP-AWARE:
-    * heap/(2·cores) bytes per task at ~96B/entry (clamped to [2^20, 2^24]),
-    * so a task only pays the sort+spill+merge once its map is a real
-    * fraction of its fair heap share. A fixed low cap was measured costing
-    * 2× end-to-end at 2 cores (few partitions → millions of entries per
-    * reduce task → every batch spilled needlessly while the 48g heap sat
-    * idle). Override with `spark.graft.consolidate.maxEntries` (session
-    * conf — propagated to executors) for tests or special shapes. */
-  def defaultMaxEntries: Int = {
+  /** Longs per block [[SpillConsolidator.result]] yields: the chunk size
+    * of the engine's packed exchange blocks. */
+  private val blockLongs = 32768
+
+  /** Slots of a fresh table (it grows by doubling up to the cap). */
+  private[fast] val initialSlots = 1 << 12
+
+  /** Largest table `long[]`, under the JVM's array-length limit. */
+  private val maxArrayLongs = 1L << 30
+
+  /** Murmur3's 64-bit finalizer. */
+  private def fmix64(x: Long): Long = {
+    var h = x
+    h ^= h >>> 33
+    h *= 0xff51afd7ed558ccdL
+    h ^= h >>> 33
+    h *= 0xc4ceb9fe1a85ec53L
+    h ^ (h >>> 33)
+  }
+
+  /** Heap bytes per binding of a table over `n`-long keys, while it
+    * resizes: at load 1/2 a binding holds two slots of `n + 1` longs and a
+    * used flag, and a resize holds the old and the doubled table at once,
+    * so about twice that. Clique4 bindings (`n = 4`) cost 164 B. */
+  private def bytesPerEntry(n: Int): Long = 2L * 2L * (8L * (n + 1) + 1L)
+
+  /** In-memory binding cap before a sorted run is spilled, HEAP-AWARE:
+    * heap/(2·task slots) bytes per task at [[bytesPerEntry]] (clamped to
+    * [2^20, 2^24]), so a task only pays the sort+spill+merge once its table
+    * is a real fraction of its fair heap share. A fixed low cap was
+    * measured costing 2× end-to-end at 2 cores (few partitions → millions
+    * of entries per reduce task → every batch spilled needlessly while the
+    * 48g heap sat idle). Override with `spark.graft.consolidate.maxEntries`
+    * (session conf — propagated to executors) for tests or special
+    * shapes. */
+  def defaultMaxEntries(n: Int): Int = {
     val env = org.apache.spark.SparkEnv.get
     val conf = if (env != null) env.conf.getOption("spark.graft.consolidate.maxEntries") else None
     conf.orElse(sys.props.get("spark.graft.consolidate.maxEntries"))
@@ -225,7 +329,7 @@ object SpillConsolidator {
               if (env != null) env.conf.getInt("spark.executor.cores", procs) else procs
           }
         val perTask = rt.maxMemory() / (2L * math.max(1, slots))
-        math.max(1 << 20, math.min(1 << 24, (perTask / 96L).toInt))
+        math.max(1 << 20, math.min(1L << 24, perTask / bytesPerEntry(n)).toInt)
       }
   }
 
@@ -238,10 +342,11 @@ object SpillConsolidator {
     dir
   }
 
-  private def compareKeys(a: Array[Long], b: Array[Long]): Int = {
+  /** Compares the key of `b` with the equally long key at `a(aOff)`. */
+  private def compareKeys(a: Array[Long], b: Array[Long], aOff: Int): Int = {
     var i = 0
-    while (i < a.length) {
-      val c = java.lang.Long.compare(a(i), b(i))
+    while (i < b.length) {
+      val c = java.lang.Long.compare(a(aOff + i), b(i))
       if (c != 0) return c
       i += 1
     }
@@ -249,7 +354,7 @@ object SpillConsolidator {
   }
 
   /** Quicksort of record offsets into `buf`, ordering the n-long keys at
-    * each offset lexicographically (keys are hash-map distinct, so no
+    * each offset lexicographically (keys are table-distinct, so no
     * equal-key runs; median-of-3 pivots guard the sorted/reversed cases).
     * Primitive throughout — no per-comparison allocation or boxing. */
   private[fast] def sortOffsets(buf: Array[Long], idx: Array[Int], n: Int): Unit = {

@@ -52,6 +52,15 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     (parts.map(_._1).sum, parts.map(_._2).sum)
   }
 
+  /** The records of packed match blocks (`rec` longs each) as sorted rows,
+    * checking that each block holds whole records and at most 32,768
+    * longs. */
+  private def blockRows(m: org.apache.spark.rdd.RDD[Array[Long]], rec: Int): Seq[Seq[Long]] = {
+    val blocks = m.collect()
+    assert(blocks.forall(b => b.length <= 32768 && b.length % rec == 0))
+    blocks.toSeq.flatMap(_.grouped(rec).map(_.toSeq)).sortBy(_.mkString(","))
+  }
+
   private def sortedRows(frame: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
     frame.collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSeq.sortBy(_.mkString(","))
 
@@ -477,10 +486,49 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     // the array entry point routes through the same guard
     val extra = randomBatches(26, 1, 120, seed = 71L).head
     val r1 = batchStats(a, batches.size.toLong, extra.toArray)
-    val m2 = b.applyBatchRdd(batches.size.toLong, extra.toArray)
-    val got = (m2.count(), m2.map(_._2).sum())
+    val m2 = blockRows(b.applyBatchRdd(batches.size.toLong, extra.toArray), 4)
+    val got = (m2.size.toLong, m2.map(_(3)).sum)
     assert((r1._1, r1._2) == got)
     a.close(); b.close()
+  }
+
+  test("packed match output: a delta of several blocks per partition, through both absorb forms") {
+    // preload a 4-clique-dense graph (both orientations of every pair over
+    // nodes 0..31); the batch retracts both orientations of 16 disjoint
+    // pairs (each binding then has one changed atom: the direct blocks) and
+    // inserts the same dense graph over 40 fresh nodes (every atom changed:
+    // the consolidator's blocks). ~62K triangle rows: several 32,768-long
+    // blocks in each of the 2 partitions
+    def dense(nodes: Seq[Long]) = for (a <- nodes; b <- nodes if a != b) yield (a, b, 1L)
+    val preload = dense(0L until 32L)
+    val batch = dense(100L until 140L) ++
+      (0L until 16L).flatMap(i => Seq((2 * i, 2 * i + 1, -1L), (2 * i + 1, 2 * i, -1L)))
+    val expect = BruteForce.rows(BruteForce.delta(preload, batch, Planner.triangle))
+    assert(expect.size * 4 > 2 * 2 * 32768, "fewer longs than two full blocks in each partition")
+    def state(threshold: Int = 1 << 20) = {
+      val st = new FastGraphState(spark, Planner.triangle, numParts = 2,
+        largeBatchThreshold = threshold)
+      st.initialize(df(preload))
+      st
+    }
+    val viaFrame = state()
+    assert(sortedRows(viaFrame.applyBatch(0L, df(batch))) == expect, "applyBatch frame")
+    val viaBulkFrame = state()
+    assert(sortedRows(viaBulkFrame.applyBatchDistributed(0L, df(batch))) == expect,
+      "applyBatchDistributed frame")
+    // the array entry point over both absorb forms (a threshold below the
+    // batch size routes it to the bulk absorb)
+    for (threshold <- Seq(1 << 20, 100)) {
+      val st = state(threshold)
+      val m = st.applyBatchRdd(0L, batch.toArray)
+      assert(m.count() > 2, s"threshold=$threshold: the delta fit in one block per partition")
+      assert(blockRows(m, 4) == expect, s"applyBatchRdd blocks, threshold=$threshold")
+      st.close()
+    }
+    val viaStats = state()
+    assert(batchStats(viaStats, 0L, batch.toArray) == ((expect.size.toLong, expect.map(_(3)).sum)),
+      "applyBatchStatsAsync stats")
+    Seq(viaFrame, viaBulkFrame, viaStats).foreach(_.close())
   }
 
   test("durability: distributed-absorb parquet WAL replays on restart") {

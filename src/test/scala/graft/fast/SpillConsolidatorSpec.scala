@@ -1,7 +1,6 @@
 package graft.fast
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.collection.immutable.ArraySeq
 import graft.{BruteForce, SparkTestBase}
 import graft.plan.Planner
 
@@ -16,6 +15,28 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
       val k = r.take(n).toSeq
       m + (k -> (m.getOrElse(k, 0L) + r(n)))
     }.filter(_._2 != 0L)
+
+  /** Every (binding, weight) record of a drained consolidator, checking
+    * that each block holds whole records and at most 32,768 longs. */
+  private def drain(c: SpillConsolidator, n: Int): Seq[(Seq[Long], Long)] =
+    c.result().toSeq.flatMap { b =>
+      assert(b.nonEmpty && b.length <= 32768 && b.length % (n + 1) == 0, s"block of ${b.length}")
+      b.grouped(n + 1).map(r => (r.take(n).toSeq, r(n)))
+    }
+
+  /** Runs `body` with the consolidation cap set to `cap`. The shared
+    * session is started first: a session started while the property is set
+    * would keep the cap in its conf for every later suite. */
+  private def withSpillCap(cap: Int)(body: => Unit): Unit = {
+    spark
+    val prev = sys.props.get("spark.graft.consolidate.maxEntries")
+    sys.props("spark.graft.consolidate.maxEntries") = cap.toString
+    try body
+    finally prev match {
+      case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
+      case None => sys.props.remove("spark.graft.consolidate.maxEntries")
+    }
+  }
 
   test("spilling consolidation equals in-memory consolidation (with cancellations)") {
     val rnd = new scala.util.Random(7)
@@ -36,8 +57,58 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
         while (off < block.length) { c.add(block, off); off += n + 1 }
       }
       assert(c.spillCount > 0, s"cap $maxEntries should have spilled")
-      val got = c.result().map { case (k, w) => (k.toSeq, w) }.toMap
+      val got = drain(c, n).toMap
       assert(got == refConsolidate(recs, n), s"n=$n cap=$maxEntries")
+    }
+  }
+
+  test("open-addressing table over resizes, spills and block boundaries == reference") {
+    val rnd = new scala.util.Random(31)
+    for (n <- 1 to 5; maxEntries <- Seq(1 << 20, 500)) {
+      val recs = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+      def key(f: Int => Long) = Array.tabulate(n)(f)
+      // cancelled only after the bulk below has resized (or spilled) the table
+      val late = (0 until 60).map(i => key(j => -1000L - i - j))
+      late.foreach(k => recs += k :+ 5L)
+      // pairs that cancel before any resize, and one key that nets to zero
+      // in place and is then revived
+      (0 until 40).foreach { i =>
+        val k = key(j => 5000L + 7 * i + j)
+        recs += k :+ 2L; recs += k :+ -2L
+      }
+      val revived = key(_ => 42L)
+      recs += revived :+ 1L; recs += revived :+ -1L
+      // enough distinct keys for several doublings of the initial table and
+      // an output of several blocks: sequential in the last long, adjacent
+      // in the first, plus the extreme longs
+      val bulk = (0 until 20000).map(i => key(j => if (j == n - 1) i.toLong else 9L)) ++
+        (0 until 20000).map(i => key(j => if (j == 0) i.toLong else 11L)) ++
+        Seq(key(_ => Long.MinValue), key(_ => Long.MaxValue), key(j => if (j % 2 == 0) -1L else 0L))
+      val dups = (0 until 4000).map(_ => key(_ => rnd.nextInt(6).toLong - 3) :+ (rnd.nextInt(5) - 2).toLong)
+      recs ++= rnd.shuffle(bulk.map(_ :+ (1L + rnd.nextInt(3))) ++ dups)
+      recs += revived :+ 3L
+      late.zipWithIndex.foreach { case (k, i) => recs += k :+ (if (i % 2 == 0) -5L else -4L) }
+      assert(bulk.size > 4 * SpillConsolidator.initialSlots)
+
+      val c = new SpillConsolidator(n, maxEntries)
+      // packed blocks of uneven length, as the exchange delivers them
+      recs.grouped(1 + rnd.nextInt(50)).foreach { g =>
+        val block = g.flatten.toArray
+        var off = 0
+        while (off < block.length) { c.add(block, off); off += n + 1 }
+      }
+      val spilling = maxEntries < bulk.size
+      assert((c.spillCount > 1) == spilling, s"n=$n cap=$maxEntries spills=${c.spillCount}")
+      val blocks = c.result().toSeq
+      assert(blocks.size > 1, s"n=$n cap=$maxEntries: one block")
+      val got = blocks.flatMap { b =>
+        assert(b.length <= 32768 && b.length % (n + 1) == 0, s"block of ${b.length}")
+        b.grouped(n + 1).map(r => (r.take(n).toSeq, r(n)))
+      }
+      val ref = refConsolidate(recs.toSeq, n)
+      assert(got.size == ref.size && got.toMap == ref, s"n=$n cap=$maxEntries")
+      assert(got.forall(_._2 != 0L))
+      c.close()
     }
   }
 
@@ -68,7 +139,7 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     val c = new SpillConsolidator(2, 1 << 20)
     recs.foreach(r => c.add(r, 0))
     assert(c.spillCount == 0)
-    assert(c.result().map { case (k, w) => (k.toSeq, w) }.toMap ==
+    assert(drain(c, 2).toMap ==
       refConsolidate(recs, 2))
   }
 
@@ -116,9 +187,7 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     // explodes into a delta set far larger than the batch — the streaming
     // OOM shape. Forced-tiny consolidation cap ⇒ every reduce task spills;
     // output must still equal the DataFrame engine.
-    val prev = sys.props.get("spark.graft.consolidate.maxEntries")
-    sys.props("spark.graft.consolidate.maxEntries") = "16"
-    try {
+    withSpillCap(16) {
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
@@ -144,11 +213,6 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
       // the stress is real: deltas ≫ batch rows
       assert(expect.length > 3 * batch.size)
       fast.close()
-    } finally {
-      prev match {
-        case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
-        case None => sys.props.remove("spark.graft.consolidate.maxEntries")
-      }
     }
   }
 
@@ -159,9 +223,7 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     // consolidating path, which must spill under the forced-tiny cap. Half
     // the neighbor edges are preloaded too, so on those triangles all three
     // derivatives emit a nonzero weight that must be summed
-    val prev = sys.props.get("spark.graft.consolidate.maxEntries")
-    sys.props("spark.graft.consolidate.maxEntries") = "16"
-    try {
+    withSpillCap(16) {
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
@@ -188,18 +250,11 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
       assert(got.length == expect.length && got == expect)
       assert(SpillConsolidator.spillFiles.get > spilled, "the consolidator never spilled")
       fast.close()
-    } finally {
-      prev match {
-        case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
-        case None => sys.props.remove("spark.graft.consolidate.maxEntries")
-      }
     }
   }
 
   test("fast engine matches the DataFrame engine under a forced-tiny spill cap") {
-    val prev = sys.props.get("spark.graft.consolidate.maxEntries")
-    sys.props("spark.graft.consolidate.maxEntries") = "8"
-    try {
+    withSpillCap(8) {
       val rnd = new scala.util.Random(11)
       val fast = new FastGraphState(spark, Planner.triangle, numParts = 3, maxTail = 5)
       var before = Seq.empty[(Long, Long, Long)]
@@ -221,11 +276,6 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
         before ++= batch
       }
       fast.close()
-    } finally {
-      prev match {
-        case Some(v) => sys.props("spark.graft.consolidate.maxEntries") = v
-        case None => sys.props.remove("spark.graft.consolidate.maxEntries")
-      }
     }
   }
 }
