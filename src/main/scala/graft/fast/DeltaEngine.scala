@@ -36,34 +36,68 @@ object Shard {
   val empty: T = scala.collection.immutable.HashMap.empty
 }
 
-/** The local batch regime's FULL index, collected once from the shards and
-  * broadcast once: every key's [[Adj]] in an open-addressed table of
-  * primitive keys (Fibonacci hashing, linear probing, load ≤ 1/2), so a
-  * lookup never boxes its key and building it never sorts. Its forward runs
-  * are the consolidated edge set, which [[seeds]] serves as the seed
-  * stream. */
-private[fast] final class LocalIndex private (keys: Array[Long], adjs: Array[Adj])
-    extends Serializable {
+/** A table from primitive long keys to values, built once from distinct
+  * keys: open addressing with Fibonacci hashing and linear probing at load
+  * ≤ 1/2, a null value marking a free slot. A lookup never boxes its key
+  * and building it never sorts. */
+private[fast] final class KeyTable[V >: Null <: AnyRef] private (
+    keys: Array[Long], vals: Array[V]) extends Serializable {
   private val shift = 64 - Integer.numberOfTrailingZeros(keys.length)
 
-  /** Key `k`'s adjacency, or null when `k` has none. */
-  def get(k: Long): Adj = {
+  /** Key `k`'s value, or null when `k` has none. */
+  def get(k: Long): V = {
     val mask = keys.length - 1
-    var i = LocalIndex.slot(k, shift)
-    var a = adjs(i)
-    while (a != null && keys(i) != k) { i = (i + 1) & mask; a = adjs(i) }
-    a
+    var i = KeyTable.slot(k, shift)
+    var v = vals(i)
+    while (v != null && keys(i) != k) { i = (i + 1) & mask; v = vals(i) }
+    v
   }
+
+  /** Every (key, value) pair, in slot order. */
+  def iterator: Iterator[(Long, V)] =
+    keys.indices.iterator.filter(vals(_) != null).map(i => (keys(i), vals(i)))
+  def keysIterator: Iterator[Long] = keys.indices.iterator.filter(vals(_) != null).map(keys)
+}
+
+private[fast] object KeyTable {
+  private def slot(k: Long, shift: Int): Int = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
+
+  /** The table over per-part (keys, values) arrays; a key occurs once
+    * across all parts. */
+  def apply[V >: Null <: AnyRef](parts: Iterable[(Array[Long], Array[V])])
+                                (implicit ct: scala.reflect.ClassTag[V]): KeyTable[V] = {
+    val n = parts.iterator.map(_._1.length).sum
+    var cap = 2
+    while (cap < 2L * n) cap <<= 1
+    val keys = new Array[Long](cap)
+    val vals = new Array[V](cap)
+    val shift = 64 - Integer.numberOfTrailingZeros(cap)
+    for ((ks, vs) <- parts; j <- ks.indices) {
+      var i = slot(ks(j), shift)
+      while (vals(i) != null) i = (i + 1) & (cap - 1)
+      keys(i) = ks(j)
+      vals(i) = vs(j)
+    }
+    new KeyTable(keys, vals)
+  }
+}
+
+/** The local batch regime's FULL index, collected once from the shards and
+  * broadcast once: every key's [[Adj]] in a [[KeyTable]]. Its forward runs
+  * are the consolidated edge set, which [[seeds]] serves as the seed
+  * stream. */
+private[fast] final class LocalIndex private (t: KeyTable[Adj]) extends Serializable {
+  /** Key `k`'s adjacency, or null when `k` has none. */
+  def get(k: Long): Adj = t.get(k)
 
   /** The edges at positions r, r + stride, r + 2·stride, … of the forward
     * runs in slot order: each edge lands in exactly one of the `stride`
     * slices, and a hub's run is spread over all of them. */
   def seeds(r: Int, stride: Int): Iterator[(Long, Long, Long)] = {
     var pos = 0L
-    adjs.indices.iterator.filter(adjs(_) != null).flatMap { i =>
-      val k = keys(i)
-      val vs = adjs(i).fwdVs
-      val ws = adjs(i).fwdWs
+    t.iterator.flatMap { case (k, a) =>
+      val vs = a.fwdVs
+      val ws = a.fwdWs
       val first = java.lang.Math.floorMod(r - pos, stride.toLong).toInt
       pos += vs.length
       Iterator.range(first, vs.length, stride).map(j => (k, vs(j), ws(j)))
@@ -72,25 +106,9 @@ private[fast] final class LocalIndex private (keys: Array[Long], adjs: Array[Adj
 }
 
 private[fast] object LocalIndex {
-  private def slot(k: Long, shift: Int): Int = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
-
-  /** The table over per-shard (keys, adjs) arrays; a key occurs in one
-    * shard only. */
-  def apply(parts: Array[(Array[Long], Array[Adj])]): LocalIndex = {
-    val n = parts.iterator.map(_._1.length).sum
-    var cap = 2
-    while (cap < 2L * n) cap <<= 1
-    val keys = new Array[Long](cap)
-    val adjs = new Array[Adj](cap)
-    val shift = 64 - Integer.numberOfTrailingZeros(cap)
-    for ((ks, as) <- parts; j <- ks.indices) {
-      var i = slot(ks(j), shift)
-      while (adjs(i) != null) i = (i + 1) & (cap - 1)
-      keys(i) = ks(j)
-      adjs(i) = as(j)
-    }
-    new LocalIndex(keys, adjs)
-  }
+  /** The index over per-shard (keys, adjs) arrays. */
+  def apply(parts: Array[(Array[Long], Array[Adj])]): LocalIndex =
+    new LocalIndex(KeyTable(parts))
 
   /** Collects persisted shards into one index: one job, one (keys, adjs)
     * array pair per shard. */
@@ -101,15 +119,19 @@ private[fast] object LocalIndex {
 /** A micro-batch of edge deltas, broadcast to every index partition:
   * `edges` is the CONSOLIDATED batch in canonical (src,dst) order — the
   * shared seed list whose indices the driver's argmin routing table refers
-  * to — and fwd/rev are per-endpoint value-sorted runs supplying (a) the
-  * merge-on-read "new" view for the le staleness rule and (b) the fold-in
-  * data for the post-step index update. */
-final class DeltaPack(
+  * to — and fwd/rev are per-endpoint value-sorted runs, in [[KeyTable]]s so
+  * a lookup never boxes its key. The runs supply (a) the batch side of the
+  * le staleness rule, read next to the base run by every inclusive lookup
+  * ([[DeltaEngine.TwoRuns]]), and (b) the fold-in data for the post-step
+  * index update. */
+final class DeltaPack private[fast] (
     val edges: Array[(Long, Long, Long)],
-    val fwd: Map[Long, DeltaPack.Run],
-    val rev: Map[Long, DeltaPack.Run]) extends Serializable {
-  def run(k: Long, forward: Boolean): DeltaPack.Run =
-    (if (forward) fwd else rev).getOrElse(k, DeltaPack.emptyRun)
+    val fwd: KeyTable[DeltaPack.Run],
+    val rev: KeyTable[DeltaPack.Run]) extends Serializable {
+  def run(k: Long, forward: Boolean): DeltaPack.Run = {
+    val r = (if (forward) fwd else rev).get(k)
+    if (r == null) DeltaPack.emptyRun else r
+  }
   def keys: Iterator[Long] = fwd.keysIterator ++ rev.keysIterator
   /** Key `k`'s runs and degree sums in both directions, as a delta for
     * [[DeltaEngine.mergeAdj]]. */
@@ -126,6 +148,14 @@ object DeltaPack {
   val emptyRun: Run = Run(Array.empty, Array.empty, 0L)
   val empty: DeltaPack = apply(Array.empty)
 
+  /** A pack of `edges` over the (key, run) pairs of each direction. */
+  private[fast] def apply(edges: Array[(Long, Long, Long)],
+                          fwd: Iterable[(Long, Run)], rev: Iterable[(Long, Run)]): DeltaPack = {
+    def table(kr: Iterable[(Long, Run)]) =
+      KeyTable(Seq((kr.iterator.map(_._1).toArray, kr.iterator.map(_._2).toArray)))
+    new DeltaPack(edges, table(fwd), table(rev))
+  }
+
   /** Consolidates a raw batch (sum weights per (src,dst), drop zeros —
     * sound by Z-set bilinearity) through [[DeltaEngine.buildAdjs]]. The
     * forward walk visits sources ascending and each run's destinations
@@ -136,8 +166,8 @@ object DeltaPack {
     val r = new DeltaEngine.Triples(raw.length)
     raw.foreach { case (s, d, w) => f.add(s, d, w); r.add(d, s, w) }
     val edges = Array.newBuilder[(Long, Long, Long)]
-    val fwd = Map.newBuilder[Long, Run]
-    val rev = Map.newBuilder[Long, Run]
+    val fwd = scala.collection.mutable.ArrayBuffer.empty[(Long, Run)]
+    val rev = scala.collection.mutable.ArrayBuffer.empty[(Long, Run)]
     DeltaEngine.buildAdjs(f, r) { (k, a) =>
       if (a.fwdVs.nonEmpty) {
         fwd += k -> Run(a.fwdVs, a.fwdWs, a.degFwd)
@@ -146,7 +176,7 @@ object DeltaPack {
       }
       if (a.revVs.nonEmpty) rev += k -> Run(a.revVs, a.revWs, a.degRev)
     }
-    new DeltaPack(edges.result(), fwd.result(), rev.result())
+    apply(edges.result(), fwd, rev)
   }
 }
 
@@ -187,8 +217,10 @@ object DeltaPack {
   * Semantics (pinned against a brute-force before/after enumeration by
   * FastEngineSpec): for each motif relation r, seed that relation's delta
   * dataflow with the batch; constraints from relations before r read
-  * post-batch state ("le", base merged on-the-fly with the broadcast
-  * delta), relations after r read pre-batch state ("lt") — the
+  * post-batch state ("le": the base run and the broadcast delta's run
+  * read side by side by every kernel, a value's weight being the sum of
+  * its two — no merged run is built, [[DeltaEngine.TwoRuns]]), relations
+  * after r read pre-batch state ("lt") — the
   * derivatives' outputs sum to the exact match delta. Derivative r emits
   * only bindings whose r atom is in the batch, each at most once, so a
   * binding with a single changed atom has one producer and is already
@@ -261,8 +293,8 @@ final class DeltaEngine(
   /** Window [from, until) of the sorted candidate run `vs` allowed by the
     * range predicates due when position `boundPositions-1` binds; prefix
     * values are read from `p(pOff + pos)`. */
-  private def sliceRangeAt(rel: Int, boundPositions: Int, p: Array[Long],
-                           pOff: Int, vs: Array[Long]): (Int, Int) = {
+  private[fast] def sliceRangeAt(rel: Int, boundPositions: Int, p: Array[Long],
+                                 pOff: Int, vs: Array[Long]): (Int, Int) = {
     val rs = rangeTable(rel)(boundPositions - 2)
     var from = 0
     var until = vs.length
@@ -284,11 +316,10 @@ final class DeltaEngine(
   }
 
   /** predsOk for the final level without materializing the extended prefix:
-    * the last position's value is supplied as `last`. */
-  private def predsOkWithLast(rel: Int, p: Array[Long], last: Long,
-                              boundPositions: Int): Boolean = {
-    val prs = predTable(rel)(boundPositions - 2)
-    val lastPos = boundPositions - 1
+    * `prs` is the level's `predTable` entry, looked up once per proposal,
+    * and position `lastPos`'s value is supplied as `last`. */
+  private def predsOkWithLast(prs: Array[(Int, Int, Int)], p: Array[Long], last: Long,
+                              lastPos: Int): Boolean = {
     var i = 0
     while (i < prs.length) {
       val (pa, pb, op) = prs(i)
@@ -314,16 +345,18 @@ final class DeltaEngine(
   // ---- executor-side lookups ----
   // Two state regimes share one code path:
   //  - BROADCAST (streaming micro-batch): `pre eq post` is the single
-  //    pre-batch shard; `inclusive` ("le") reads merge the broadcast
-  //    DeltaPack on the fly. Hot hub keys are checked FIRST: a scattered
-  //    row lands on an arbitrary partition whose shard does not hold its
-  //    key; the (pre-content) hot replica does.
+  //    pre-batch shard; an `inclusive` ("le") read takes the base run and
+  //    the broadcast DeltaPack's run for the same key side by side
+  //    ([[DeltaEngine.TwoRuns]]) — no merged run is built. Hot hub keys are
+  //    checked FIRST: a scattered row lands on an arbitrary partition whose
+  //    shard does not hold its key; the (pre-content) hot replica does.
   //  - DISTRIBUTED (bulk absorb): `post` is the physically updated shard
   //    co-partitioned with `pre`; `hot` holds DEGREE-ONLY hub entries
   //    (pre-batch degrees) and `dp` carries runs-empty degree deltas for
   //    those hubs, so count reads resolve hub degrees anywhere while
-  //    adjacency reads ignore the entries and hit the shards — see
-  //    [[deltaStepDistributed]] and [[buildDegOnlyHot]].
+  //    adjacency reads ignore the entries and hit the shards (one run: the
+  //    batch side is empty) — see [[deltaStepDistributed]] and
+  //    [[buildDegOnlyHot]].
 
   private def degAt(pre: Shard.T, post: Shard.T, hot: HotMap, dp: DeltaPack, k: Long,
                     forward: Boolean, inclusive: Boolean): Long = {
@@ -335,19 +368,51 @@ final class DeltaEngine(
     if (inclusive) base + dp.run(k, forward).degSum else base
   }
 
-  private def adjAt(pre: Shard.T, post: Shard.T, hot: HotMap, dp: DeltaPack, k: Long,
-                    forward: Boolean, inclusive: Boolean): (Array[Long], Array[Long]) = {
-    val shard = if (inclusive) post else pre
-    val h0 = hot.get(k)
-    val h = if (h0 != null && h0.degOnly) null else h0 // degree-only ≠ adjacency
-    val a = if (h != null) Some(h) else shard.get(k)
-    val bvs = a.map(_.vs(forward)).getOrElse(Array.empty[Long])
-    val bws = a.map(_.ws(forward)).getOrElse(Array.empty[Long])
-    if (!inclusive) (bvs, bws)
-    else {
-      val r = dp.run(k, forward)
-      if (r.vs.isEmpty) (bvs, bws) else DeltaEngine.mergeRuns(bvs, bws, r.vs, r.ws)
+  /** Points `t` at key `k`'s runs for one constraint: the base run (hot
+    * replica, else the shard generation the staleness rule picks) and,
+    * for an inclusive read, the batch's run; an exclusive read gets an
+    * empty batch side. */
+  private def runsAt(pre: Shard.T, post: Shard.T, hot: HotMap, dp: DeltaPack, k: Long,
+                     forward: Boolean, inclusive: Boolean, t: TwoRuns): Unit = {
+    val h = hot.get(k)
+    val a =
+      if (h != null && !h.degOnly) h // degree-only ≠ adjacency
+      else (if (inclusive) post else pre).getOrElse(k, null)
+    if (a == null) { t.bvs = emptyRunArray; t.bws = emptyRunArray }
+    else { t.bvs = a.vs(forward); t.bws = a.ws(forward) }
+    if (inclusive) { val r = dp.run(k, forward); t.dvs = r.vs; t.dws = r.ws }
+    else { t.dvs = emptyRunArray; t.dws = emptyRunArray }
+  }
+
+  /** Appends the proposal record of prefix `p(pOff until pOff + pLen)`
+    * whose candidates are `t`'s two runs, each sliced to the window the
+    * range predicates allow once position `pLen` binds, merged straight
+    * into the block (weights summed on equal values, zero sums dropped).
+    * Returns false, having written nothing, when that merge is empty. */
+  private[fast] def putProposal(bb: BlockBuf, pid: Int, rel: Int, w: Long, minExt: Int,
+                                p: Array[Long], pOff: Int, pLen: Int, t: TwoRuns): Boolean = {
+    val (bFrom, bUntil) = sliceRangeAt(rel, pLen + 1, p, pOff, t.bvs)
+    val (dFrom, dUntil) =
+      if (t.dvs.length == 0) (0, 0) else sliceRangeAt(rel, pLen + 1, p, pOff, t.dvs)
+    val nb = bUntil - bFrom
+    val nd = dUntil - dFrom
+    if (nd == 0) {
+      if (nb > 0) putProp(bb, pid, rel, w, minExt, p, pOff, pLen, t.bvs, bFrom, t.bws, bFrom, nb)
+      return nb > 0
     }
+    val max = nb + nd
+    val b = bb.reserve(pid, 4 + pLen + 2 * max)
+    var o = bb.off(pid)
+    b(o) = rel; b(o + 1) = w; b(o + 2) = minExt
+    System.arraycopy(p, pOff, b, o + 3, pLen)
+    val ncAt = o + 3 + pLen
+    o = ncAt + 1
+    val nc = mergeWindows(t.bvs, t.bws, bFrom, bUntil, t.dvs, t.dws, dFrom, dUntil, b, o, o + max)
+    if (nc == 0) return false
+    if (nc < max) System.arraycopy(b, o + max, b, o + nc, nc)
+    b(ncAt) = nc
+    bb.advance(pid, 4 + pLen + 2 * nc)
+    true
   }
 
   /** Routing key for a lookup on `k`: cold keys go to their shard's
@@ -472,6 +537,7 @@ final class DeltaEngine(
       val d = dp.value
       val h = hot.value
       val route = routeB.value
+      val t = new TwoRuns
       boundedIt(engine.numParts, Iterator.range(0, d.edges.length)) { (j, bb) =>
         val (s0, d0, w) = d.edges(j)
         var r = 0
@@ -486,14 +552,9 @@ final class DeltaEngine(
                 DeltaEngine.partOf(DeltaEngine.scatterKeyAt(p, 0, 2, 3), engine.numParts) == pid
               else engine.partitioner.getPartition(k) == pid
             if (assigned) {
-              val (vs, ws) = adjAt(shard, shard, h, d, k, cst.forward, cst.inclusive)
-              val (from, until) = sliceRangeAt(r, 3, p, 0, vs)
-              if (until > from) {
-                val tPid =
-                  if (maxE0 >= 2) isectPid(stage0, h, r, i, p, 0, 2, 0, 0)
-                  else pid
-                putProp(bb, tPid, r, w, i, p, 0, 2, vs, from, ws, from, until - from)
-              }
+              runsAt(shard, shard, h, d, k, cst.forward, cst.inclusive, t)
+              val tPid = if (maxE0 >= 2) isectPid(stage0, h, r, i, p, 0, 2, 0, 0) else pid
+              putProposal(bb, tPid, r, w, i, p, 0, 2, t)
             }
           }
           r += 1
@@ -595,6 +656,7 @@ final class DeltaEngine(
         val postSh = sh2.next()
         val h = hot.value
         val d = dp.value
+        val t = new TwoRuns
         new BoundedStage(np, it) {
           protected def processSome(block: Array[Long], off0: Int): Int = {
             var off = off0
@@ -604,15 +666,12 @@ final class DeltaEngine(
               val minExt = block(off + 3).toInt
               val pOff = off + 4
               val cst = stages(rel)(minExt)
-              val (vs, ws) = engine.adjAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
-                cst.forward, cst.inclusive)
-              val (from, until) = engine.sliceRangeAt(rel, pLen + 1, block, pOff, vs)
-              if (until > from) {
-                val pid =
-                  if (maxE >= 2) engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, 0)
-                  else curPid
-                putProp(bb, pid, rel, w, minExt, block, pOff, pLen, vs, from, ws, from, until - from)
-              }
+              engine.runsAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
+                cst.forward, cst.inclusive, t)
+              val pid =
+                if (maxE >= 2) engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, 0)
+                else curPid
+              engine.putProposal(bb, pid, rel, w, minExt, block, pOff, pLen, t)
               off += rec
             }
             off
@@ -647,6 +706,7 @@ final class DeltaEngine(
           val postSh = sh2.next()
           val h = hot.value
           val d = dp.value
+          val t = new TwoRuns
           new BoundedStage(np, it) {
             protected def processSome(block: Array[Long], off0: Int): Int = {
               var off = off0
@@ -663,12 +723,12 @@ final class DeltaEngine(
                 if (j < cs.size - 1) {
                   val o = if (j < minExt) j else j + 1
                   val cst = cs(o)
-                  val (avs, aws) = engine.adjAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
-                    cst.forward, cst.inclusive)
-                  val (nvs, nws) = DeltaEngine.intersectRunsAt(block, cOff, wOff, nc, avs, aws)
-                  if (nvs.length > 0) {
+                  engine.runsAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
+                    cst.forward, cst.inclusive, t)
+                  val m = intersectTwo(block, cOff, block, wOff, nc, t)
+                  if (m > 0) {
                     val pid = engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, j + 1)
-                    putProp(bb, pid, rel, w, minExt, block, pOff, pLen, nvs, 0, nws, 0, nvs.length)
+                    putProp(bb, pid, rel, w, minExt, block, pOff, pLen, t.vs, 0, t.ws, 0, m)
                   }
                 } else {
                   val pid = engine.isectPid(stages, h, rel, minExt, block, pOff, pLen, s, j + 1)
@@ -682,7 +742,9 @@ final class DeltaEngine(
         }
     }
     // final hop: decode straight to Prop objects, consumed in place by
-    // explode / the packed output stage (both narrow)
+    // explode / the packed output stage (both narrow). An inclusive hop
+    // reads the batch run of its atom, so it records per survivor whether
+    // that run holds it, and [[markMulti]] need not walk that atom again.
     val j = nIsect - 1
     cur.partitionBy(DeltaEngine.identityPartitioner(np))
       .zipPartitions(pre, post, preservesPartitioning = false) { (it, sh1, sh2) =>
@@ -690,6 +752,7 @@ final class DeltaEngine(
         val postSh = sh2.next()
         val h = hot.value
         val d = dp.value
+        val t = new TwoRuns
         it.flatMap { case (_, block) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[Prop]
           var off = 0
@@ -703,15 +766,20 @@ final class DeltaEngine(
             val cOff = ncOff + 1
             val wOff = cOff + nc
             off = wOff + nc
-            val p = java.util.Arrays.copyOfRange(block, pOff, pOff + pLen)
+            def p = java.util.Arrays.copyOfRange(block, pOff, pOff + pLen)
             val cs = stages(rel)
             if (j < cs.size - 1) {
               val o = if (j < minExt) j else j + 1
               val cst = cs(o)
-              val (avs, aws) = engine.adjAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
-                cst.forward, cst.inclusive)
-              val (nvs, nws) = DeltaEngine.intersectRunsAt(block, cOff, wOff, nc, avs, aws)
-              if (nvs.length > 0) out += Prop(rel, p, w, minExt, nvs, nws)
+              engine.runsAt(preSh, postSh, h, d, block(pOff + cst.prefixPos),
+                cst.forward, cst.inclusive, t)
+              val m = intersectTwo(block, cOff, block, wOff, nc, t)
+              if (m > 0)
+                out += Prop(rel, p, w, minExt,
+                  java.util.Arrays.copyOf(t.vs, m), java.util.Arrays.copyOf(t.ws, m),
+                  if (cst.inclusive) hitCode(cst.prefixPos, cst.forward) else -1,
+                  if (cst.inclusive && t.dvs.length > 0) java.util.Arrays.copyOf(t.hit, m)
+                  else null)
             } else {
               out += Prop(rel, p, w, minExt,
                 java.util.Arrays.copyOfRange(block, cOff, cOff + nc),
@@ -860,6 +928,7 @@ final class DeltaEngine(
         var mark = new Array[Boolean](64)
         boundedIt(2 * np, it) { (prop, bb) =>
           val inv = inverses(prop.rel)
+          val prs = predTable(prop.rel)(n - 2)
           if (mark.length < prop.cands.length) mark = new Array[Boolean](prop.cands.length)
           val allMulti = d == null || markMulti(prop, d, mark)
           var i = 0
@@ -867,7 +936,7 @@ final class DeltaEngine(
             val w = prop.w * prop.candWs(i)
             if (w != 0L) {
               val cand = prop.cands(i)
-              if (predsOkWithLast(prop.rel, prop.p, cand, n)) {
+              if (prs.length == 0 || predsOkWithLast(prs, prop.p, cand, lastPos)) {
                 var a = 0
                 val pid =
                   if (allMulti || mark(i)) {
@@ -925,11 +994,14 @@ final class DeltaEngine(
     * atom inside the prefix, tested once); otherwise `mark(i)` tells whether
     * candidate i's binding has one (an atom on the last attribute: the batch
     * run of its bound endpoint — forward when that endpoint is the source —
-    * merge-walked against the sorted candidates, galloping over gaps). */
+    * merge-walked against the sorted candidates, galloping over gaps). The
+    * atom whose batch run the final intersect hop already read
+    * ([[Prop.hitAtom]]) is not walked again: its `hits` seed `mark`. */
   private def markMulti(prop: Prop, d: DeltaPack, mark: Array[Boolean]): Boolean = {
     val lastPos = numAttrs - 1
     val cands = prop.cands
-    java.util.Arrays.fill(mark, 0, cands.length, false)
+    if (prop.hits != null) System.arraycopy(prop.hits, 0, mark, 0, cands.length)
+    else java.util.Arrays.fill(mark, 0, cands.length, false)
     val atoms = otherAtoms(prop.rel)
     var t = 0
     while (t < atoms.length) {
@@ -937,7 +1009,7 @@ final class DeltaEngine(
       if (sp != lastPos && dpos != lastPos) {
         if (java.util.Arrays.binarySearch(d.run(prop.p(sp), forward = true).vs, prop.p(dpos)) >= 0)
           return true
-      } else {
+      } else if (hitCode(if (dpos == lastPos) sp else dpos, dpos == lastPos) != prop.hitAtom) {
         val forward = dpos == lastPos
         val run = d.run(prop.p(if (forward) sp else dpos), forward).vs
         var i = 0
@@ -960,7 +1032,7 @@ final class DeltaEngine(
     * physically co-partitioned shard generations — `postShards`
     * (= `preShards` + batch, built by [[updateShardsDistributed]]) for
     * inclusive ("le") constraints, `preShards` for the rest — instead of
-    * merging a broadcast DeltaPack on the fly. Output is identical to
+    * reading a broadcast DeltaPack's runs next to the base. Output is identical to
     * `deltaStep` on the same batch (pinned by FastEngineSpec): post = pre ⊎
     * delta by construction, so every lookup sees byte-equal state. With no
     * broadcast batch to classify against, every match goes through the
@@ -980,7 +1052,7 @@ final class DeltaEngine(
     if (numAttrs == 2) return edgeMatches(batch)
     // degree-only hub broadcast: COUNT hops on hub keys scatter and answer
     // from these O(hotK)-scalar structures; adjacency hops stay key-routed
-    // (degOnly entries are invisible to adjAt). Replaces the earlier
+    // (degOnly entries are invisible to runsAt). Replaces the earlier
     // hot-disabled regime where hub count traffic concentrated on the
     // hub's partition for the whole bulk absorb.
     val (degHot, degPack) =
@@ -1051,7 +1123,8 @@ final class DeltaEngine(
     // across 21.6M final-level calls). Exactness: the counting intersect
     // applies the identical nonzero-product rule as intersectRuns + the
     // emit loop's w2 != 0 check.
-    val countLastOk = agg != null && predTable(0)(n - 2).isEmpty
+    val lastPreds = predTable(0)(n - 2)
+    val countLastOk = agg != null && lastPreds.isEmpty
 
     // `inhVs/inhWs`: the parent level's final candidate run, reusable as
     // the pre-computed intersection of every inherited constraint (see
@@ -1158,7 +1231,7 @@ final class DeltaEngine(
         var c = 0
         while (c < cvs.length) {
           val w2 = w * cws(c)
-          if (w2 != 0L && predsOkWithLast(0, p, cvs(c), n)) emit(p, cvs(c), w2)
+          if (w2 != 0L && predsOkWithLast(lastPreds, p, cvs(c), n - 1)) emit(p, cvs(c), w2)
           c += 1
         }
       } else {
@@ -1307,6 +1380,7 @@ final class DeltaEngine(
         }
       }
     val inv = plans(0).inverse.toArray
+    val prs = predTable(0)(n - 2)
     staticMatches(shards, hot, dp, edges).mapPartitions { it =>
       val writer = new UnsafeRowWriter(n + 1)
       it.flatMap { prop =>
@@ -1315,7 +1389,7 @@ final class DeltaEngine(
         while (i < prop.cands.length) {
           val w = prop.w * prop.candWs(i)
           val cand = prop.cands(i)
-          if (w != 0L && engine.predsOkWithLast(0, prop.p, cand, n)) {
+          if (w != 0L && engine.predsOkWithLast(prs, prop.p, cand, n - 1)) {
             writer.reset()
             var a = 0
             while (a < n) {
@@ -1339,6 +1413,7 @@ final class DeltaEngine(
                       edges: RDD[(Long, Long, Long)]): (Long, Long) = {
     val n = numAttrs
     val engine = this
+    val prs = predTable(0)(n - 2)
     val perPart =
       if (n == 2)
         edges.mapPartitions { it =>
@@ -1356,7 +1431,7 @@ final class DeltaEngine(
           var i = 0
           while (i < prop.cands.length) {
             val w = prop.w * prop.candWs(i)
-            if (w != 0L && engine.predsOkWithLast(0, prop.p, prop.cands(i), n)) {
+            if (w != 0L && engine.predsOkWithLast(prs, prop.p, prop.cands(i), n - 1)) {
               cnt += 1; tot += w
             }
             i += 1
@@ -1849,13 +1924,11 @@ object DeltaEngine {
       a ++ b
     }.reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2)).collect()
     keysB.unpersist(false)
-    val fwd = deltas.iterator.filter(_._2._1 != 0L)
+    val fwd = deltas.toSeq.filter(_._2._1 != 0L)
       .map { case (k, (f, _)) => k -> DeltaPack.Run(Array.empty, Array.empty, f) }
-      .toMap
-    val rev = deltas.iterator.filter(_._2._2 != 0L)
+    val rev = deltas.toSeq.filter(_._2._2 != 0L)
       .map { case (k, (_, r)) => k -> DeltaPack.Run(Array.empty, Array.empty, r) }
-      .toMap
-    (m, new DeltaPack(Array.empty, fwd, rev))
+    (m, DeltaPack(Array.empty, fwd, rev))
   }
 
   /** Deterministic balance key for rows whose lookup key is hot-replicated:
@@ -1889,14 +1962,18 @@ object DeltaEngine {
     def reserve(pid: Int, need: Int): Array[Long] = {
       var b = bufs(pid)
       if (b == null || lens(pid) + need > b.length) {
-        if (b != null && lens(pid) > 0)
-          done += ((pid, java.util.Arrays.copyOf(b, lens(pid))))
+        if (b != null && lens(pid) > 0) done += ((pid, filled(pid)))
         b = new Array[Long](math.max(chunkLongs, need))
         bufs(pid) = b
         lens(pid) = 0
       }
       b
     }
+    /** `pid`'s current chunk cut to its filled length; an exactly full
+      * chunk is handed over as it is. */
+    private def filled(pid: Int): Array[Long] =
+      if (lens(pid) == bufs(pid).length) bufs(pid)
+      else java.util.Arrays.copyOf(bufs(pid), lens(pid))
     def off(pid: Int): Int = lens(pid)
     def advance(pid: Int, n: Int): Unit = lens(pid) += n
     /** Chunks completed and not yet drained — stages use this as their
@@ -1916,8 +1993,7 @@ object DeltaEngine {
     def result(): Iterator[(Int, Array[Long])] = {
       var pid = 0
       while (pid < np) {
-        if (lens(pid) > 0)
-          done += ((pid, java.util.Arrays.copyOf(bufs(pid), lens(pid))))
+        if (lens(pid) > 0) done += ((pid, filled(pid)))
         bufs(pid) = null
         lens(pid) = 0
         pid += 1
@@ -2065,7 +2141,15 @@ object DeltaEngine {
     * Top-level (NOT inner to the engine) so shuffled records never drag an
     * `$outer` engine reference through serialization. */
   final case class Prop(rel: Int, p: Array[Long], w: Long, minExt: Int,
-                        cands: Array[Long], candWs: Array[Long])
+                        cands: Array[Long], candWs: Array[Long],
+                        hitAtom: Int = -1, hits: Array[Boolean] = null)
+
+  /** [[Prop.hitAtom]] of the atom a final-hop constraint reads: the bound
+    * endpoint's prefix position and the run's direction. A Prop whose
+    * `hitAtom` names an atom carries, in `hits`, whether the batch run of
+    * that atom holds each candidate (null: it holds none). */
+  private[fast] def hitCode(prefixPos: Int, forward: Boolean): Int =
+    2 * prefixPos + (if (forward) 1 else 0)
 
   val emptyAdj = new Adj(Array.empty, Array.empty, 0L, Array.empty, Array.empty, 0L)
 
@@ -2167,17 +2251,8 @@ object DeltaEngine {
     * adaptive intersect, reference static_graph/src/graph.rs:110).
     * Output weight = candW × indexW. */
   def intersectRuns(cvs: Array[Long], cws: Array[Long],
-                    avs: Array[Long], aws: Array[Long]): (Array[Long], Array[Long]) =
-    intersectWindow(cvs, 0, cws, 0, cvs.length, avs, aws)
-
-  /** Candidate side read from a packed block window (zero-copy input). */
-  private[fast] def intersectRunsAt(block: Array[Long], cOff: Int, wOff: Int, nc: Int,
-                                    avs: Array[Long], aws: Array[Long]): (Array[Long], Array[Long]) =
-    intersectWindow(block, cOff, block, wOff, nc, avs, aws)
-
-  private def intersectWindow(cvsArr: Array[Long], cvsOff: Int,
-                              cwsArr: Array[Long], cwsOff: Int, nc: Int,
-                              avs: Array[Long], aws: Array[Long]): (Array[Long], Array[Long]) = {
+                    avs: Array[Long], aws: Array[Long]): (Array[Long], Array[Long]) = {
+    val nc = cvs.length
     if (nc == 0 || avs.isEmpty) return (Array.empty, Array.empty)
     val vs = new Array[Long](math.min(nc, avs.length))
     val ws = new Array[Long](vs.length)
@@ -2185,10 +2260,10 @@ object DeltaEngine {
     if (nc < avs.length / 4) {
       var i = 0; var off = 0
       while (i < nc && off < avs.length) {
-        val c = cvsArr(cvsOff + i)
+        val c = cvs(i)
         off = IndexState.gallop(avs, c, off)
         if (off < avs.length && avs(off) == c) {
-          val w = cwsArr(cwsOff + i) * aws(off)
+          val w = cws(i) * aws(off)
           if (w != 0L) { vs(o) = c; ws(o) = w; o += 1 }
           off += 1
         }
@@ -2197,16 +2272,96 @@ object DeltaEngine {
     } else {
       var i = 0; var j = 0
       while (i < nc && j < avs.length) {
-        val c = cvsArr(cvsOff + i)
+        val c = cvs(i)
         if (c < avs(j)) i += 1
         else if (c > avs(j)) j += 1
         else {
-          val w = cwsArr(cwsOff + i) * aws(j)
+          val w = cws(i) * aws(j)
           if (w != 0L) { vs(o) = c; ws(o) = w; o += 1 }
           i += 1; j += 1
         }
       }
     }
     (java.util.Arrays.copyOf(vs, o), java.util.Arrays.copyOf(ws, o))
+  }
+
+  /** The runs one lookup reads, side by side: the base run `bvs/bws` (hot
+    * replica or shard) and the batch's [[DeltaPack]] run `dvs/dws` for the
+    * same key and direction (empty on an exclusive read), plus reusable
+    * output space for [[intersectTwo]]; one per task, so no lookup
+    * allocates. A value's weight is `wb + wd` (0 where absent) and a zero
+    * sum means absent — the run [[mergeRuns]] would build, which is never
+    * built here (the reference also sums per-tier counts instead of
+    * merging tiers, reference src/index.rs:455-547). */
+  private[fast] final class TwoRuns {
+    var bvs: Array[Long] = emptyRunArray
+    var bws: Array[Long] = emptyRunArray
+    var dvs: Array[Long] = emptyRunArray
+    var dws: Array[Long] = emptyRunArray
+    /** [[intersectTwo]]'s output: surviving candidates, their weights, and
+      * whether each was found in the batch run. */
+    var vs: Array[Long] = new Array[Long](64)
+    var ws: Array[Long] = new Array[Long](64)
+    var hit: Array[Boolean] = new Array[Boolean](64)
+    def reserve(n: Int): Unit = if (vs.length < n) {
+      val cap = math.max(n, vs.length << 1)
+      vs = new Array[Long](cap); ws = new Array[Long](cap); hit = new Array[Boolean](cap)
+    }
+  }
+
+  /** Merges the windows `[bFrom, bUntil)` and `[dFrom, dUntil)` of two
+    * consolidated value-sorted runs into `out`: values at `out(vOff..)`,
+    * weights at `out(wOff..)`, equal values summed and zero sums dropped.
+    * Returns the count written. */
+  private[fast] def mergeWindows(bvs: Array[Long], bws: Array[Long], bFrom: Int, bUntil: Int,
+                                 dvs: Array[Long], dws: Array[Long], dFrom: Int, dUntil: Int,
+                                 out: Array[Long], vOff: Int, wOff: Int): Int = {
+    var i = bFrom; var j = dFrom; var o = 0
+    while (i < bUntil && j < dUntil) {
+      val b = bvs(i); val d = dvs(j)
+      if (b < d) { out(vOff + o) = b; out(wOff + o) = bws(i); i += 1; o += 1 }
+      else if (b > d) { out(vOff + o) = d; out(wOff + o) = dws(j); j += 1; o += 1 }
+      else {
+        val w = bws(i) + dws(j)
+        if (w != 0L) { out(vOff + o) = b; out(wOff + o) = w; o += 1 }
+        i += 1; j += 1
+      }
+    }
+    while (i < bUntil) { out(vOff + o) = bvs(i); out(wOff + o) = bws(i); i += 1; o += 1 }
+    while (j < dUntil) { out(vOff + o) = dvs(j); out(wOff + o) = dws(j); j += 1; o += 1 }
+    o
+  }
+
+  /** Weighted intersection of `nc` sorted candidates — values at
+    * `cArr(cOff..)`, weights at `cwArr(cwOff..)` — against `t`'s two runs
+    * read side by side: each candidate is looked up in both runs
+    * (galloping a run that is long next to the candidates, stepping
+    * otherwise) and survives with weight `cw × (wb + wd)` when that is
+    * nonzero. Writes survivors to `t.vs`/`t.ws` and, per survivor, whether
+    * the batch run holds it to `t.hit`; returns their count. */
+  private[fast] def intersectTwo(cArr: Array[Long], cOff: Int, cwArr: Array[Long], cwOff: Int,
+                                 nc: Int, t: TwoRuns): Int = {
+    val bvs = t.bvs; val bws = t.bws; val dvs = t.dvs; val dws = t.dws
+    val nb = bvs.length; val nd = dvs.length
+    if (nc == 0 || nb + nd == 0) return 0
+    t.reserve(math.min(nc, nb + nd))
+    val vs = t.vs; val ws = t.ws; val hit = t.hit
+    val gb = nc < nb / 4
+    val gd = nc < nd / 4
+    var i = 0; var bo = 0; var d = 0; var o = 0
+    while (i < nc && (bo < nb || d < nd)) {
+      val c = cArr(cOff + i)
+      if (gb) bo = IndexState.gallop(bvs, c, bo) else while (bo < nb && bvs(bo) < c) bo += 1
+      if (gd) d = IndexState.gallop(dvs, c, d) else while (d < nd && dvs(d) < c) d += 1
+      val inB = bo < nb && bvs(bo) == c
+      val inD = d < nd && dvs(d) == c
+      val w = (if (inB) bws(bo) else 0L) + (if (inD) dws(d) else 0L)
+      if (w != 0L) {
+        val cw = cwArr(cwOff + i) * w
+        if (cw != 0L) { vs(o) = c; ws(o) = cw; hit(o) = inD; o += 1 }
+      }
+      i += 1
+    }
+    o
   }
 }

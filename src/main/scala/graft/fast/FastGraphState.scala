@@ -417,14 +417,14 @@ final class FastGraphState(
     if (sink != null) sink(toDF(matches))
     install(engine.updateShards(shards, dp), eager = false)
     hotAdj = DeltaEngine.foldHot(hotAdj, pack)
-    foldDegs(pack.fwd.view.map { case (k, r) => (k, r.degSum, 0L) } ++
-      pack.rev.view.map { case (k, r) => (k, 0L, r.degSum) })
+    foldDegs((pack.fwd.iterator.map { case (k, r) => (k, r.degSum, 0L) } ++
+      pack.rev.iterator.map { case (k, r) => (k, 0L, r.degSum) }).toSeq)
     dpChain :+= dp
     // bound the fold chain even when compaction is far away: re-broadcast
     // the driver's folded replica and retire the chain
     if (dpChain.size >= FastGraphState.maxHotChain) rebaseHot()
     commit(batchId, distributed = false, t0)(
-      pack.fwd.toSeq.groupMapReduce(kr => engine.partitioner.getPartition(kr._1))(
+      pack.fwd.iterator.toSeq.groupMapReduce(kr => engine.partitioner.getPartition(kr._1))(
         _._2.vs.length.toLong)(_ + _))
     matches
   }

@@ -29,7 +29,9 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
   * growing — its entries are compacted in place, sorted (lexicographically
   * by binding) and written to a local spill file as raw big-endian longs.
   * `result()` k-way merges the spilled runs with the final in-memory run,
-  * summing weights of equal bindings and dropping zeros. Batches that never
+  * summing weights of equal bindings and dropping zeros; past
+  * `maxFanIn` runs it first merges them in passes of that many into
+  * fewer, longer runs, so the open files stay bounded. Batches that never
   * spill (the common streaming case) drain the table directly: no sort, no
   * IO.
   *
@@ -60,6 +62,9 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
     * kill) would hold open FDs — and an open FD pins the disk space even
     * after the file is unlinked. */
   private val openRuns = scala.collection.mutable.ArrayBuffer.empty[Run]
+  private var peakOpen = 0
+  /** Most spill runs open at once so far (diagnostics / tests). */
+  def peakOpenRuns: Int = peakOpen
 
   // a task killed mid-merge must not leak spill files or open streams
   {
@@ -71,8 +76,7 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
     * Idempotent; registered as the task-completion listener, and the
     * explicit release for driver-side use (no TaskContext there). */
   def close(): Unit = {
-    openRuns.foreach(_.close())
-    openRuns.clear()
+    openRuns.toList.foreach(_.close())
     spills.foreach(f => if (f.exists()) f.delete())
   }
 
@@ -144,7 +148,8 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
   }
 
   /** Number of spill files written so far (diagnostics / tests). */
-  def spillCount: Int = spills.size
+  def spillCount: Int = spilled
+  private var spilled = 0
 
   /** Moves every nonzero entry to the front of `slots` (record i at
     * `i * rec`), clears the table and returns the entry count. */
@@ -184,6 +189,7 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
       }
     } finally out.close()
     spills += f
+    spilled += 1
     SpillConsolidator.spillFiles.incrementAndGet()
   }
 
@@ -194,6 +200,7 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
       new BufferedInputStream(new FileInputStream(f), bufBytes))
     private var closed = false
     openRuns += this
+    peakOpen = math.max(peakOpen, openRuns.size)
     val key = new Array[Long](n)
     var w: Long = 0L
     var live: Boolean = advance()
@@ -201,6 +208,7 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
       closed = true
       try in.close() catch { case _: Throwable => () }
       f.delete()
+      openRuns -= this
       live = false
     }
     def advance(): Boolean =
@@ -216,6 +224,56 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
           close(); false
       }
   }
+
+  /** A k-way merge of sorted spill runs (each deleted as it drains): its
+    * read buffers share 64 MB, 1 MB each at most. */
+  private final class Merge(files: Iterable[File]) {
+    private val pq = {
+      val bufBytes = math.max(1 << 13, math.min(1 << 20, (64 << 20) / math.max(1, files.size)))
+      val q = new java.util.PriorityQueue[Run](math.max(1, files.size),
+        (a: Run, b: Run) => SpillConsolidator.compareKeys(a.key, b.key, 0))
+      files.foreach { f => val r = new Run(f, bufBytes); if (r.live) q.add(r) }
+      q
+    }
+    def hasNext: Boolean = !pq.isEmpty
+
+    /** Writes the next binding in key order at `out(o)` with its net
+      * weight (every run positioned at it folded in); returns whether that
+      * weight is nonzero. Call only while [[hasNext]]. */
+    def next(out: Array[Long], o: Int): Boolean = {
+      val head = pq.poll()
+      System.arraycopy(head.key, 0, out, o, n)
+      var w = head.w
+      if (head.advance()) pq.add(head)
+      while (!pq.isEmpty && SpillConsolidator.compareKeys(out, pq.peek().key, o) == 0) {
+        val r = pq.poll()
+        w += r.w
+        if (r.advance()) pq.add(r)
+      }
+      out(o + n) = w
+      w != 0L
+    }
+  }
+
+  /** Merges the oldest [[SpillConsolidator.maxFanIn]] runs into one new
+    * run, until at most that many are left. Each pass holds at most
+    * `maxFanIn` runs open, so the open files stay bounded however many
+    * runs a small cap left. */
+  private def reduceRuns(): Unit =
+    while (spills.size > SpillConsolidator.maxFanIn) {
+      val group = spills.take(SpillConsolidator.maxFanIn).toList
+      val m = new Merge(group)
+      val f = File.createTempFile("graft-consolidate-", ".bin", SpillConsolidator.spillDir)
+      spills += f
+      val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f), 1 << 20))
+      val r = new Array[Long](rec)
+      try {
+        while (m.hasNext) {
+          if (m.next(r, 0)) { var j = 0; while (j < rec) { out.writeLong(r(j)); j += 1 } }
+        }
+      } finally out.close()
+      spills.remove(0, group.size) // drained, so already deleted
+    }
 
   /** Drains the consolidator as packed blocks of at most
     * [[SpillConsolidator.blockLongs]] longs: each distinct binding exactly
@@ -234,33 +292,15 @@ final class SpillConsolidator(n: Int, maxEntries: Int) {
     }
     if (size > 0) spill() // final in-memory run joins the merge
     slots = null; used = null
-    // the merge's read buffers share 64 MB (1 MB each at most, 8 KB at
-    // least): one buffer per run must not outgrow the heap when a small cap
-    // left thousands of runs
-    val bufBytes = math.max(1 << 13, math.min(1 << 20, (64 << 20) / spills.size))
-    val runs = spills.map(new Run(_, bufBytes)).filter(_.live)
-    val pq = new java.util.PriorityQueue[Run](math.max(1, runs.size),
-      (a: Run, b: Run) => SpillConsolidator.compareKeys(a.key, b.key, 0))
-    runs.foreach(pq.add)
+    reduceRuns()
+    val merge = new Merge(spills.toList)
     new Iterator[Array[Long]] {
-      def hasNext: Boolean = !pq.isEmpty
+      def hasNext: Boolean = merge.hasNext
       def next(): Array[Long] = {
-        if (pq.isEmpty) throw new NoSuchElementException
+        if (!merge.hasNext) throw new NoSuchElementException
         val out = new Array[Long](perBlock * rec)
         var o = 0
-        while (o < out.length && !pq.isEmpty) {
-          val head = pq.poll()
-          System.arraycopy(head.key, 0, out, o, n)
-          var w = head.w
-          if (head.advance()) pq.add(head)
-          // fold every run positioned at the same binding
-          while (!pq.isEmpty && SpillConsolidator.compareKeys(out, pq.peek().key, o) == 0) {
-            val r = pq.poll()
-            w += r.w
-            if (r.advance()) pq.add(r)
-          }
-          if (w != 0L) { out(o + n) = w; o += rec }
-        }
+        while (o < out.length && merge.hasNext) if (merge.next(out, o)) o += rec
         if (o == out.length) out else java.util.Arrays.copyOf(out, o)
       }
     }.filter(_.length > 0)
@@ -275,6 +315,10 @@ object SpillConsolidator {
   /** Longs per block [[SpillConsolidator.result]] yields: the chunk size
     * of the engine's packed exchange blocks. */
   private val blockLongs = 32768
+
+  /** Most spill runs one merge reads at once; more runs are first merged
+    * in passes of this many (see `reduceRuns`). */
+  private[fast] val maxFanIn = 64
 
   /** Slots of a fresh table (it grows by doubling up to the cap). */
   private[fast] val initialSlots = 1 << 12

@@ -445,6 +445,48 @@ class FastEngineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("batch retractions cancel a hub run read inclusively: hot replica and cold shard") {
+    // hub 20 with edges both ways to every other node of 1..40, plus random
+    // edges among the others. Each batch retracts hub edges the state holds
+    // (their weights cancel base entries of the hub's runs, so an inclusive
+    // read of the hub run drops them), re-inserts some, and adds edges that
+    // close shapes through the hub. The hub run is read from the broadcast
+    // hot replica (every preloaded key hot) and from its cold shard (no
+    // replica), with ordered predicates so range slices cut both runs.
+    val hub = 20L
+    val others = (1L to 40L).filter(_ != hub)
+    val rnd = new scala.util.Random(131L)
+    def randomEdges(k: Int) = (0 until k).map { _ =>
+      var a = 0L; var b = 0L
+      while (a == b) { a = others(rnd.nextInt(others.size)); b = others(rnd.nextInt(others.size)) }
+      (a, b, 1L)
+    }
+    val hubEdges = others.flatMap(v => Seq((hub, v, 1L), (v, hub, 1L)))
+    val preload = hubEdges ++ randomEdges(220)
+    val shuffled = rnd.shuffle(hubEdges)
+    val batches = Seq(
+      shuffled.take(30).map(e => (e._1, e._2, -1L)) ++ randomEdges(25),
+      shuffled.slice(30, 55).map(e => (e._1, e._2, -1L)) ++
+        shuffled.take(8) ++ randomEdges(25) ++ Seq((hub, 41L, 1L), (41L, hub, 1L)))
+    for (motif <- Seq(Planner.triangle, Planner.clique4); hotKeys <- Seq(1000, 0)) {
+      val n = motif.flatMap(e => Seq(e._1, e._2)).max + 1
+      val preds = Planner.ordered(n)
+      val st = new FastGraphState(spark, motif, numParts = 3, maxTail = 1000,
+        predicates = preds, hotKeys = hotKeys)
+      st.initialize(df(preload))
+      var before: Seq[(Long, Long, Long)] = preload
+      for ((batch, id) <- batches.zipWithIndex) {
+        val expect = BruteForce.rows(BruteForce.delta(before, batch, motif, preds))
+        assert(expect.exists(r => r.init.contains(hub) && r.last < 0),
+          s"batch $id retracts no match through the hub")
+        assert(sortedRows(st.applyBatch(id.toLong, df(batch))) == expect,
+          s"motif=$motif hotKeys=$hotKeys batch=$id")
+        before ++= batch
+      }
+      st.close()
+    }
+  }
+
   test("a bulk absorb that fills the tail rebuilds the hot replica once") {
     val batches = randomBatches(24, 3, 60, seed = 127L)
     val sc = spark.sparkContext

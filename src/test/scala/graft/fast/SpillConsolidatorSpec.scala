@@ -112,6 +112,62 @@ class SpillConsolidatorSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("thousands of spill runs merge under a bounded fan-in == reference") {
+    val rnd = new scala.util.Random(37)
+    val n = 3
+    val cap = 16
+    // each spill holds at most `cap` bindings, so ~40K distinct bindings
+    // leave thousands of runs; duplicates and cancellations cross runs
+    val recs = (0 until 60000).map { _ =>
+      Array.fill(n)(rnd.nextInt(40).toLong) :+ (rnd.nextInt(5) - 2).toLong
+    }
+    val c = new SpillConsolidator(n, cap)
+    recs.foreach(r => c.add(r, 0))
+    assert(c.spillCount > 30 * SpillConsolidator.maxFanIn, s"only ${c.spillCount} runs")
+    val got = drain(c, n)
+    assert(got.size == got.map(_._1).distinct.size, "a binding came out twice")
+    assert(got.toMap == refConsolidate(recs, n))
+    assert(c.peakOpenRuns >= 2 && c.peakOpenRuns <= SpillConsolidator.maxFanIn,
+      s"${c.peakOpenRuns} runs open at once")
+    c.close()
+  }
+
+  test("BlockBuf drains whole records, full chunks handed over without a copy") {
+    for (rec <- Seq(1, 3, 4, 5, 7, 8)) {
+      val bb = new DeltaEngine.BlockBuf(2)
+      val drained = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Long])]
+      val reserved = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[Array[Long], java.lang.Boolean]())
+      var next = 0L
+      for (i <- 0 until 200000 / rec) {
+        val pid = i % 3 % 2
+        val b = bb.reserve(pid, rec)
+        reserved.add(b)
+        val o = bb.off(pid)
+        var j = 0
+        while (j < rec) { b(o + j) = next; next += 1; j += 1 }
+        bb.advance(pid, rec)
+        drained ++= bb.drain()
+      }
+      drained ++= bb.result()
+      for ((pid, chunk) <- drained) {
+        assert(chunk.length % rec == 0 && chunk.length <= 32768, s"rec $rec chunk of ${chunk.length}")
+        // a record's longs are consecutive: no record was split across chunks
+        chunk.grouped(rec).foreach(r => assert(r.toSeq == (r(0) until r(0) + rec).toSeq))
+      }
+      // every record once, and each partition's records in write order
+      val all = drained.flatMap(_._2).sorted
+      assert(all.toSeq == (0L until next).toSeq, s"rec $rec")
+      for (pid <- 0 to 1) {
+        val firsts = drained.filter(_._1 == pid).flatMap(_._2.grouped(rec).map(_.head))
+        assert(firsts == firsts.sorted, s"rec $rec pid $pid order")
+      }
+      val full = drained.map(_._2).filter(_.length == 32768)
+      if (32768 % rec == 0) assert(full.size >= 2, s"rec $rec: no full chunk")
+      assert(full.forall(reserved.contains), s"rec $rec: a full chunk was copied")
+    }
+  }
+
   test("offset quicksort == reference lexicographic sort (large random + adversarial)") {
     val rnd = new scala.util.Random(19)
     for ((n, size) <- Seq((3, 100000), (1, 50000), (5, 20000))) {
